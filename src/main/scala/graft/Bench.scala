@@ -118,52 +118,61 @@ object Bench {
 
     /** Timed attempts for one query: warm-up + fixtures untimed, then
       * min over 2–4 attempts (retry while >25% spread). Returns
-      * (min, spread, max loadavg seen across attempts). */
-    def measure(q: graft.queries.Q, settleMs: Long): (Double, Double, Double) = {
+      * (min, spread, max loadavg seen across attempts), or None when
+      * the warm-up or any attempt throws — a broken query is reported
+      * failed, never timed as if it had run. */
+    def measure(q: graft.queries.Q, settleMs: Long)
+        : Option[(Double, Double, Double)] =
       try {
         q.prepare.foreach(_(spark, sfDir))
         force(q.query(spark, sfDir))
-      } catch { case _: Throwable => }
-      graft.operators.KernelCaches.releaseAll()
-      var loadMax = -1.0
-      def attempt(extraSettleMs: Long): Double = {
-        // settle before EACH attempt: a full GC makes the async
-        // ContextCleaner's backlog (dead checkpoint blocks, broadcasts
-        // from ~200 prior queries) collectable, and the short sleep
-        // lets it drain off-thread — otherwise cleanup RPCs land inside
-        // the measurement and both attempts (so the min too) read high
-        // deep into the suite.
-        System.gc()
-        Thread.sleep(settleMs + extraSettleMs)
-        loadMax = math.max(loadMax, loadavg())
-        val t0 = System.nanoTime()
-        try force(q.query(spark, sfDir))
-        catch { case _: Throwable => }
-        val t = (System.nanoTime() - t0) / 1e9
         graft.operators.KernelCaches.releaseAll()
-        t
+        var loadMax = -1.0
+        def attempt(extraSettleMs: Long): Double = {
+          // settle before EACH attempt: a full GC makes the async
+          // ContextCleaner's backlog (dead checkpoint blocks, broadcasts
+          // from ~200 prior queries) collectable, and the short sleep
+          // lets it drain off-thread — otherwise cleanup RPCs land inside
+          // the measurement and both attempts (so the min too) read high
+          // deep into the suite.
+          System.gc()
+          Thread.sleep(settleMs + extraSettleMs)
+          loadMax = math.max(loadMax, loadavg())
+          val t0 = System.nanoTime()
+          force(q.query(spark, sfDir))
+          val t = (System.nanoTime() - t0) / 1e9
+          graft.operators.KernelCaches.releaseAll()
+          t
+        }
+        var ts = Vector(attempt(0), attempt(0))
+        // >25% disagreement between the two attempts = a co-tenant burst
+        // hit one of them; retry until the spread closes or the attempt
+        // budget is spent — min over everything taken. Retries settle
+        // LONGER each time (250→500→1000 ms extra): a sustained burst of
+        // a couple seconds used to defeat all back-to-back retries
+        // (r8: 56 queries still noisy after retry), whereas escalating
+        // sleeps let the burst pass between attempts. The retry CAP
+        // shrinks as the sweep budget drains (r10: finish > retry).
+        val maxAttempts =
+          if (elapsedS > budgetS * 0.70) 2
+          else if (elapsedS > budgetS * 0.40) 4
+          else 6
+        var extra = 250L
+        while (ts.max / ts.min > 1.25 && ts.size < maxAttempts) {
+          ts :+= attempt(extra); extra *= 2
+        }
+        Some((ts.min, ts.max / ts.min, loadMax))
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+        graft.operators.KernelCaches.releaseAll()
+        None
       }
-      var ts = Vector(attempt(0), attempt(0))
-      // >25% disagreement between the two attempts = a co-tenant burst
-      // hit one of them; retry until the spread closes or the attempt
-      // budget is spent — min over everything taken. Retries settle
-      // LONGER each time (250→500→1000 ms extra): a sustained burst of
-      // a couple seconds used to defeat all back-to-back retries
-      // (r8: 56 queries still noisy after retry), whereas escalating
-      // sleeps let the burst pass between attempts. The retry CAP
-      // shrinks as the sweep budget drains (r10: finish > retry).
-      val maxAttempts =
-        if (elapsedS > budgetS * 0.70) 2
-        else if (elapsedS > budgetS * 0.40) 4
-        else 6
-      var extra = 250L
-      while (ts.max / ts.min > 1.25 && ts.size < maxAttempts) {
-        ts :+= attempt(extra); extra *= 2
-      }
-      (ts.min, ts.max / ts.min, loadMax)
-    }
 
-    val sweep = qs.map(q => (q, measure(q, settleMs = 150)))
+    val (sweep, sweepFailed) = qs.map(q => (q, measure(q, settleMs = 150)))
+      .partitionMap {
+        case (q, Some(m)) => Left((q, m))
+        case (q, None) => Right(q.name)
+      }
 
     // ---- quiet confirm pass (r7 verdict #1) -------------------------
     // Re-time the sweep's 10 slowest at suite end: fixtures warm, JIT
@@ -178,19 +187,25 @@ object Bench {
     // measured this round: stream queries read 5x their isolated time
     // inside a loaded sweep), the rest only while budget remains; a
     // skipped query's reported value is its sweep min.
-    val confirm: Map[String, (Double, Double, Double)] =
+    val confirmed: Map[String, Option[(Double, Double, Double)]] =
       qs.filter(q => slowNames.contains(q.name))
         .sortBy(q => -sweep.find(_._1.name == q.name).get._2._1)
         .iterator.zipWithIndex // lazy: re-checks before EACH re-time
         .takeWhile { case (_, i) => i < 4 || elapsedS < budgetS }
         .map { case (q, _) => q.name -> measure(q, settleMs = 300) }
         .toMap
+    val confirm = confirmed.collect { case (n, Some(m)) => n -> m }
+    // a query that throws in the confirm pass is as failed as one that
+    // throws in the sweep: out of the total, the JSON and the history
+    val failed =
+      (sweepFailed ++ confirmed.collect { case (n, None) => n }).sorted
 
-    val results = sweep.map { case (q, (mn, sp, ld)) =>
-      val conf = confirm.get(q.name)
-      val best = conf.fold(mn)(c => math.min(mn, c._1))
-      (q.name, best, mn, sp, ld, conf)
-    }
+    val results = sweep.filterNot(r => failed.contains(r._1.name))
+      .map { case (q, (mn, sp, ld)) =>
+        val conf = confirm.get(q.name)
+        val best = conf.fold(mn)(c => math.min(mn, c._1))
+        (q.name, best, mn, sp, ld, conf)
+      }
 
     // history: best-known seconds per (sfDir, query), min-merged
     val hist0 = loadHistory()
@@ -237,11 +252,12 @@ object Bench {
           ",\"load\":" + num2(ldAll) + h + "}"
       }.mkString("{", ",", "}")
     val noisy = results.count(_._4 > 1.25)
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // sustained-load flag: confirm disagrees with sweep by >30% on ≥3
     // of the slowest 10 — the signature the r7 spread detector missed
     val sustained = results.count { case (_, _, mn, _, _, conf) =>
       conf.exists(c => mn / math.max(c._1, 1e-9) > 1.3) }
-    println(s"""{"metric":"summary","total_s":${num3(total)},"n":${results.size},"noisy_after_retry":$noisy,"sustained_load_queries":$sustained,"load_start":${num2(loadStart)},"load_end":${num2(loadavg())},"nproc":${Runtime.getRuntime.availableProcessors()},"wall_s":${num3(elapsedS)},"budget_s":${num3(budgetS)},"confirmed":${confirm.size},"slowest":$slowest,"sf":"$sfDir"}""")
+    println(s"""{"metric":"summary","total_s":${num3(total)},"n":${results.size},"noisy_after_retry":$noisy,"sustained_load_queries":$sustained,"load_start":${num2(loadStart)},"load_end":${num2(loadavg())},"nproc":${Runtime.getRuntime.availableProcessors()},"wall_s":${num3(elapsedS)},"budget_s":${num3(budgetS)},"confirmed":${confirm.size},"failed":${failed.size},"failed_queries":$failedJson,"slowest":$slowest,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

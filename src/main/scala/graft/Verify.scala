@@ -17,16 +17,21 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.configure(spark)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+    val failed = selected.flatMap { case (name, fn) =>
+      val ok =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          true
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          false
         }
-        graft.operators.KernelCaches.releaseAll()
-      }
+      graft.operators.KernelCaches.releaseAll()
+      if (ok) None else Some(name)
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -42,6 +47,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val names = failed.toSeq.sorted
+    println(s"[verify] ${names.size}/${selected.size} failed" +
+      (if (names.isEmpty) "" else names.mkString(": ", ", ", "")))
     spark.stop()
   }
 }

@@ -131,96 +131,22 @@ object Regression {
     coef.select(col("grp"), col("n"), col("b0"), col("b1"), col("b2"))
   }
 
-  /** Multinomial (softmax) logistic regression, 3 classes × 2
-    * features — MADlib `multinom` (the true softmax MLE, not
-    * one-vs-rest), fitted by FULL-BATCH gradient descent with a fixed
-    * epoch count (the [[svmFit2]] / MLP determinism choice; MADlib's
-    * IGD becomes deterministic full-batch). Class 0 is the reference
-    * (zero parameters — the standard identifiable parameterization);
-    * classes 1..2 carry (b0, b1, b2).
-    *
-    * Transcendental discipline (NOTES): every exp OUTPUT quantizes to
-    * integer micros immediately, so softmax denominators are exact
-    * micros sums and p_k is an identical double in both engines;
-    * every per-row gradient term micros-quantizes before the
-    * split-sum aggregate; β micros-quantizes per epoch. A DuckDB
-    * unroll of the same epochs is bit-equal unrounded.
-    *
-    * One aggregate per epoch (6 gradient sums + n), coefficients a
-    * 1-row broadcast. Returns rows (cls, n, b0, b1, b2) for cls=1,2. */
-  def multinomFit2(
-      df: DataFrame, labelCol: String, classes: Seq[String],
-      x1Col: String, x2Col: String, epochs: Int = 5,
-      eta: Double = 1.0): DataFrame = {
-    require(classes.length == 3, "multinomFit2 is wired for 3 classes")
-    require(epochs > 0,
-      "multinomFit2 needs epochs >= 1 (the n column joins the " +
-        "coefficient row inside the epoch loop)")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val rows = df.select(
-      when(col(labelCol) === classes(1), 1)
-        .when(col(labelCol) === classes(2), 2).otherwise(0).as("yk"),
-      col(x1Col).cast("double").as("x1"),
-      col(x2Col).cast("double").as("x2"))
-      .transform(KernelCaches.cacheParallel)
-    def q6c(c: Column): Column =
-      floor(c * lit(1000000d) + lit(0.5)) / lit(1000000d)
-    // 1-row coefficient state driver-ferried between epochs (r9): the
-    // broadcast build was already collecting these rows to the driver
-    // every epoch inside BroadcastExchange; doing it explicitly skips
-    // the per-epoch eager-checkpoint job. Binary doubles round-trip
-    // exactly — no formatting touches the state.
-    val ferrySchema = org.apache.spark.sql.types.StructType(
-      Seq("a0", "a1", "a2", "c0", "c1", "c2").map(n =>
-        org.apache.spark.sql.types.StructField(n,
-          org.apache.spark.sql.types.DoubleType)) :+
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.LongType))
-    var st: org.apache.spark.sql.Row =
-      org.apache.spark.sql.Row(0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0L)
-    def coef: org.apache.spark.sql.DataFrame = spark.createDataFrame(
-      java.util.Collections.singletonList(st), ferrySchema).drop("n")
-    for (_ <- 0 until epochs) {
-      val z1 = col("a0") + col("a1") * col("x1") + col("a2") * col("x2")
-      val z2 = col("c0") + col("c1") * col("x1") + col("c2") * col("x2")
-      val e1 = q6c(exp(z1))
-      val e2 = q6c(exp(z2))
-      val den = lit(1.0) + e1 + e2
-      val p1 = e1 / den
-      val p2 = e2 / den
-      def g(k: Int, p: Column, x: Column) =
-        Q.dsum(q6c((when(col("yk") === k, 1.0).otherwise(0.0) - p) * x), 6)
-      val m = rows.crossJoin(broadcast(coef))
-        .groupBy("a0", "a1", "a2", "c0", "c1", "c2")
-        .agg(count(lit(1)).as("n"),
-          g(1, p1, lit(1.0)).as("g10"), g(1, p1, col("x1")).as("g11"),
-          g(1, p1, col("x2")).as("g12"),
-          g(2, p2, lit(1.0)).as("g20"), g(2, p2, col("x1")).as("g21"),
-          g(2, p2, col("x2")).as("g22"))
-      def upd(b: String, gc: String) =
-        q6c(col(b) + lit(eta) * col(gc) / col("n").cast("double")).as(b)
-      st = m.select(upd("a0", "g10"), upd("a1", "g11"), upd("a2", "g12"),
-        upd("c0", "g20"), upd("c1", "g21"), upd("c2", "g22"),
-        col("n")).head()
-    }
-    val r = st
-    Seq((1, r.getLong(6), r.getDouble(0), r.getDouble(1), r.getDouble(2)),
-      (2, r.getLong(6), r.getDouble(3), r.getDouble(4), r.getDouble(5)))
-      .toDF("cls", "n", "b0", "b1", "b2")
-  }
-
   /** Multinomial softmax regression at ANY class count × ANY feature
-    * count — lifts [[multinomFit2]]'s 3×2 ceiling (kernel-contract
-    * table in COVERAGE.md) with the same full-batch GD and the same
-    * transcendental discipline: exp outputs micros-quantize, gradient
-    * terms micros-quantize pre-sum ([[graft.queries.Q.dsum]]), β
-    * micros-quantizes per epoch — a DuckDB unroll of the identical
-    * recursion is bit-equal unrounded. Class `classes(0)` is the
-    * zero-parameter reference. ONE aggregate per epoch of
-    * (K−1)(F+1) gradient sums; coefficients a 1-row broadcast,
-    * lineage cut per epoch. Returns (cls, n, b0 … bF) per non-
-    * reference class. */
+    * count — MADlib `multinom` (the true softmax MLE, not
+    * one-vs-rest), fitted by FULL-BATCH gradient descent with a fixed
+    * epoch count (the [[svmFitK]] / MLP determinism choice; MADlib's
+    * IGD becomes deterministic full-batch).
+    *
+    * Transcendental discipline (NOTES): exp outputs micros-quantize,
+    * so softmax denominators are exact micros sums and p_k is an
+    * identical double in both engines; gradient terms micros-quantize
+    * pre-sum ([[graft.queries.Q.dsum]]); β micros-quantizes per
+    * epoch — a DuckDB unroll of the identical recursion is bit-equal
+    * unrounded. Class `classes(0)` is the zero-parameter reference
+    * (the standard identifiable parameterization). ONE aggregate per
+    * epoch of (K−1)(F+1) gradient sums; coefficients a 1-row
+    * broadcast, lineage cut per epoch. Returns (cls, n, b0 … bF) per
+    * non-reference class. */
   def multinomFitK(
       df: DataFrame, labelCol: String, classes: Seq[String],
       xCols: Seq[String], epochs: Int = 5, eta: Double = 1.0)
@@ -483,86 +409,7 @@ object Regression {
       col("b2"))
   }
 
-  /** Linear SVM (hinge loss + L2) by FULL-BATCH Pegasos subgradient
-    * descent with a fixed epoch count — MADlib `svm_classification`
-    * (Shalev-Shwartz et al. 2007; MADlib's IGD becomes deterministic
-    * full-batch here, the same choice [[logregFit2]] makes for IRLS).
-    * Epoch t: η_t = 1/(λt); w ← w·(1−η_tλ) + (η_t/n)·Σ_{yᵀw·x<1} y·x.
-    * Each epoch is ONE aggregate over the cached projection; the 1-row
-    * coefficient relation broadcast-joins back — never driver state.
-    *
-    * The margin indicator is DISCONTINUOUS, so unlike the smooth IRLS
-    * the iteration state must be bit-identical to the oracle's or one
-    * flipped violator cascades: callers inject `sumExact` (the
-    * split-sum aggregate) for the gradient sums, and the η/decay
-    * constants are precomputed doubles embedded on both sides.
-    * Returns one row: (w0, w1, w2, sv, n) — sv = final-epoch margin
-    * violators. */
-  def svmFit2(
-      df: DataFrame, yCol: String, x1Col: String, x2Col: String,
-      lambda: Double, iterations: Int,
-      sumExact: Column => Column): DataFrame = {
-    val rows = df.select(col(yCol).cast("double").as("y"),
-      col(x1Col).cast("double").as("x1"), col(x2Col).cast("double").as("x2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    KernelCaches.register(rows)
-    val spark = df.sparkSession
-    import spark.implicits._
-    var w = Seq((0.0, 0.0, 0.0, 0L, 0L)).toDF("w0", "w1", "w2", "sv", "n")
-    for (t <- 1 to iterations) {
-      val eta = 1.0 / (lambda * t)
-      val decay = 1.0 - eta * lambda
-      val viol = col("y") * (col("w0") + col("w1") * col("x1") +
-        col("w2") * col("x2")) < 1
-      val a = rows.crossJoin(broadcast(w.select("w0", "w1", "w2")))
-        .groupBy("w0", "w1", "w2")
-        .agg(count(lit(1)).as("n"),
-          sumExact(when(viol, col("y"))).as("g0"),
-          sumExact(when(viol, col("y") * col("x1"))).as("g1"),
-          sumExact(when(viol, col("y") * col("x2"))).as("g2"),
-          sum(when(viol, 1L).otherwise(0L)).as("sv"))
-      def upd(wc: String, g: String) =
-        (col(wc) * lit(decay) + lit(eta) * coalesce(col(g), lit(0.0))
-          / col("n").cast("double")).as(wc)
-      w = a.select(upd("w0", "g0"), upd("w1", "g1"), upd("w2", "g2"),
-        col("sv"), col("n"))
-    }
-    w
-  }
-
-  /** Ridge regression (MADlib elastic_net, α=0 / linregr with L2):
-    * minimize ‖y − Xb‖² + λ(b₁² + b₂²) — the intercept is NOT
-    * penalized (the standard convention; MADlib's likewise). Closed
-    * form: (X'X + λ·diag(0,1,1)) b = X'y — the SAME one-pass moment
-    * aggregate as [[olsFit2]], λ added to the two slope diagonals,
-    * same Cramer 3×3 solve. Zero extra passes, zero extra shuffles:
-    * regularization is free at any scale. */
-  def ridgeFit2(
-      df: DataFrame, groupCol: String, yCol: String,
-      x1Col: String, x2Col: String, lambda: Double): DataFrame = {
-    val (y, x1, x2) = (col(yCol), col(x1Col), col(x2Col))
-    val agg = df.groupBy(col(groupCol).as("grp")).agg(
-      count(lit(1)).cast("double").as("n"),
-      Q.dsum(x1, 6).as("sx1"), Q.dsum(x2, 6).as("sx2"),
-      Q.dsum(y, 6).as("sy"),
-      Q.dsum(x1 * x1, 6).as("sx11"), Q.dsum(x2 * x2, 6).as("sx22"),
-      Q.dsum(x1 * x2, 6).as("sx12"),
-      Q.dsum(x1 * y, 6).as("sx1y"), Q.dsum(x2 * y, 6).as("sx2y"))
-    val c0 = (col("n"), col("sx1"), col("sx2"))
-    val c1 = (col("sx1"), col("sx11") + lit(lambda), col("sx12"))
-    val c2 = (col("sx2"), col("sx12"), col("sx22") + lit(lambda))
-    val r = (col("sy"), col("sx1y"), col("sx2y"))
-    val det = det3(c0, c1, c2)
-    val b0 = det3(r, c1, c2) / det
-    val b1 = det3(c0, r, c2) / det
-    val b2 = det3(c0, c1, r) / det
-    agg.select(col("grp"), col("n").cast("long").as("n"),
-      when(abs(det) > lit(1e-9), b0).as("b0"),
-      when(abs(det) > lit(1e-9), b1).as("b1"),
-      when(abs(det) > lit(1e-9), b2).as("b2"))
-  }
-
-  /** k-fold cross-validation of [[ridgeFit2]] — the MADlib
+  /** k-fold cross-validation of 2-feature ridge regression — the MADlib
     * `cross_validation_general` surface (the reference ships MADlib's
     * CV wrapper for exactly this model-selection loop) — in ONE corpus
     * aggregate, not k train/test passes.
@@ -650,145 +497,23 @@ object Regression {
       when(ok, sse / nTe).as("mse"))
   }
 
-  /** Lasso regularization path (MADlib `elastic_net_train` with
-    * α = 1 and its default standardize=TRUE): ℓ1-penalized regression
-    * solved by cyclic coordinate descent (Friedman, Hastie &
-    * Tibshirani 2010, "Regularization Paths for Generalized Linear
-    * Models via Coordinate Descent" — the glmnet algorithm MADlib's
-    * optimizer follows) on the FULLY STANDARDIZED two-feature system.
-    *
-    * The corpus is touched ONCE: the same 10-moment split-sum
-    * aggregate as [[olsFit2]]. In standardized space the CD updates
-    * need only the correlations (r12, c1, c2) — catalog-scale driver
-    * algebra, like the PCA eigen step — so the whole λ PATH costs one
-    * scan regardless of how many λs are evaluated. MADlib's IGD loops
-    * re-scan per λ per epoch.
-    *
-    * Determinism: moments are split-sum exact; every CD update
-    * micros-quantizes (floor(x·1e6+0.5)/1e6) and the soft-threshold is
-    * branch-exact (z−λ / z+λ / 0), so a DuckDB replay of the identical
-    * recursion is bit-equal. Two-feature CD converges at rate r12² —
-    * `sweeps`=6 is fixed-point for |r12| well under 1.
-    *
-    * Returns one row per λ: (lambda, b1_std, b2_std, b1, b2, b0,
-    * n_nonzero) — standardized and original-space coefficients. */
-  def lassoPath2(
-      df: DataFrame, yCol: String, x1Col: String, x2Col: String,
-      lambdas: Seq[Double], sweeps: Int = 6): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val (y, x1, x2) = (col(yCol).cast("double"),
-      col(x1Col).cast("double"), col(x2Col).cast("double"))
-    val r = df.agg(
-      count(lit(1)).cast("double").as("n"),
-      Q.dsum(x1, 6).as("sx1"), Q.dsum(x2, 6).as("sx2"),
-      Q.dsum(y, 6).as("sy"),
-      Q.dsum(x1 * x1, 6).as("sx11"), Q.dsum(x2 * x2, 6).as("sx22"),
-      Q.dsum(x1 * x2, 6).as("sx12"),
-      Q.dsum(x1 * y, 6).as("sx1y"), Q.dsum(x2 * y, 6).as("sx2y"),
-      Q.dsum(y * y, 6).as("syy")).collect()(0)
-    val n = r.getDouble(0)
-    val (sx1, sx2, sy) = (r.getDouble(1), r.getDouble(2), r.getDouble(3))
-    val (sx11, sx22, sx12) = (r.getDouble(4), r.getDouble(5), r.getDouble(6))
-    val (sx1y, sx2y, syy) = (r.getDouble(7), r.getDouble(8), r.getDouble(9))
-    // EXACT operation order mirrored by the oracle's m CTE
-    val mu1 = sx1 / n; val mu2 = sx2 / n; val muy = sy / n
-    val s1 = math.sqrt(sx11 / n - mu1 * mu1)
-    val s2 = math.sqrt(sx22 / n - mu2 * mu2)
-    val sYd = math.sqrt(syy / n - muy * muy)
-    val r12 = (sx12 / n - mu1 * mu2) / (s1 * s2)
-    val c1 = (sx1y / n - mu1 * muy) / (s1 * sYd)
-    val c2 = (sx2y / n - mu2 * muy) / (s2 * sYd)
-    def q6(x: Double) = math.floor(x * 1000000d + 0.5) / 1000000d
-    def soft(z: Double, l: Double) =
-      if (z > l) z - l else if (z < -l) z + l else 0.0
-    val rows = lambdas.map { lam =>
-      var b1 = 0.0; var b2 = 0.0
-      for (_ <- 0 until sweeps) {
-        b1 = q6(soft(c1 - r12 * b2, lam))
-        b2 = q6(soft(c2 - r12 * b1, lam))
-      }
-      val bo1 = b1 * sYd / s1
-      val bo2 = b2 * sYd / s2
-      val b0 = muy - bo1 * mu1 - bo2 * mu2
-      (lam, b1, b2, bo1, bo2, b0,
-        (if (b1 != 0.0) 1 else 0) + (if (b2 != 0.0) 1 else 0))
-    }
-    rows.toDF("lambda", "b1_std", "b2_std", "b1", "b2", "b0", "n_nonzero")
-  }
-
-  /** Elastic net path (MADlib `elastic_net_train` with 0 < α < 1,
-    * standardized): the glmnet coordinate-descent update
-    * b_j = S(c_j − r·b_other, λα) / (1 + λ(1−α)) — the ℓ1 part is the
-    * [[lassoPath2]] soft-threshold, the ℓ2 part is a constant shrink
-    * on the denominator (Friedman et al. 2010 eq. 5). Identical
-    * dataflow: ONE 10-moment corpus scan, the whole (λ, α) path is
-    * driver algebra. Reference: MADlib elastic_net module
-    * (`src/ports/postgres/modules/elastic_net`), which GPDB ships.
-    *
-    * Determinism contract matches lassoPath2: micros-quantize after
-    * every CD update, branch-exact soft threshold; a DuckDB replay of
-    * the same recursion is bit-equal. */
-  def enetPath2(
-      df: DataFrame, yCol: String, x1Col: String, x2Col: String,
-      lambdas: Seq[Double], alpha: Double, sweeps: Int = 6): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val (y, x1, x2) = (col(yCol).cast("double"),
-      col(x1Col).cast("double"), col(x2Col).cast("double"))
-    val r = df.agg(
-      count(lit(1)).cast("double").as("n"),
-      Q.dsum(x1, 6).as("sx1"), Q.dsum(x2, 6).as("sx2"),
-      Q.dsum(y, 6).as("sy"),
-      Q.dsum(x1 * x1, 6).as("sx11"), Q.dsum(x2 * x2, 6).as("sx22"),
-      Q.dsum(x1 * x2, 6).as("sx12"),
-      Q.dsum(x1 * y, 6).as("sx1y"), Q.dsum(x2 * y, 6).as("sx2y"),
-      Q.dsum(y * y, 6).as("syy")).collect()(0)
-    val n = r.getDouble(0)
-    val (sx1, sx2, sy) = (r.getDouble(1), r.getDouble(2), r.getDouble(3))
-    val (sx11, sx22, sx12) = (r.getDouble(4), r.getDouble(5), r.getDouble(6))
-    val (sx1y, sx2y, syy) = (r.getDouble(7), r.getDouble(8), r.getDouble(9))
-    // EXACT operation order mirrored by the oracle's m CTE
-    val mu1 = sx1 / n; val mu2 = sx2 / n; val muy = sy / n
-    val s1 = math.sqrt(sx11 / n - mu1 * mu1)
-    val s2 = math.sqrt(sx22 / n - mu2 * mu2)
-    val sYd = math.sqrt(syy / n - muy * muy)
-    val r12 = (sx12 / n - mu1 * mu2) / (s1 * s2)
-    val c1 = (sx1y / n - mu1 * muy) / (s1 * sYd)
-    val c2 = (sx2y / n - mu2 * muy) / (s2 * sYd)
-    def q6(x: Double) = math.floor(x * 1000000d + 0.5) / 1000000d
-    def soft(z: Double, l: Double) =
-      if (z > l) z - l else if (z < -l) z + l else 0.0
-    val rows = lambdas.map { lam =>
-      val l1 = lam * alpha
-      val l2 = lam * (1.0 - alpha)
-      var b1 = 0.0; var b2 = 0.0
-      for (_ <- 0 until sweeps) {
-        b1 = q6(soft(c1 - r12 * b2, l1) / (1.0 + l2))
-        b2 = q6(soft(c2 - r12 * b1, l1) / (1.0 + l2))
-      }
-      val bo1 = b1 * sYd / s1
-      val bo2 = b2 * sYd / s2
-      val b0 = muy - bo1 * mu1 - bo2 * mu2
-      (lam, alpha, b1, b2, bo1, bo2, b0,
-        (if (b1 != 0.0) 1 else 0) + (if (b2 != 0.0) 1 else 0))
-    }
-    rows.toDF("lambda", "alpha", "b1_std", "b2_std", "b1", "b2", "b0",
-      "n_nonzero")
-  }
-
-  /** Elastic-net / lasso path at ANY feature count — lifts
-    * [[enetPath2]]'s 2-feature ceiling (MADlib `elastic_net_train`
-    * takes an arbitrary feature array). Same glmnet cyclic
-    * coordinate descent on STANDARDIZED features (Friedman et
-    * al. 2010 eq. 5): b_j ← S(c_j − Σ_{l≠j} r_jl·b_l, λα)/(1+λ(1−α)),
-    * micros-quantized per update; α = 1 degenerates to the lasso.
+  /** Elastic-net / lasso path at ANY feature count — MADlib
+    * `elastic_net_train` with its default standardize=TRUE, which
+    * GPDB ships (`src/ports/postgres/modules/elastic_net`). glmnet
+    * cyclic coordinate descent on STANDARDIZED features (Friedman,
+    * Hastie & Tibshirani 2010, "Regularization Paths for Generalized
+    * Linear Models via Coordinate Descent", eq. 5):
+    * b_j ← S(c_j − Σ_{l≠j} r_jl·b_l, λα)/(1+λ(1−α)) — the ℓ1 part a
+    * branch-exact soft threshold, the ℓ2 part a constant shrink on
+    * the denominator — micros-quantized per update; α = 1 is the
+    * lasso.
     *
     * Scale: ONE corpus scan collects the k(k+1)/2 + k + 1 Gram /
     * cross moments (split-sum exact, map-combinable); the whole
     * (λ × sweeps × k) descent is then driver algebra over that
     * catalog-scale moment row — zero further scans at any data size,
-    * the lassoPath2 contract. The update order (ascending l, skipping
+    * where MADlib's IGD re-scans per λ per epoch. The update order
+    * (ascending l, skipping
     * j; ascending j per sweep) and every fp op mirror
     * [[enetKOracleSql]]'s generated text exactly, so the path is
     * bit-identical cross-engine. Returns one row per λ:
@@ -1196,7 +921,7 @@ object Regression {
     * sums under the [[graft.queries.Q.dsum]] discipline, then the
     * shared [[gjBatches]] Gauss-Jordan solves the Newton step as
     * scalar algebra on the per-group moment row. Determinism: exp
-    * outputs micros-quantize (the multinomFit2 discipline) so μ, w
+    * outputs micros-quantize (the multinomFitK discipline) so μ, w
     * and every residual are identical doubles cross-engine;
     * coefficients micros-quantize per round. Groups with a singular
     * weighted normal matrix keep their previous coefficients.
@@ -1508,14 +1233,14 @@ object Regression {
 
   /** Per-group ridge regression at ANY feature count — MADlib
     * `elastic_net_train(α=0)` / `ridge` with an arbitrary feature
-    * array, lifting [[ridgeFit2]]'s 2-feature Cramer ceiling. Same
-    * ONE-pass moment aggregate as [[olsFitK]]; regularization is λ
-    * added to the SLOPE diagonal of the normal matrix (intercept
-    * unpenalized, the q_ml_ridge contract — raw-scale penalty,
-    * documented per-kernel in COVERAGE.md) before the shared
-    * [[gjBatches]] solve. Zero extra passes at any scale; O(k²)
-    * shuffled doubles per group. Returns (grp, n, b0 … bk) rounded
-    * to 4; singular groups yield NULLs. */
+    * array: minimize ‖y − Xb‖² + λ‖b₁…b_k‖². Same ONE-pass moment
+    * aggregate as [[olsFitK]]; regularization is λ added to the SLOPE
+    * diagonal of the normal matrix (intercept unpenalized, the
+    * standard convention and MADlib's — raw-scale penalty, documented
+    * per-kernel in COVERAGE.md) before the shared [[gjBatches]] solve.
+    * Zero extra passes at any scale; O(k²) shuffled doubles per group.
+    * Returns (grp, n, b0 … bk) rounded to 4; singular groups yield
+    * NULLs. */
   def ridgeFitK(
       df: DataFrame, groupCol: String, yCol: String,
       xCols: Seq[String], lambda: Double): DataFrame = {
@@ -1579,14 +1304,23 @@ object Regression {
        |FROM t${batches.length} ORDER BY grp""".stripMargin
   }
 
-  /** Linear SVM at ANY feature count — lifts [[svmFit2]]'s 2-feature
-    * ceiling (MADlib `svm_classification` takes an arbitrary feature
-    * array). Full-batch Pegasos: per round ONE aggregate of the
-    * hinge-violator gradient sums Σ_{y·w·x<1} y·x_j under the caller's
-    * `sumExact` discipline, weight decay (1−ηλ), step η/n. The weight
-    * state is a 1-row broadcast; lineage is a fixed `iterations`-deep
-    * chain over a persisted projection. y must be ±1. Returns one row
-    * (w0 … wk, sv, n). */
+  /** Linear SVM (hinge loss + L2) at ANY feature count — MADlib
+    * `svm_classification`, by FULL-BATCH Pegasos subgradient descent
+    * with a fixed epoch count (Shalev-Shwartz et al. 2007; MADlib's
+    * IGD becomes deterministic full-batch, the same choice
+    * [[logregFitK]] makes for IRLS). Epoch t: η_t = 1/(λt);
+    * w ← w·(1−η_tλ) + (η_t/n)·Σ_{y·w·x<1} y·x — ONE aggregate of the
+    * hinge-violator gradient sums per round. The weight state is a
+    * 1-row broadcast; lineage is a fixed `iterations`-deep chain over
+    * a persisted projection.
+    *
+    * The margin indicator is DISCONTINUOUS, so unlike the smooth IRLS
+    * the iteration state must be bit-identical to the oracle's or one
+    * flipped violator cascades: callers inject `sumExact` (the
+    * split-sum aggregate) for the gradient sums, and the η/decay
+    * constants are precomputed doubles embedded on both sides.
+    * y must be ±1. Returns one row (w0 … wk, sv, n) — sv = final-epoch
+    * margin violators. */
   def svmFitK(
       df: DataFrame, yCol: String, xCols: Seq[String],
       lambda: Double, iterations: Int,

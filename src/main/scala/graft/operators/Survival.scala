@@ -6,97 +6,45 @@ import org.apache.spark.sql.functions._
 
 /** Survival regression — the MADlib `coxph_train` module (Cox 1972
   * proportional hazards; reference ships MADlib's coxph for exactly
-  * this time-to-event workload). Single covariate, Breslow tie
-  * handling, stratified risk sets, FIXED Newton iterations from β = 0
-  * — the deterministic batch restatement (MADlib's own default is
-  * Newton on the full partial likelihood, so unlike IGD modules this
-  * needs no algorithm substitution, only a fixed iteration count).
-  *
-  * Per Newton round, everything is ONE aggregate + ONE window + ONE
-  * reduce:
-  *   1. per-(stratum, time) sums: event count d, Σδx, and the three
-  *      risk moments Σe^{βx}, Σx·e^{βx}, Σx²·e^{βx} — each exp value
-  *      quantizes to integer MICROS before summing, so the per-time
-  *      relation is exact longs (order-free).
-  *   2. risk-set sums S0/S1/S2 = per-stratum SUFFIX sums — a window
-  *      PARTITIONED BY stratum, ORDER BY t DESC with a RANGE frame
-  *      (peers at tied times included, the t' ≥ t definition). Long
-  *      sums stay exact. For an unstratified fit at corpus scale the
-  *      same suffix sums come from the `Ranks.cumBelow`
-  *      range-partitioned prefix machinery instead of one window.
-  *   3. score U = Σ_events (Σδx − d·S1/S0) and information
-  *      I = Σ_events d·(S2/S0 − (S1/S0)²), each event term
-  *      micros-quantized pre-sum; β ← q6(β + U/I) with the 1-value β
-  *      collected per round (catalog-scale, the k-means centroid
-  *      contract).
-  *
-  * Cross-engine determinism: β is micros-quantized so both engines
-  * call exp() on identical arguments; exp itself is the one
-  * last-ulp-risk transcendental (the q_agg_logreg precedent) but its
-  * output is immediately micros-quantized, so a divergence requires
-  * exp(βx) to land within an ulp of a 0.5-micros boundary — ~1e-10
-  * per distinct (β, x) input.
-  *
-  * Returns one row: (beta, n_events, n_total). */
+  * this time-to-event workload). */
 object Survival {
 
-  def coxFit1(
-      df: DataFrame, stratumCol: String, timeCol: String,
-      eventCol: Column, xCol: Column, iterations: Int = 3): DataFrame = {
-    val rows = df.select(col(stratumCol).as("g"),
-      col(timeCol).cast("double").as("t"),
-      eventCol.cast("long").as("ev"), xCol.cast("double").as("x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    KernelCaches.register(rows)
-    def mic(c: Column) = floor(c * lit(1000000d) + lit(0.5)).cast("long")
-    var beta = 0.0
-    for (_ <- 0 until iterations) {
-      val e = mic(exp(lit(beta) * col("x")))
-      val perT = rows.groupBy("g", "t").agg(
-        sum(col("ev")).as("d"),
-        sum(col("ev") * col("x").cast("long")).as("sxd"),
-        sum(e).as("se"),
-        sum(col("x").cast("long") * e).as("sxe"),
-        sum(col("x").cast("long") * col("x").cast("long") * e).as("sxxe"))
-      val w = Window.partitionBy("g").orderBy(col("t").desc)
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-      val s = perT.select(col("d"), col("sxd"),
-        sum(col("se")).over(w).as("s0"),
-        sum(col("sxe")).over(w).as("s1"),
-        sum(col("sxxe")).over(w).as("s2"))
-      val r1 = col("s1").cast("double") / col("s0").cast("double")
-      val ut = col("sxd").cast("double") - col("d").cast("double") * r1
-      val it = col("d").cast("double") *
-        (col("s2").cast("double") / col("s0").cast("double") - r1 * r1)
-      val gr = s.agg(
-        (sum(when(col("d") > 0, mic(ut)).otherwise(0L)).cast("double")
-          / lit(1000000d)).as("u"),
-        (sum(when(col("d") > 0, mic(it)).otherwise(0L)).cast("double")
-          / lit(1000000d)).as("i")).collect()(0)
-      beta = math.floor(
-        (beta + gr.getDouble(0) / gr.getDouble(1)) * 1000000d + 0.5) /
-        1000000d
-    }
-    rows.agg(sum(col("ev")).as("ne"), count(lit(1)).as("nt"))
-      .select(lit(beta).as("beta"), col("ne").as("n_events"),
-        col("nt").as("n_total"))
-  }
-
-  /** Cox PH at ANY covariate count — lifts [[coxFit1]]'s single-β
-    * ceiling (MADlib `coxph_train` takes a covariate array). Same
-    * Breslow / stratified-suffix-sum / fixed-Newton shape; the score
-    * vector U and information matrix I aggregate per round as
-    * micros-quantized event sums named to feed the shared
-    * [[Regression.gjBatches]] Gauss-Jordan (`t_i` = U_i, `m_i_j` =
-    * I_ij), and β — a 1-ROW RELATION crossJoined back as a broadcast,
-    * no driver collect (upgrading coxFit1's driver-held β) — steps by
-    * q6(β_i + Δ_i).
+  /** Cox PH over a covariate array (MADlib `coxph_train`), Breslow tie
+    * handling, stratified risk sets, FIXED Newton iterations from
+    * β = 0 — the deterministic batch restatement (MADlib's own default
+    * is Newton on the full partial likelihood, so unlike IGD modules
+    * this needs no algorithm substitution, only a fixed iteration
+    * count).
     *
-    * Covariates keep coxFit1's integer-valued contract (per-time
-    * moments sum as exact longs). Per round: ONE grouped aggregate
-    * over the persisted projection + ONE per-stratum suffix window
-    * over the per-time relation (time-cardinality scale) + O(p³)
-    * scalar solve algebra on a 1-row relation. Lineage cut per round.
+    * Per Newton round, everything is ONE aggregate + ONE window + ONE
+    * reduce + O(p³) scalar solve algebra:
+    *   1. per-(stratum, time) sums over the persisted projection:
+    *      event count d, Σδx_i, and the risk moments Σe^{βx},
+    *      Σx_i·e^{βx}, Σx_i·x_j·e^{βx} — each exp value quantizes to
+    *      integer MICROS before summing, so the per-time relation is
+    *      exact longs (order-free). Covariates must be integer-valued.
+    *   2. risk-set sums S0/S1/S2 = per-stratum SUFFIX sums — a window
+    *      PARTITIONED BY stratum, ORDER BY t DESC with a RANGE frame
+    *      (peers at tied times included, the t' ≥ t definition), at
+    *      time-cardinality scale. Long sums stay exact. For an
+    *      unstratified fit at corpus scale the same suffix sums come
+    *      from the `Ranks.cumBelow` range-partitioned prefix machinery
+    *      instead of one window.
+    *   3. score U_i = Σ_events (Σδx_i − d·S1_i/S0) and information
+    *      I_ij = Σ_events d·(S2_ij/S0 − S1_i·S1_j/S0²), each event term
+    *      micros-quantized pre-sum, named to feed the shared
+    *      [[Regression.gjBatches]] Gauss-Jordan (`t_i` = U_i,
+    *      `m_i_j` = I_ij); β_i ← q6(β_i + Δ_i). The β state is a 1-row
+    *      relation driver-ferried between rounds and crossJoined back
+    *      as a broadcast.
+    *
+    * Cross-engine determinism: β is micros-quantized so both engines
+    * call exp() on identical arguments; exp itself is the one
+    * last-ulp-risk transcendental (the q_agg_logreg precedent) but its
+    * output is immediately micros-quantized, so a divergence requires
+    * exp(βx) to land within an ulp of a 0.5-micros boundary — ~1e-10
+    * per distinct (β, x) input.
+    *
     * Returns one row (beta0…beta{p-1}, n_events, n_total). */
   def coxFitK(
       df: DataFrame, stratumCol: String, timeCol: String,

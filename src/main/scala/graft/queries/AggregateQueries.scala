@@ -407,10 +407,10 @@ object AggregateQueries {
           .orderBy("grp")
     },
 
-    // Arbitrary-feature ridge (MADlib elastic_net α=0 at any feature
-    // count — lifts ridgeFit2's 2-feature Cramer ceiling): the
-    // q_ml_ols_k moment pass with λ=250 on the slope diagonal before
-    // the shared Gauss-Jordan solve; intercept unpenalized.
+    // Ridge at 4 features (MADlib elastic_net α=0 over a feature
+    // array; q_ml_ridge runs the same kernel at 2): the q_ml_ols_k moment
+    // pass with λ=250 on the slope diagonal before the shared
+    // Gauss-Jordan solve; intercept unpenalized.
     Q("q_ml_ridge_k", Some(
       graft.operators.Regression.ridgeKOracleSql(
         "lineitem", "l_returnflag",
@@ -429,7 +429,9 @@ object AggregateQueries {
     // Ridge regression (MADlib elastic_net α=0): the SAME one-pass
     // moment aggregate as q_agg_ols with λ on the slope diagonals of
     // the normal equations (intercept unpenalized) — regularization
-    // costs zero extra passes at any scale.
+    // costs zero extra passes at any scale. The oracle solves by
+    // Cramer's rule, the engine by ridgeFitK's Gauss-Jordan: the two
+    // may differ in the last ulps and agree after the 4-dp rounding.
     Q("q_ml_ridge", Some {
       import graft.operators.Regression.Sql._
       val lam = "250.0"
@@ -458,12 +460,9 @@ object AggregateQueries {
          |    AS b2
          |FROM t ORDER BY grp""".stripMargin
     }) { (s, dir) =>
-      import s.implicits._
-      graft.operators.Regression.ridgeFit2(Tables.T(s, dir).lineitem,
-        "l_returnflag", "l_extendedprice", "l_quantity", "l_discount",
+      graft.operators.Regression.ridgeFitK(Tables.T(s, dir).lineitem,
+        "l_returnflag", "l_extendedprice", Seq("l_quantity", "l_discount"),
         lambda = 250.0)
-        .select($"grp", $"n", round($"b0", 4).as("b0"),
-          round($"b1", 4).as("b1"), round($"b2", 4).as("b2"))
         .orderBy("grp")
     },
 
@@ -603,12 +602,12 @@ object AggregateQueries {
          |FROM s$sweeps ORDER BY lambda""".stripMargin
     }) { (s, dir) =>
       import s.implicits._
-      graft.operators.Regression.lassoPath2(Tables.T(s, dir).lineitem,
-        "l_extendedprice", "l_quantity", "l_discount",
-        lambdas = Seq(0.01, 0.05, 0.2), sweeps = 6)
-        .select($"lambda", $"b1_std", $"b2_std",
-          round($"b1", 6).as("b1o"), round($"b2", 6).as("b2o"),
-          round($"b0", 6).as("b0"), $"n_nonzero")
+      graft.operators.Regression.enetPathK(Tables.T(s, dir).lineitem,
+        "l_extendedprice", Seq("l_quantity", "l_discount"),
+        lambdas = Seq(0.01, 0.05, 0.2), alpha = 1.0, sweeps = 6)
+        .select($"lambda", $"bstd_0".as("b1_std"), $"bstd_1".as("b2_std"),
+          round($"b_0", 6).as("b1o"), round($"b_1", 6).as("b2o"),
+          round($"b0", 6).as("b0"), $"n_nonzero".cast("int").as("n_nonzero"))
         .orderBy("lambda")
     },
 
@@ -670,17 +669,18 @@ object AggregateQueries {
          |FROM s$sweeps ORDER BY lambda""".stripMargin
     }) { (s, dir) =>
       import s.implicits._
-      graft.operators.Regression.enetPath2(Tables.T(s, dir).lineitem,
-        "l_extendedprice", "l_quantity", "l_discount",
+      graft.operators.Regression.enetPathK(Tables.T(s, dir).lineitem,
+        "l_extendedprice", Seq("l_quantity", "l_discount"),
         lambdas = Seq(0.01, 0.05, 0.2), alpha = 0.5, sweeps = 6)
-        .select($"lambda", $"alpha", $"b1_std", $"b2_std",
-          round($"b1", 6).as("b1o"), round($"b2", 6).as("b2o"),
-          round($"b0", 6).as("b0"), $"n_nonzero")
+        .select($"lambda", $"alpha",
+          $"bstd_0".as("b1_std"), $"bstd_1".as("b2_std"),
+          round($"b_0", 6).as("b1o"), round($"b_1", 6).as("b2o"),
+          round($"b0", 6).as("b0"), $"n_nonzero".cast("int").as("n_nonzero"))
         .orderBy("lambda")
     },
 
-    // Elastic net at ANY feature count (lifts enetPath2's 2-feature
-    // ceiling): 4 standardized features, cyclic glmnet CD, the whole
+    // Elastic net at 4 features (q_ml_elasticnet and q_ml_lasso run the
+    // same kernel at 2): standardized features, cyclic glmnet CD, the whole
     // (λ × sweeps × k) path driver algebra over ONE Gram-moment scan.
     // The oracle replays the identical recursion (generated nested
     // selects, one branch per λ).
@@ -768,14 +768,15 @@ object AggregateQueries {
         .stripMargin
     }) { (s, dir) =>
       import s.implicits._
-      graft.operators.Survival.coxFit1(Tables.T(s, dir).events,
+      graft.operators.Survival.coxFitK(Tables.T(s, dir).events,
         "event_type", "value",
         eventCol = when($"event_id" % 4 === 0, 0).otherwise(1),
-        xCol = ($"user_id" % 5).cast("double"), iterations = 3)
+        xCols = Seq(($"user_id" % 5).cast("double")), iterations = 3)
+        .select($"beta0".as("beta"), $"n_events", $"n_total")
     },
 
-    // Cox PH at ANY covariate count (lifts coxFit1's single-β
-    // ceiling): 3 integer-valued covariates, stratified Breslow,
+    // Cox PH at 3 covariates (q_ml_cox runs the same kernel at 1):
+    // integer-valued covariates, stratified Breslow,
     // Newton via the shared gjBatches solve, β a 1-row broadcast
     // relation — no driver collect.
     Q("q_ml_cox_k", Some(
@@ -1051,12 +1052,12 @@ object AggregateQueries {
          |ORDER BY cls""".stripMargin
     }) { (s, dir) =>
       import s.implicits._
-      graft.operators.Regression.multinomFit2(
+      graft.operators.Regression.multinomFitK(
         Tables.T(s, dir).lineitem
           .select($"l_returnflag".as("lbl"),
             ($"l_quantity".cast("double") / lit(50.0)).as("x1"),
             ($"l_discount".cast("double") * lit(10.0)).as("x2")),
-        "lbl", Seq("A", "R", "N"), "x1", "x2", epochs = 5, eta = 1.0)
+        "lbl", Seq("A", "R", "N"), Seq("x1", "x2"), epochs = 5, eta = 1.0)
         .orderBy("cls")
     },
 
@@ -1090,7 +1091,7 @@ object AggregateQueries {
 
     // Linear SVM (MADlib svm_classification parity): full-batch Pegasos
     // subgradient, 4 fixed epochs, one aggregate per epoch (see
-    // Regression.svmFit2). The margin indicator is discontinuous, so
+    // Regression.svmFitK). The margin indicator is discontinuous, so
     // gradient sums use split-sum discipline and the η/decay constants
     // are precomputed doubles embedded identically on both sides —
     // iteration state stays bit-identical, no output rounding needed.
@@ -1130,13 +1131,13 @@ object AggregateQueries {
         when($"l_returnflag" === "R", 1.0).otherwise(-1.0).as("y"),
         ($"l_quantity".cast("double") / lit(50.0)).as("x1"),
         ($"l_discount".cast("double") * lit(10.0)).as("x2"))
-      graft.operators.Regression.svmFit2(rows, "y", "x1", "x2",
+      graft.operators.Regression.svmFitK(rows, "y", Seq("x1", "x2"),
         lambda = 0.01, iterations = 4, sumExact = Q.dsum(_, 6))
         .select($"w0", $"w1", $"w2", $"sv", $"n")
     },
 
-    // Arbitrary-feature linear SVM (MADlib svm_classification at any
-    // feature count — lifts svmFit2's 2-feature ceiling): 4 scaled
+    // Linear SVM at 4 features (MADlib svm_classification over a
+    // feature array; q_ml_svm runs the same kernel at 2): 4 scaled
     // features + intercept, full-batch Pegasos, one gradient
     // aggregate per round against the 1-row broadcast weight state.
     Q("q_ml_svm_k", Some(

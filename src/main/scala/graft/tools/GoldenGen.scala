@@ -17,10 +17,12 @@ object GoldenGen {
   val sfDir = "/root/testdata/sf0.001"
 
   /** Canonical content hash: JSON rows, sorted, md5'd. */
-  def hashOf(df: DataFrame): String = {
-    val rows = df.toJSON.collect().sorted
+  def hashOf(df: DataFrame): String = hashRows(df.toJSON.collect())
+
+  /** [[hashOf]] over already-collected JSON rows, in any order. */
+  def hashRows(json: Array[String]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    rows.foreach(r => md.update(r.getBytes("UTF-8")))
+    json.sorted.foreach(r => md.update(r.getBytes("UTF-8")))
     md.digest().map("%02x".format(_)).mkString
   }
 

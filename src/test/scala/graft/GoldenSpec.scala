@@ -1,13 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.tools.GoldenGen
 
 /** Golden-hash regression gate: every query's sf0.001 result must hash
   * exactly as recorded (regenerate intentionally via
-  * `runMain graft.tools.GoldenGen`). */
+  * `runMain graft.tools.GoldenGen`). The run is shared with
+  * QueriesSmokeSpec through [[QueryRuns]]. */
 class GoldenSpec extends AnyFunSuite {
-  import TestSpark._
 
   private val golden: Map[String, String] = {
     val src = scala.io.Source.fromResource("golden_sf0001.txt")
@@ -26,10 +25,7 @@ class GoldenSpec extends AnyFunSuite {
     test(s"golden: ${q.name}") {
       golden.get(q.name).foreach { expected =>
         assert(!expected.startsWith("ERROR"), s"golden recorded a failure")
-        val actual =
-          try GoldenGen.hashOf(q.fn(spark, GoldenGen.sfDir))
-          finally graft.operators.KernelCaches.releaseAll()
-        assert(actual == expected,
+        assert(QueryRuns.of(q).hash == expected,
           s"${q.name} result drifted from golden hash — if intentional, " +
             "regenerate with runMain graft.tools.GoldenGen")
       }

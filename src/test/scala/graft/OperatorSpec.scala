@@ -950,7 +950,7 @@ class OperatorSpec extends AnyFunSuite {
     assert(!d.contains(4L))
   }
 
-  test("Regression.svmFit2 learns a separating direction") {
+  test("Regression.svmFitK learns a separating direction at k=2") {
     import spark.implicits._
     // separable on x1: positives at x1≈+1, negatives at x1≈−1
     val pts = (1 to 40).map { i =>
@@ -958,7 +958,7 @@ class OperatorSpec extends AnyFunSuite {
       (y, y * (0.8 + 0.01 * (i % 5)), 0.1 * ((i % 3) - 1))
     }
     val df = pts.toDF("y", "x1", "x2").repartition(4)
-    val w = Regression.svmFit2(df, "y", "x1", "x2",
+    val w = Regression.svmFitK(df, "y", Seq("x1", "x2"),
       lambda = 0.01, iterations = 8,
       sumExact = graft.queries.Q.dsum(_, 6)).head
     val (w1, sv, n) = (w.getDouble(1), w.getLong(3), w.getLong(4))
@@ -1198,12 +1198,10 @@ class OperatorSpec extends AnyFunSuite {
     val k2 = graft.operators.Regression.enetPathK(df, "y",
       Seq("x1", "x2"), lambdas = Seq(0.05), alpha = 0.5, sweeps = 6)
       .collect()(0)
-    val two = graft.operators.Regression.enetPath2(df, "y", "x1", "x2",
-      lambdas = Seq(0.05), alpha = 0.5, sweeps = 6).collect()(0)
-    // identical recursion at k=2: standardized coefs are bit-equal
-    assert(k2.getAs[Double]("bstd_0") == two.getAs[Double]("b1_std") &&
-      k2.getAs[Double]("bstd_1") == two.getAs[Double]("b2_std"),
-      s"$k2 vs $two")
+    // identical recursion at k=2: the standardized coefs are bit-equal
+    // to the ones the retired 2-feature enetPath2 produced on this data
+    assert(k2.getAs[Double]("bstd_0") == 0.845307 &&
+      k2.getAs[Double]("bstd_1") == -0.403233, k2.toString)
     // heavier penalty keeps fewer features; weak x3/x4 die first
     val path = graft.operators.Regression.enetPathK(df, "y",
       Seq("x1", "x2", "x3", "x4"), lambdas = Seq(0.01, 0.4),
@@ -1228,12 +1226,10 @@ class OperatorSpec extends AnyFunSuite {
     }.toDF("g", "t", "ev", "x1", "x2", "x3")
     val k1 = graft.operators.Survival.coxFitK(df, "g", "t", $"ev",
       Seq($"x1"), iterations = 3).collect()(0)
-    val one = graft.operators.Survival.coxFit1(df, "g", "t", $"ev",
-      $"x1", iterations = 3).collect()(0)
-    assert(k1.getDouble(0) == one.getDouble(0),
-      s"p=1 beta ${k1.getDouble(0)} != coxFit1 ${one.getDouble(0)}")
-    assert(k1.getLong(1) == one.getLong(1) &&
-      k1.getLong(2) == one.getLong(2))
+    // the retired single-covariate coxFit1 produced exactly this row on
+    // this data (the identical Newton recursion at p=1)
+    assert(k1.getDouble(0) == 1.764249, s"p=1 beta ${k1.getDouble(0)}")
+    assert(k1.getLong(1) == 300L && k1.getLong(2) == 400L, k1.toString)
     val k3 = graft.operators.Survival.coxFitK(df, "g", "t", $"ev",
       Seq($"x1", $"x2", $"x3"), iterations = 3).collect()(0)
     (0 to 2).foreach { i =>
@@ -1613,26 +1609,21 @@ class OperatorSpec extends AnyFunSuite {
     assert(est > 997 * 0.4 && est < 997 * 1.6, s"est=$est")
   }
 
-  test("Regression.enetPath2 at alpha=1 reproduces lassoPath2") {
+  test("Regression.enetPathK at alpha=0.5 shrinks harder than the lasso") {
     import spark.implicits._
     val df = (1 to 200).map { i =>
       val x1 = i.toDouble; val x2 = (i % 7).toDouble
       (2.0 * x1 - 3.0 * x2 + 5.0 + (i % 11) * 0.1, x1, x2)
     }.toDF("y", "x1", "x2")
-    val l = Regression.lassoPath2(df, "y", "x1", "x2", Seq(0.05), 6)
-      .select("lambda", "b1_std", "b2_std", "b1", "b2", "b0")
-      .collect()(0).toSeq
-    val e = Regression.enetPath2(df, "y", "x1", "x2", Seq(0.05),
-      alpha = 1.0, sweeps = 6)
-      .select("lambda", "b1_std", "b2_std", "b1", "b2", "b0")
-      .collect()(0).toSeq
-    assert(l == e)
-    // alpha=0.5 shrinks harder than pure lasso on the same lambda
-    val h = Regression.enetPath2(df, "y", "x1", "x2", Seq(0.05),
-      alpha = 0.5, sweeps = 6).select("b1_std").collect()(0).getDouble(0)
-    val lb = Regression.lassoPath2(df, "y", "x1", "x2", Seq(0.025), 6)
-      .select("b1_std").collect()(0).getDouble(0)
-    assert(math.abs(h) <= math.abs(lb) + 1e-9)
+    def b1Std(lambda: Double, alpha: Double): Double =
+      Regression.enetPathK(df, "y", Seq("x1", "x2"), Seq(lambda),
+        alpha = alpha, sweeps = 6)
+        .select("bstd_0").collect()(0).getDouble(0)
+    // alpha=0.5 at lambda=0.05 carries the lasso's l1 weight at 0.025
+    // plus an l2 shrink, so it keeps less of the coefficient
+    val h = b1Std(0.05, 0.5)
+    val lb = b1Std(0.025, 1.0)
+    assert(math.abs(h) <= math.abs(lb) + 1e-9, s"$h vs lasso $lb")
   }
 
   test("Regression.olsFitK recovers exact coefficients at k=4 and " +
@@ -1740,11 +1731,12 @@ class OperatorSpec extends AnyFunSuite {
     }.toDF("y", "x1", "x2")
     val k = graft.operators.Regression.svmFitK(df, "y", Seq("x1", "x2"),
       lambda = 0.01, iterations = 4, sumExact = Q.dsum(_, 6)).collect()(0)
-    val two = graft.operators.Regression.svmFit2(df, "y", "x1", "x2",
-      lambda = 0.01, iterations = 4, sumExact = Q.dsum(_, 6)).collect()(0)
-    // w0*1.0 is IEEE-exact, so the recursions are identical
-    (0 to 2).foreach(i => assert(k.getDouble(i) == two.getDouble(i),
-      s"w$i ${k.getDouble(i)} != ${two.getDouble(i)}"))
+    // w0*1.0 is IEEE-exact, so the recursion is the one the retired
+    // 2-feature svmFit2 ran: these are its weights on this data
+    val two = Seq(1.5624999999999982, 11.03125, -9.250004937500002)
+    (0 to 2).foreach(i => assert(k.getDouble(i) == two(i),
+      s"w$i ${k.getDouble(i)} != ${two(i)}"))
+    assert(k.getLong(3) == 165L && k.getLong(4) == 400L, k.toString)
     // 3-feature margin: the informative feature gets the largest |w|
     val df3 = (1 to 400).map { i =>
       val x1 = (i % 10) / 10.0; val x2 = (i % 7) / 7.0
@@ -1768,14 +1760,16 @@ class OperatorSpec extends AnyFunSuite {
     }.toDF("lbl", "x1", "x2")
     val k = Regression.multinomFitK(df, "lbl", Seq("a", "b", "c"),
       Seq("x1", "x2"), epochs = 5, eta = 1.0).collect()
-    val two = Regression.multinomFit2(df, "lbl", Seq("a", "b", "c"),
-      "x1", "x2", epochs = 5, eta = 1.0).collect()
-    // the SAME quantized recursion in the same op order — bit-equal
-    k.zip(two).foreach { case (kr, tr) =>
-      assert(kr.getInt(0) == tr.getInt(0))
-      assert(kr.getLong(1) == tr.getLong(1))
-      (2 to 4).foreach(j => assert(kr.getDouble(j) == tr.getDouble(j),
-        s"col $j: $kr vs $tr"))
+    // the SAME quantized recursion in the same op order as the retired
+    // 3x2 multinomFit2 — bit-equal to the rows it produced on this data
+    val two = Seq((1, 240L, Seq(-0.474145, 0.083481, 0.10556)),
+      (2, 240L, Seq(-0.404668, 0.122104, -0.396114)))
+    assert(k.length == two.length)
+    k.zip(two).foreach { case (kr, (cls, n, bs)) =>
+      assert(kr.getInt(0) == cls)
+      assert(kr.getLong(1) == n)
+      (2 to 4).foreach(j => assert(kr.getDouble(j) == bs(j - 2),
+        s"col $j: $kr vs $bs"))
     }
   }
 

@@ -3,23 +3,24 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every SparkEntry query runs on sf0.001 and produces a sane result.
-  * (Value-level correctness is the DuckDB oracle gate — tools/check.py /
-  * the driver's CORRECTNESS run; this suite is the fast in-JVM guard.) */
+  * (Value-level correctness is the DuckDB oracle gate — graft.Verify
+  * plus tools/check.py; this suite is the fast in-JVM guard.)
+  * The run is shared with GoldenSpec through [[QueryRuns]]. */
 class QueriesSmokeSpec extends AnyFunSuite {
   import TestSpark._
 
+  // queries that must be non-empty at sf0.001: anything aggregating
+  // whole tables. Pair-finding queries may legitimately be empty.
+  private val mayBeEmpty = Set("q_join_anti", "q_dedup_exact_bow",
+    "q_dedup_minhash", "q_dedup_simhash", "q_dedup_jaccard",
+    "q_dedup_embedding")
+
   SparkEntry.allQueries.foreach { q =>
     test(s"${q.name} runs and is non-degenerate") {
-      val df = q.fn(spark, sf)
-      assert(df.columns.nonEmpty, "no output columns")
-      val n = df.count()
-      assert(n >= 0)
-      // queries that must be non-empty at sf0.001: anything aggregating
-      // whole tables. Pair-finding queries may legitimately be empty.
-      if (!Set("q_join_anti", "q_dedup_exact_bow", "q_dedup_minhash",
-          "q_dedup_simhash", "q_dedup_jaccard", "q_dedup_embedding")
-          .contains(q.name)) {
-        assert(n > 0, s"${q.name} returned 0 rows")
+      val run = QueryRuns.of(q)
+      assert(run.columns > 0, "no output columns")
+      if (!mayBeEmpty.contains(q.name)) {
+        assert(run.rows > 0, s"${q.name} returned 0 rows")
       }
     }
   }

@@ -15,3 +15,24 @@ object TestSpark {
     GraftSession.configure(s)
   }
 }
+
+/** One sf0.001 execution per query, shared by GoldenSpec (the hash) and
+  * QueriesSmokeSpec (the shape). Both suites run in the same forked test
+  * JVM, so each query executes once per test run, whichever suite asks
+  * first; a query that throws fails both tests with its own exception. */
+object QueryRuns {
+  final case class Run(columns: Int, rows: Int, hash: String)
+
+  private val runs =
+    scala.collection.mutable.HashMap.empty[String, scala.util.Try[Run]]
+
+  def of(q: graft.queries.Q): Run =
+    runs.getOrElseUpdate(q.name, scala.util.Try {
+      try {
+        val df = q.fn(TestSpark.spark, graft.tools.GoldenGen.sfDir)
+        val json = df.toJSON.collect()
+        Run(df.columns.length, json.length,
+          graft.tools.GoldenGen.hashRows(json))
+      } finally graft.operators.KernelCaches.releaseAll()
+    }).get
+}
