@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Connected components over a pair relation — the canonicalization
@@ -35,19 +35,23 @@ object Components {
     * redistributed — a node with no out-edges leaks its damped mass,
     * the common simplification.
     *
-    * Scale: each round is one equi-join (ranks ⨝ edges on src, both
-    * sides hash-partitioned on the same key round over round) + one
-    * groupBy(dst) with map-side partial sums; out-degrees are computed
-    * once. No driver state, no collect; the iterate count is fixed so
-    * the plan is finite. Lineage is cut with localCheckpoint each round
-    * (the [[connectedComponents]] / RecursiveCte discipline) so round
-    * k's plan does not re-execute rounds 0..k−1. Returns (id, rank). */
+    * Scale: the state between rounds is the contribution aggregate
+    * itself, (id, cs) for the nodes that receive mass. A node's rank is
+    * the closed form (1−d)/N + d·coalesce(cs, 0), evaluated per edge in
+    * the next round's left join and per node once at the end; round 0's
+    * ranks are the constant 1/N, so it joins nothing. A round is one
+    * broadcast join into the edge list (edges never re-shuffled, the
+    * out-degree fused in once) + one groupBy(dst) with map-side partial
+    * sums, collected once: the rows come back as a LocalRelation that
+    * the next round broadcasts ([[ferried]]), three jobs per round. The
+    * state is node-scale and held on the driver, which the broadcast
+    * into the edge join requires anyway. Returns (id, rank). */
   def pageRank(
       edgesDf: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 5, damping: Double = 0.85,
       checkpoint: Boolean = true): DataFrame = {
     // checkpoint=false keeps the full lineage visible — PlanSpec uses it
-    // to assert the per-round join/agg shape that the checkpoints hide
+    // to assert the per-round join/agg shape that the cuts hide
     def cut(df: DataFrame): DataFrame =
       if (checkpoint) df.localCheckpoint(eager = true) else df
     val edgesRaw = cut(edgesDf
@@ -62,28 +66,28 @@ object Components {
     // the single largest cost)
     val edges = cut(edgesRaw
       .join(edgesRaw.groupBy("src").agg(count(lit(1)).as("deg")), "src"))
-    var ranks = nodes.select(col("id"), (lit(1.0) / lit(n)).as("rank"))
+    def rank(cs: Column): Column =
+      lit((1.0 - damping) / n) + lit(damping) * coalesce(cs, lit(0.0))
+    var contribs: Option[DataFrame] = None // None: every rank is 1/N
     for (_ <- 0 until iterations) {
-      // ranks is node-scale (≪ edges); broadcasting it keeps the edge
-      // list un-shuffled — each round's only exchange is the dst-keyed
-      // contribution aggregate (map-side partials). For node sets past
-      // broadcast size, drop the hint and both sides hash-partition on
-      // src once, reused round over round.
-      val contribs = edges
-        .join(broadcast(ranks), edges("src") === ranks("id"))
-        .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
-        .groupBy("id").agg(sum(col("c")).as("cs"))
-      // eager cut every round: measured against lazy/every-2nd-round
-      // checkpointing, which RECOMPUTES the skipped round inside each
-      // broadcast collect and nearly doubled wall time — one eager
-      // node-scale materialization per round is the cheap option
-      ranks = cut(nodes
-        .join(contribs, Seq("id"), "left")
-        .select(col("id"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * coalesce(col("cs"), lit(0.0))).as("rank")))
+      val c = contribs match {
+        case None =>
+          edges.select(col("dst").as("id"),
+            (lit(1.0) / lit(n) / col("deg")).as("c"))
+        case Some(cs) =>
+          edges.join(broadcast(cs), edges("src") === cs("id"), "left")
+            .select(col("dst").as("id"),
+              (rank(col("cs")) / col("deg")).as("c"))
+      }
+      val agg = c.groupBy("id").agg(sum(col("c")).as("cs"))
+      contribs = Some(if (checkpoint) ferried(agg, agg.collect()) else agg)
     }
-    ranks
+    contribs match {
+      case None => nodes.select(col("id"), (lit(1.0) / lit(n)).as("rank"))
+      case Some(cs) =>
+        nodes.join(broadcast(cs), Seq("id"), "left")
+          .select(col("id"), rank(col("cs")).as("rank"))
+    }
   }
 
   /** HITS hubs-and-authorities (Kleinberg 1999; MADlib graph `hits`
@@ -92,11 +96,18 @@ object Components {
     * round like MADlib. Returns (id, hub, auth) for every node —
     * nodes with no in-edges carry authority 0, no out-edges hub 0.
     *
-    * Scale: the score relations are node-scale and broadcast into the
-    * edge joins (edges never re-shuffled — the pageRank dataflow); the
-    * only corpus-scale exchange per round is the dst-/src-keyed sum
-    * with map-side partials. Each normalization reduces one scalar to
-    * the driver (catalog-scale). */
+    * Scale: the [[pageRank]] dataflow. A half-round's state is its raw
+    * sums, (id, c) for the nodes that receive mass (a missing node
+    * scores 0), plus the vector's L2 norm; the next half-round
+    * broadcasts it into the edge join and normalizes per edge
+    * (edges never re-shuffled), and the only exchange is the
+    * dst-/src-keyed sum with map-side partials. Every hub starts at 1.0,
+    * so round 0's authority sums are the in-degrees and join nothing.
+    * Each half-round collects its rows once: they come back as a
+    * LocalRelation ([[ferried]]) and give the norm on the driver, summed
+    * in collect()'s fixed partition order — three jobs per half-round.
+    * The state is node-scale and held on the driver, which the
+    * broadcast into the edge join requires anyway. */
   def hits(
       edgesDf: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 3, checkpoint: Boolean = true): DataFrame = {
@@ -108,34 +119,48 @@ object Components {
       .distinct())
     val nodes = cut(edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).distinct())
-    var hub = nodes.select(col("id"), lit(1.0).as("s"))
-    var auth = nodes.select(col("id"), lit(0.0).as("s"))
-    // Checkpoint the raw (un-normalized) scores BEFORE the norm's scalar
-    // action: the norm reduction then reads the materialized relation and
-    // the normalized result is a projection over it — ONE corpus-scale
-    // execution per half-round. (Normalizing first and checkpointing after
-    // ran the edge join + aggregate TWICE per half-round: once under the
-    // norm's collect, once under the eager checkpoint.)
-    def normalize(v: DataFrame): DataFrame = {
-      val vm = cut(v)
-      val norm = math.sqrt(vm.agg(sum(col("s") * col("s"))).head.getDouble(0))
-      vm.select(col("id"), (col("s") / lit(norm)).as("s"))
+    final case class Scores(raw: DataFrame, norm: Double) {
+      def s: Column = col("c") / lit(norm)
     }
+    def scores(raw: DataFrame): Scores = {
+      val rows = raw.collect()
+      val norm = math.sqrt(rows.foldLeft(0.0) { (a, r) =>
+        a + r.getDouble(1) * r.getDouble(1) })
+      Scores(if (checkpoint) ferried(raw, rows) else raw, norm)
+    }
+    // one half-round: sum the `from` scores across the edges into `to`
+    def step(v: Scores, from: String, to: String): Scores =
+      scores(edges.join(broadcast(v.raw), edges(from) === v.raw("id"))
+        .groupBy(col(to).as("id")).agg(sum(v.s).as("c")))
+    var hub: Option[Scores] = None // None: every hub is 1.0
+    var auth: Option[Scores] = None // None: every authority is 0.0
     for (_ <- 0 until iterations) {
-      auth = normalize(nodes
-        .join(edges.join(broadcast(hub), edges("src") === hub("id"))
-          .groupBy(col("dst").as("nid")).agg(sum(col("s")).as("c")),
-          nodes("id") === col("nid"), "left")
-        .select(col("id"), coalesce(col("c"), lit(0.0)).as("s")))
-      hub = normalize(nodes
-        .join(edges.join(broadcast(auth), edges("dst") === auth("id"))
-          .groupBy(col("src").as("nid")).agg(sum(col("s")).as("c")),
-          nodes("id") === col("nid"), "left")
-        .select(col("id"), coalesce(col("c"), lit(0.0)).as("s")))
+      val a = hub match {
+        case None =>
+          scores(edges.groupBy(col("dst").as("id"))
+            .agg(count(lit(1)).cast("double").as("c")))
+        case Some(h) => step(h, "src", "dst")
+      }
+      auth = Some(a)
+      hub = Some(step(a, "dst", "src"))
     }
-    nodes.join(hub.select(col("id"), col("s").as("hub")), "id")
-      .join(auth.select(col("id"), col("s").as("auth")), "id")
+    def attach(df: DataFrame, v: Option[Scores], start: Double,
+        name: String): DataFrame = v match {
+      case None => df.withColumn(name, lit(start))
+      case Some(sc) =>
+        df.join(broadcast(sc.raw), Seq("id"), "left")
+          .withColumn(name, coalesce(sc.s, lit(0.0))).drop("c")
+    }
+    attach(attach(nodes, hub, 1.0, "hub"), auth, 0.0, "auth")
   }
+
+  /** `rows` — the collected result of `df` — as a LocalRelation: the
+    * next round broadcasts the driver's copy instead of re-running or
+    * checkpointing `df` (the logregFitK/multinomFitK ferry; exact
+    * binary round-trip). */
+  private def ferried(df: DataFrame, rows: Array[Row]): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      df.schema)
 
   /** Components of the undirected pair graph. Returns (`id`,
     * `component`) for every vertex that appears in `pairs`, where

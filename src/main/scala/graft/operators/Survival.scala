@@ -34,9 +34,8 @@ object Survival {
     *      I_ij = Σ_events d·(S2_ij/S0 − S1_i·S1_j/S0²), each event term
     *      micros-quantized pre-sum, named to feed the shared
     *      [[Regression.gjBatches]] Gauss-Jordan (`t_i` = U_i,
-    *      `m_i_j` = I_ij); β_i ← q6(β_i + Δ_i). The β state is a 1-row
-    *      relation driver-ferried between rounds and crossJoined back
-    *      as a broadcast.
+    *      `m_i_j` = I_ij); β_i ← q6(β_i + Δ_i). The β state is one
+    *      driver-side row, projected into each round as literals.
     *
     * Cross-engine determinism: β is micros-quantized so both engines
     * call exp() on identical arguments; exp itself is the one
@@ -59,20 +58,14 @@ object Survival {
         c.cast("double").as(s"x${i + 1}") }: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     KernelCaches.register(rows)
-    val spark = df.sparkSession
-    import spark.implicits._
     val bn = (0 until p).map(i => s"b_$i")
-    // 1-row β state driver-ferried between Newton rounds (r9): the
-    // broadcast build already collected the row to the driver each
-    // round; the explicit ferry drops the eager-checkpoint job. Exact
-    // binary round-trip.
-    val bSchema = org.apache.spark.sql.types.StructType(bn.map(n =>
-      org.apache.spark.sql.types.StructField(n,
-        org.apache.spark.sql.types.DoubleType)))
+    // β state held on the driver between Newton rounds and projected
+    // back as double literals (exact binary round-trip): a crossJoin
+    // with a broadcast 1-row relation would cost a broadcast job per use
     var bRow: org.apache.spark.sql.Row =
       org.apache.spark.sql.Row.fromSeq(Seq.fill(p)(0.0))
-    def b: org.apache.spark.sql.DataFrame = spark.createDataFrame(
-      java.util.Collections.singletonList(bRow), bSchema)
+    def b: Seq[Column] =
+      bn.zipWithIndex.map { case (n, i) => lit(bRow.getDouble(i)).as(n) }
     val eTxt = s"CAST(floor(exp((${(0 until p)
       .map(i => s"b_$i * x${i + 1}").mkString(" + ")})) * 1000000" +
       " + 0.5) AS BIGINT)"
@@ -89,7 +82,7 @@ object Survival {
             (for { i <- 0 until p; j <- i until p } yield
               expr(s"sum(${xl(i)} * ${xl(j)} * $eTxt)")
                 .as(s"sxxe_${i}_$j")))
-      val perT = rows.crossJoin(broadcast(b))
+      val perT = rows.select(col("*") +: b: _*)
         .groupBy("g", "t").agg(perTAggs.head, perTAggs.tail: _*)
       val w = Window.partitionBy("g").orderBy(col("t").desc)
         .rangeBetween(Window.unboundedPreceding, Window.currentRow)
@@ -114,7 +107,7 @@ object Survival {
               s" AS DOUBLE) / CAST(s0 AS DOUBLE) - ${r1(i)} * ${r1(j)})"))
               .as(s"m_${i}_$j"))
       val gr = s.agg(grAggs.head, grAggs.tail: _*)
-      val solved = gj.foldLeft(gr.crossJoin(broadcast(b))) { (d, batch) =>
+      val solved = gj.foldLeft(gr.select(col("*") +: b: _*)) { (d, batch) =>
         d.select(col("*") +: batch.map { case (n, e) =>
           expr(e).as(n) }: _*)
       }
@@ -124,9 +117,8 @@ object Survival {
         .head()
     }
     val n = rows.agg(sum(col("ev")).as("ne"), count(lit(1)).as("nt"))
-    b.crossJoin(broadcast(n))
-      .select((0 until p).map(i => col(s"b_$i").as(s"beta$i")) ++
-        Seq(col("ne").as("n_events"), col("nt").as("n_total")): _*)
+    n.select((0 until p).map(i => lit(bRow.getDouble(i)).as(s"beta$i")) ++
+      Seq(col("ne").as("n_events"), col("nt").as("n_total")): _*)
   }
 
   /** DuckDB oracle for [[coxFitK]] — the q_ml_cox CTE unroll at any

@@ -2,6 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.graftobs.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 import graft.{GraftSession, SparkEntry}
@@ -17,7 +18,7 @@ import graft.{GraftSession, SparkEntry}
 object TimeQuery {
 
   /** Counters reset per timed run; listener events are async, so callers
-    * sleep briefly before reading. */
+    * drain the bus before reading. */
   private final class Counts extends SparkListener {
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
@@ -66,7 +67,7 @@ object TimeQuery {
         val t0 = System.nanoTime()
         q.query(spark, sfDir).write.format("noop").mode("overwrite").save()
         val secs = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // let async listener events drain
+        Bus.drain(spark.sparkContext)
         println(f"[time] ${q.name} iter$it $secs%.2f s  ${counts.line}")
       }
     }

@@ -1814,4 +1814,37 @@ class OperatorSpec extends AnyFunSuite {
       graft.operators.KernelCaches.releaseAll()
     }
   }
+
+  test("pageRank and hits pay at most three jobs per score update") {
+    import spark.implicits._
+    // jobs of `run`, counted once the listener bus has drained, so no
+    // event of an earlier action or a late event of `run` is miscounted
+    def jobs(run: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      val sc = spark.sparkContext
+      org.apache.spark.graftobs.Bus.drain(sc)
+      sc.addSparkListener(l)
+      try { run; org.apache.spark.graftobs.Bus.drain(sc); n.get }
+      finally sc.removeSparkListener(l)
+    }
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 2L),
+      (2L, 5L)).toDF("src", "dst")
+    def pr(k: Int) = jobs(Components.pageRank(edges, "src", "dst",
+      iterations = k).collect())
+    def hits(k: Int) = jobs(Components.hits(edges, "src", "dst",
+      iterations = k).collect())
+    // one more round adds exactly the round: the aggregate's map stage,
+    // its collect and the broadcast of the collected state
+    val prRound = pr(3) - pr(2)
+    assert(prRound > 0 && prRound <= 3, s"pageRank round: $prRound jobs")
+    // a HITS iteration is two such half-rounds (authority, then hub)
+    val hitsRound = hits(3) - hits(2)
+    assert(hitsRound > 0 && hitsRound <= 6,
+      s"hits iteration: $hitsRound jobs")
+  }
 }

@@ -357,6 +357,62 @@ class PropertySpec extends AnyFunSuite {
     assert(ps(3L) > ps(1L) && ps(1L) > ps(2L))
   }
 
+  // 1 is a pure source (no in-edges), 5 a pure sink (no out-edges)
+  private val srcSinkEdges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L),
+    (4L, 2L), (2L, 5L), (3L, 5L))
+
+  test("hits: matches a driver power iteration, normalized every round") {
+    import spark.implicits._
+    val iters = 4
+    val ids = srcSinkEdges.flatMap(e => Seq(e._1, e._2)).distinct
+    def unit(v: Map[Long, Double]): Map[Long, Double] = {
+      val norm = math.sqrt(v.values.map(x => x * x).sum)
+      v.map { case (k, x) => k -> x / norm }
+    }
+    var hub = ids.map(_ -> 1.0).toMap
+    var auth = ids.map(_ -> 0.0).toMap
+    for (_ <- 0 until iters) {
+      auth = unit(ids.map(v => v -> srcSinkEdges.collect {
+        case (u, `v`) => hub(u) }.sum).toMap)
+      hub = unit(ids.map(u => u -> srcSinkEdges.collect {
+        case (`u`, v) => auth(v) }.sum).toMap)
+    }
+    val rows = Components.hits(srcSinkEdges.toDF("src", "dst"), "src",
+      "dst", iterations = iters).collect()
+      .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    assert(rows.keySet == ids.toSet)
+    rows.foreach { case (id, (h, a)) =>
+      assert(math.abs(h - hub(id)) < 1e-12, s"hub($id) $h vs ${hub(id)}")
+      assert(math.abs(a - auth(id)) < 1e-12, s"auth($id) $a vs ${auth(id)}")
+    }
+    assert(rows(5L)._1 == 0.0, "a sink has no hub score")
+    assert(rows(1L)._2 == 0.0, "a source has no authority")
+    assert(math.abs(rows.values.map(v => v._1 * v._1).sum - 1.0) < 1e-12)
+    assert(math.abs(rows.values.map(v => v._2 * v._2).sum - 1.0) < 1e-12)
+  }
+
+  test("pageRank: a node with no in-edges ranks exactly (1-d)/n") {
+    import spark.implicits._
+    val d = 0.85
+    val ids = srcSinkEdges.flatMap(e => Seq(e._1, e._2)).distinct
+    val n = ids.size.toDouble
+    val outDeg = srcSinkEdges.groupBy(_._1).map { case (k, v) => k -> v.size }
+    // driver power iteration of the same simplified model (sink mass
+    // leaks, not redistributed)
+    var rank = ids.map(_ -> 1.0 / n).toMap
+    for (_ <- 0 until 6)
+      rank = ids.map(v => v -> ((1.0 - d) / n + d * srcSinkEdges.collect {
+        case (u, `v`) => rank(u) / outDeg(u) }.sum)).toMap
+    val pr = Components.pageRank(srcSinkEdges.toDF("src", "dst"), "src",
+      "dst", iterations = 6, damping = d).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(pr(1L) == (1.0 - d) / n)
+    assert(pr.keySet == ids.toSet)
+    pr.foreach { case (id, r) =>
+      assert(math.abs(r - rank(id)) < 1e-12, s"rank($id) $r vs ${rank(id)}")
+    }
+  }
+
   test("olsFit2 recovers exact coefficients from noiseless linear data") {
     import spark.implicits._
     val rows = for (i <- 1 to 40) yield {
