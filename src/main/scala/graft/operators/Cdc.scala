@@ -29,12 +29,11 @@ import org.apache.spark.sql.functions._
   * table version while enabled — exactly the retention a
   * post-statement trigger needs.
   *
-  * Scope: capture hooks the TABLE-level COW swap. The
-  * partition-granular DML paths ([[Dml.deleteWherePartitioned]] /
-  * [[Dml.updateWherePartitioned]]'s in-place branch) rewrite
-  * individual partition DIRECTORIES and do not capture — use the
-  * full-table DML forms on CDC-enabled tables (the SplitUpdate branch,
-  * which rewrites the whole table, does capture).
+  * Scope: capture hooks the table-level COW swap in [[Dml.overwrite]],
+  * which every copy-on-write DML statement goes through. Statements
+  * that rewrite storage without it — TRUNCATE and ALTER TABLE ...
+  * PARTITION, which replace or delete directories directly — do not
+  * capture.
   */
 object Cdc {
 

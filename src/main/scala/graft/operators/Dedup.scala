@@ -49,26 +49,6 @@ object Dedup {
 
   // ---- MinHash + LSH ----------------------------------------------
 
-  /** MinHash signatures via explode → min-aggregate → re-assemble. Hash
-    * family i is md5(i || ':' || token); the signature component is the
-    * lexicographic min — deterministic and portable (the oracle SQL
-    * computes the identical value). A nested higher-order-function
-    * formulation computes the same values but evaluates interpreted per
-    * element; this path keeps md5+min inside whole-stage codegen and
-    * scales as a plain shuffle aggregation. */
-  def minhashSignatures(
-      df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame =
-    df.select(col(idCol).as("id"),
-        explode(TextAnalysis.tokenSet(col(textCol))).as("tok"))
-      .select(col("id"), col("tok"),
-        explode(sequence(lit(0), lit(k - 1))).as("i"))
-      .groupBy("id", "i")
-      .agg(min(md5(concat(col("i"), lit(":"), col("tok")).cast("binary")))
-        .as("mh"))
-      .groupBy("id")
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("mh")))),
-        s => s.getField("mh")).as("sig"))
-
   /** Candidate near-duplicate pairs via MinHash LSH, with the estimated
     * Jaccard (fraction of matching signature components).
     *

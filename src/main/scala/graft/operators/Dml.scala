@@ -28,11 +28,6 @@ object Dml {
     * DROP COLUMN of a partition key). */
   private[graft] def overwrite(
       spark: SparkSession, path: String, next: DataFrame,
-      partitionCols: Seq[String] = Seq.empty): Unit =
-    overwriteInPlace(spark, path, next, partitionCols)
-
-  private def overwriteInPlace(
-      spark: SparkSession, path: String, next: DataFrame,
       partitionCols: Seq[String] = Seq.empty,
       validate: () => Unit = () => ()): Unit = {
     val tmp = path + ".cow-tmp"
@@ -75,7 +70,7 @@ object Dml {
     val obs = org.apache.spark.sql.Observation()
     val observed = df.observe(obs,
       coalesce(sum(when(matched, 1L).otherwise(0L)), lit(0L)).as("n_hit"))
-    overwriteInPlace(spark, path, observed.filter(!matched))
+    overwrite(spark, path, observed.filter(!matched))
     obs.get("n_hit").asInstanceOf[Long]
   }
 
@@ -98,7 +93,7 @@ object Dml {
         case None => col(c)
       }
     }: _*)
-    overwriteInPlace(spark, path, updated)
+    overwrite(spark, path, updated)
     obs.get("n_hit").asInstanceOf[Long]
   }
 
@@ -119,7 +114,7 @@ object Dml {
     val totalBytes = before.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val df = spark.read.parquet(path)
-    overwriteInPlace(spark, path, df.coalesce(nOut))
+    overwrite(spark, path, df.coalesce(nOut))
     (before.size, dataFiles.size)
   }
 
@@ -155,7 +150,7 @@ object Dml {
     // tmp→live rename, so the published table is never touched.
     val nBefore = df.count()
     val obs = org.apache.spark.sql.Observation()
-    overwriteInPlace(spark, path,
+    overwrite(spark, path,
       updated.observe(obs, count(lit(1)).as("n_rows")),
       validate = () => {
         val nAfter = obs.get("n_rows").asInstanceOf[Long]
@@ -165,112 +160,6 @@ object Dml {
             " — PG would pick one match arbitrarily; dedup the source on" +
             " the join keys instead")
       })
-  }
-
-  /** Hive directory name for one partition value: special characters use
-    * Hive's percent-escaping and NULL maps to the default-partition dir,
-    * exactly as Spark's partitioned writer produced them — building the
-    * raw "col=value" string instead would silently miss escaped/null
-    * partitions. */
-  private def partitionDir(
-      spark: SparkSession, path: String, partitionCol: String,
-      value: String): Path = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val leaf =
-      if (value == null)
-        s"$partitionCol=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"
-      else s"$partitionCol=${ExternalCatalogUtils.escapePathName(value)}"
-    val p = new Path(path, leaf)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      throw new java.io.IOException(
-        s"partition directory $p not found for $partitionCol=$value")
-    p
-  }
-
-  /** Hive-style partition values under `path` for `partitionCol`. */
-  private def partitionValues(
-      spark: SparkSession, path: String, partitionCol: String): Seq[String] = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(new Path(path)).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith(partitionCol + "="))
-      .map(_.stripPrefix(partitionCol + "="))
-  }
-
-  /** DELETE at PARTITION granularity (GP analogue: the planner's
-    * PartitionSelector limits ModifyTable to affected leaves): only the
-    * Hive partitions that contain matching rows are rewritten; all other
-    * partition directories are left byte-identical. The affected-set
-    * probe collects only partition VALUES (catalog-scale metadata, not
-    * data) to the driver. */
-  def deleteWherePartitioned(
-      spark: SparkSession, path: String, partitionCol: String,
-      cond: Column): Unit = {
-    val df = spark.read.parquet(path)
-    val affected = df.filter(coalesce(cond, lit(false)))
-      .select(col(partitionCol).cast("string")).distinct()
-      .collect().map(_.getString(0))
-    affected.foreach { pv =>
-      val pdir = partitionDir(spark, path, partitionCol, pv).toString
-      val part = spark.read.parquet(pdir)
-        .withColumn(partitionCol, lit(pv).cast(df.schema(partitionCol).dataType))
-      overwriteInPlace(spark, pdir,
-        part.filter(!coalesce(cond, lit(false))).drop(partitionCol))
-    }
-  }
-
-  /** UPDATE at partition granularity. If the assignment touches the
-    * partition column itself, rows can MOVE partitions (GP SplitUpdate,
-    * nodeSplitUpdate.c:124) — that case falls back to a full partitioned
-    * rewrite (delete+insert everywhere); otherwise only affected
-    * partitions are rewritten in place. */
-  def updateWherePartitioned(
-      spark: SparkSession, path: String, partitionCol: String,
-      assignments: Map[String, Column], cond: Column): Unit = {
-    val df = spark.read.parquet(path)
-    def applyTo(d: DataFrame): DataFrame = d.select(d.columns.map { c =>
-      assignments.get(c) match {
-        case Some(v) => when(coalesce(cond, lit(false)), v)
-          .otherwise(col(c)).as(c)
-        case None => col(c)
-      }
-    }: _*)
-    if (assignments.contains(partitionCol)) {
-      // SplitUpdate: rewrite the whole table, re-partitioned. Cluster by
-      // target partition (+ small salt) so each Hive partition lands in a
-      // bounded number of files rather than one per input task.
-      val tmp = path + ".cow-tmp"
-      val out = applyTo(df)
-      val salt = pmod(hash(out.columns.map(col).toSeq: _*), lit(4))
-      out.repartition(col(partitionCol), salt)
-        .write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
-      val fs = new Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val old = path + ".cow-old"
-      fs.delete(new Path(old), true)
-      if (!fs.rename(new Path(path), new Path(old)))
-        throw new java.io.IOException(s"rename $path -> $old failed")
-      if (!fs.rename(new Path(tmp), new Path(path))) {
-        fs.rename(new Path(old), new Path(path))
-        throw new java.io.IOException(s"rename $tmp -> $path failed")
-      }
-      if (!Cdc.retainPreImage(spark, path, old))
-        fs.delete(new Path(old), true)
-    } else {
-      val affected = df.filter(coalesce(cond, lit(false)))
-        .select(col(partitionCol).cast("string")).distinct()
-        .collect().map(_.getString(0))
-      affected.foreach { pv =>
-        val pdir = partitionDir(spark, path, partitionCol, pv).toString
-        val part = spark.read.parquet(pdir)
-          .withColumn(partitionCol,
-            lit(pv).cast(df.schema(partitionCol).dataType))
-        overwriteInPlace(spark, pdir, applyTo(part).drop(partitionCol))
-      }
-    }
   }
 
   /** MERGE INTO path USING source ON key: matched rows take the source's
@@ -289,7 +178,7 @@ object Dml {
         when(col(s"s.$key").isNotNull, col(s"s.$c"))
           .otherwise(col(s"t.$c")).as(c)
       }: _*)
-    overwriteInPlace(spark, path, merged)
+    overwrite(spark, path, merged)
   }
 
   /** `INSERT ... ON CONFLICT DO UPDATE` lowering (nodeModifyTable.c
@@ -319,6 +208,6 @@ object Dml {
           .otherwise(tgt(c))
           .cast(target.schema(c).dataType).as(c)
       }: _*)
-    overwriteInPlace(spark, path, merged, partitionCols)
+    overwrite(spark, path, merged, partitionCols)
   }
 }

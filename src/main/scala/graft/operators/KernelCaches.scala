@@ -40,9 +40,6 @@ object KernelCaches {
     cleanups.clear()
   }
 
-  /** Number of currently registered caches (test visibility). */
-  def liveCount: Int = synchronized(live.size)
-
   /** Persist an ITERATIVE kernel's working projection with enough
     * partitions to use the whole cluster, and register it here.
     *

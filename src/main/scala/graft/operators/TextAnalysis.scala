@@ -48,16 +48,6 @@ object TextAnalysis {
       (length(text) - length(translate(text, "0123456789", "")))
         .cast("double") / length(text))
 
-  /** Mean token length. Σ token lengths = count of non-whitespace chars
-    * (every non-ws char belongs to exactly one \s+-split token), so both
-    * numerator and denominator are single codegen'd regex passes — no
-    * token array, no interpreted aggregate lambda. */
-  def avgWordLen(text: Column): Column = {
-    val n = tokenCount(text)
-    when(n === 0, 0.0).otherwise(
-      length(regexp_replace(text, "\\s", "")).cast("double") / n)
-  }
-
   /** English stopwords used for the quality heuristic. */
   val EnStopwords: Seq[String] = Seq(
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",

@@ -155,7 +155,7 @@ object GpSqlDialect {
     // to_char... are all reimplemented under their bare names) — dumps
     // qualify every call after set_config('search_path', '', false)
     val trimmed = resolveSchemas(rewriteExpressions(inlineSqlFunctions(
-      mapOutsideQuotes(gpSql.trim)(
+      SqlLex.mapCode(gpSql.trim)(
         _.replaceAll("(?i)\\bpg_catalog\\.", "")))))
     if (WithRecursiveStart.findFirstIn(trimmed).isDefined)
       return executeWithRecursive(spark, trimmed)
@@ -364,7 +364,7 @@ object GpSqlDialect {
     CreateCompositeRe.findFirstMatchIn(trimmed) match {
       case Some(m) =>
         composites.put(m.group(1).toLowerCase,
-          splitTopLevelCommas(m.group(2)).map { f =>
+          SqlLex.split(m.group(2), ',').map { f =>
             val sp = f.trim.indexWhere(_.isWhitespace)
             if (sp < 0) throw new IllegalArgumentException(
               s"composite type field needs a name and a type: '${f.trim}'")
@@ -765,9 +765,8 @@ object GpSqlDialect {
       case _ =>
     }
     SelectIntoRe.findFirstMatchIn(trimmed) match {
-      // quote-parity guard: an INTO inside a string literal is not an
-      // into_clause
-      case Some(m) if m.group(1).count(_ == '\'') % 2 == 0 =>
+      // an INTO inside a string literal is not an into_clause
+      case Some(m) if SqlLex.isCode(trimmed, m.end(1)) =>
         // SELECT ... INTO t FROM ... (gram.y into_clause) ≡ CTAS — PG
         // itself rewrites it to CreateTableAs (createas.c)
         return execute(spark,
@@ -846,44 +845,6 @@ object GpSqlDialect {
       "\\(([^)]*)\\)\\s*RETURNS\\s+.*?\\bAS\\s+\\$\\$(.*)\\$\\$\\s*" +
       "LANGUAGE\\s+SQL\\b.*$").r
 
-  /** True iff `kw` occurs at paren depth 0 of `s` (outside any subquery). */
-  private def hasTopLevelKeyword(s: String, kw: String): Boolean = {
-    val upper = s.toUpperCase
-    var d = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '(') d += 1
-      else if (c == ')') d -= 1
-      else if (d == 0 && upper.startsWith(kw, i) &&
-        (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1))) &&
-        (i + kw.length >= s.length ||
-          !Character.isLetterOrDigit(s.charAt(i + kw.length)))) return true
-      i += 1
-    }
-    false
-  }
-
-  /** Split `s` at top-level commas (outside parens). */
-  private def splitTopLevelCommas(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var d = 0
-    var start = 0
-    var i = 0
-    var inQ = false // commas and parens inside '...' are literal text
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQ) { if (c == '\'') inQ = false }
-      else if (c == '\'') inQ = true
-      else if (c == '(') d += 1
-      else if (c == ')') d -= 1
-      else if (c == ',' && d == 0) { out += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
   /** `CREATE [OR REPLACE] FUNCTION f(a type, ...) RETURNS type AS
     * $$ SELECT ... $$ LANGUAGE SQL` → register for call-site inlining
     * (reference: src/pl/ SQL-language functions; PG plans these by
@@ -893,14 +854,14 @@ object GpSqlDialect {
     val m = CreateFunctionRe.findFirstMatchIn(gpSql).getOrElse(
       throw new IllegalArgumentException(s"cannot parse CREATE FUNCTION: $gpSql"))
     val name = m.group(1).toLowerCase
-    val params = splitTopLevelCommas(m.group(2)).map(_.trim).map { p =>
+    val params = SqlLex.split(m.group(2), ',').map { p =>
       val sp = p.indexWhere(_.isWhitespace)
       if (sp < 0) p else p.substring(0, sp)
-    }.filter(_.nonEmpty) // zero-arg: `()` must yield no params, not [""]
+    }
     val body = m.group(3).trim.stripSuffix(";").trim
     val SelectExpr = "(?is)^SELECT\\s+(.*)$".r
     val (stored, scalar) = body match {
-      case SelectExpr(e) if !hasTopLevelKeyword(body, "FROM") => (e.trim, true)
+      case SelectExpr(e) if SqlLex.keyword(body, "FROM") < 0 => (e.trim, true)
       case _ => (body, false)
     }
     sqlFunctions(name) = SqlFunction(params, stored, scalar)
@@ -1085,58 +1046,29 @@ object GpSqlDialect {
     * top-level operator. */
   private[graft] def topLevelDenominators(expr: String): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    var depth = 0
-    def skipString(from: Int): Int = {
-      var j = from + 1
-      while (j < expr.length) {
-        if (expr.charAt(j) == '\'') {
-          if (j + 1 < expr.length && expr.charAt(j + 1) == '\'') j += 2
-          else return j + 1
-        } else j += 1
-      }
-      j
-    }
-    def skipBalanced(from: Int, open: Char, close: Char): Int = {
-      var j = from + 1
-      var d = 1
-      while (j < expr.length && d > 0) {
+    // '%' too: modulo by zero raises division_by_zero in PG just like
+    // '/' (int4mod, numeric_mod)
+    def nextDivMod(from: Int) = SqlLex.find(expr, from)((k, d) =>
+      d == 0 && (expr.charAt(k) == '/' || expr.charAt(k) == '%'))
+    var i = nextDivMod(0)
+    while (i >= 0) {
+      var j = i + 1
+      while (j < expr.length && expr.charAt(j).isWhitespace) j += 1
+      val start = j
+      if (j < expr.length && (expr.charAt(j) == '-' ||
+        expr.charAt(j) == '+')) j += 1
+      var done = false
+      while (j < expr.length && !done) {
         expr.charAt(j) match {
-          case '\'' => j = skipString(j) - 1
-          case c if c == open => d += 1
-          case c if c == close => d -= 1
-          case _ =>
+          case '(' | '[' =>
+            val close = SqlLex.matchParen(expr, j)
+            j = if (close < 0) expr.length else close + 1
+          case c if c.isLetterOrDigit || c == '_' || c == '.' => j += 1
+          case _ => done = true
         }
-        j += 1
       }
-      j
-    }
-    while (i < expr.length) {
-      expr.charAt(i) match {
-        case '\'' => i = skipString(i)
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        // '%' too: modulo by zero raises division_by_zero in PG just
-        // like '/' (int4mod, numeric_mod)
-        case c0 if (c0 == '/' || c0 == '%') && depth == 0 =>
-          var j = i + 1
-          while (j < expr.length && expr.charAt(j).isWhitespace) j += 1
-          val start = j
-          if (j < expr.length && (expr.charAt(j) == '-' ||
-            expr.charAt(j) == '+')) j += 1
-          var done = false
-          while (j < expr.length && !done) {
-            expr.charAt(j) match {
-              case '(' => j = skipBalanced(j, '(', ')')
-              case '[' => j = skipBalanced(j, '[', ']')
-              case c if c.isLetterOrDigit || c == '_' || c == '.' => j += 1
-              case _ => done = true
-            }
-          }
-          if (j > start) out += expr.substring(start, j)
-          i = j
-        case _ => i += 1
-      }
+      if (j > start) out += expr.substring(start, j)
+      i = nextDivMod(j)
     }
     out.toSeq
   }
@@ -1144,28 +1076,9 @@ object GpSqlDialect {
   /** True if the expression contains a `/` or `%` NESTED inside parens
     * (call arguments, parenthesized groups) — those denominators have
     * no extractable static guard, so WHEN-OTHERS lowering defers. */
-  private[graft] def hasNestedDivMod(expr: String): Boolean = {
-    var i = 0
-    var depth = 0
-    while (i < expr.length) {
-      expr.charAt(i) match {
-        case '\'' =>
-          i += 1
-          var closed = false
-          while (i < expr.length && !closed) {
-            if (expr.charAt(i) == '\'') {
-              if (i + 1 < expr.length && expr.charAt(i + 1) == '\'') i += 2
-              else { closed = true; i += 1 }
-            } else i += 1
-          }
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case c if (c == '/' || c == '%') && depth > 0 => return true
-        case _ => i += 1
-      }
-    }
-    false
-  }
+  private[graft] def hasNestedDivMod(expr: String): Boolean =
+    SqlLex.find(expr)((i, d) =>
+      d > 0 && (expr.charAt(i) == '/' || expr.charAt(i) == '%')) >= 0
 
   /** Total functions (cannot raise in Spark OR PG for any input) —
     * the calls a WHEN-OTHERS body may contain without defeating the
@@ -1192,52 +1105,16 @@ object GpSqlDialect {
       : Either[String, Seq[(String, String)]] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val re = "(?i)(?<![\\w.])cast\\s*\\(".r
-    // search on a literal-masked copy (same length, so indices align
-    // with the original): 'cast(' INSIDE a string literal is data
-    val masked = maskLiterals(expr)
-    for (m <- re.findAllMatchIn(masked)) {
-      // balanced-extract the argument list
-      var j = m.end
-      var d = 1
-      val start = j
-      while (j < expr.length && d > 0) {
-        expr.charAt(j) match {
-          case '\'' =>
-            j += 1
-            var closed = false
-            while (j < expr.length && !closed) {
-              if (expr.charAt(j) == '\'') {
-                if (j + 1 < expr.length && expr.charAt(j + 1) == '\'') j += 2
-                else { closed = true }
-              } else j += 1
-            }
-          case '(' => d += 1
-          case ')' => d -= 1
-          case _ =>
-        }
-        j += 1
-      }
-      val content = expr.substring(start, j - 1)
-      // split on the LAST top-level ` AS `
-      var k = 0
-      var cd = 0
-      var asPos = -1
-      while (k < content.length - 3) {
-        content.charAt(k) match {
-          case '(' => cd += 1
-          case ')' => cd -= 1
-          case _ =>
-        }
-        if (cd == 0 && content.charAt(k).isWhitespace &&
-          content.regionMatches(true, k + 1, "AS", 0, 2) &&
-          k + 3 < content.length && content.charAt(k + 3).isWhitespace)
-          asPos = k
-        k += 1
-      }
+    // 'cast(' INSIDE a string literal is data
+    for (m <- re.findAllMatchIn(SqlLex.mask(expr))) {
+      val close = SqlLex.matchParen(expr, m.end - 1)
+      val content =
+        expr.substring(m.end, if (close < 0) expr.length else close)
+      val asPos = SqlLex.keyword(content, "AS")
       if (asPos < 0)
         return Left(s"cast without a top-level AS: cast($content)")
       out += ((content.substring(0, asPos).trim,
-        content.substring(asPos + 4).trim))
+        content.substring(asPos + 2).trim))
     }
     Right(out.toSeq)
   }
@@ -1258,7 +1135,7 @@ object GpSqlDialect {
         "has no static guard")
     // calls outside the total-function whitelist may raise (domain
     // errors, user RAISE) — strings stripped before the scan
-    val stripped = maskLiterals(expr)
+    val stripped = SqlLex.mask(expr)
     val badCall = "(?i)(?<![\\w.])([a-z_][a-z0-9_]*)\\s*\\(".r
       .findAllMatchIn(stripped).map(_.group(1).toLowerCase)
       .find(f => !TotalFns.contains(f) && !SqlKeywordsBeforeParen.contains(f))
@@ -1342,8 +1219,7 @@ object GpSqlDialect {
     // RETURN-NULL skips); see executeCreateTriggerFn
     if ("(?is)\\bRETURNS\\s+trigger\\b".r.findFirstIn(gpSql).isDefined)
       return executeCreateTriggerFn(spark, name, m.group(4))
-    val paramDecls = splitTopLevelCommas(m.group(2)).map(_.trim)
-      .filter(_.nonEmpty) // zero-arg: `()` must yield no params, not [""]
+    val paramDecls = SqlLex.split(m.group(2), ',')
     val params = paramDecls.map { p =>
       val sp = p.indexWhere(_.isWhitespace)
       if (sp < 0) p else p.substring(0, sp)
@@ -1374,11 +1250,11 @@ object GpSqlDialect {
     val DeclInit = "(?is)^\\s*(\\w+)\\s+.*?(?::=|DEFAULT)\\s*(.+?)\\s*$".r
     // bound cursors first: a cursor decl has no :=/DEFAULT so the two
     // maps never claim the same declaration
-    val cursors = splitStatements(declsRaw).flatMap {
+    val cursors = SqlLex.split(declsRaw, ';').flatMap {
       case CursorDeclRe(c, sel) => Some(c.toLowerCase -> sel.trim)
       case _ => None
     }.toMap
-    val decls = splitStatements(declsRaw).flatMap {
+    val decls = SqlLex.split(declsRaw, ';').flatMap {
       case CursorDeclRe(_, _) => None
       case DeclInit(v, init) => Some(v.toLowerCase -> init)
       case _ => None // uninitialized: only fatal if referenced (NULL var)
@@ -1431,7 +1307,7 @@ object GpSqlDialect {
       val handlerReads = handAssigns.find { case (_, h) =>
         tryVars.exists(v =>
           s"(?i)(?<![\\w.])$v(?![\\w.(])".r
-            .findFirstIn(maskLiterals(h)).isDefined)
+            .findFirstIn(SqlLex.mask(h)).isDefined)
       }
       if (handlerReads.isDefined)
         keep(s"handler expression '${handlerReads.get._2}' reads a " +
@@ -1457,7 +1333,7 @@ object GpSqlDialect {
           case "division_by_zero" =>
             val caseHit = finalExprs.find { case (_, e) =>
               "(?i)(?<![\\w.])CASE(?![\\w.])".r
-                .findFirstIn(maskLiterals(e)).isDefined }
+                .findFirstIn(SqlLex.mask(e)).isDefined }
             val dens = finalExprs.flatMap { case (_, e) =>
               topLevelDenominators(e) }
             if (caseHit.isDefined)
@@ -1501,7 +1377,7 @@ object GpSqlDialect {
       return spark.emptyDataFrame
     }
     if ("(?i)(?<![\\w.])BEGIN(?![\\w.])".r
-        .findFirstIn(maskLiterals(stmtsFlat)).isDefined) {
+        .findFirstIn(SqlLex.mask(stmtsFlat)).isDefined) {
       deferredPlpgsql(name) = "nested BEGIN block not of the liftable " +
         "single-assignment EXCEPTION shape (only one level of " +
         "`BEGIN v := e; EXCEPTION WHEN cond THEN v := h; END;` lowers)"
@@ -1520,7 +1396,7 @@ object GpSqlDialect {
     // value and the terminal RETURN sees one straight-line expression.
     // This keeps the whole body inlined in whole-stage codegen — a
     // straight-line plpgsql body IS an expression DAG.
-    val parts = splitStatements(mainStmts)
+    val parts = SqlLex.split(mainStmts, ';')
     val AssignRe = "(?is)^(\\w+)\\s*:=\\s*(.+)$".r
     var env = decls
     var i = 0
@@ -1547,7 +1423,7 @@ object GpSqlDialect {
               deferredPlpgsql(name) = "EXCEPTION WHEN division_by_zero " +
                 "with no top-level division to guard"
             else if ("(?i)(?<![\\w.])CASE(?![\\w.])".r
-                .findFirstIn(maskLiterals(expr)).isDefined)
+                .findFirstIn(SqlLex.mask(expr)).isDefined)
               // a body CASE may conditionally guard the division — PG
               // would never evaluate it, an unconditional zero-probe
               // would hijack the handler (r8 review fix)
@@ -1605,7 +1481,7 @@ object GpSqlDialect {
           if parts.length - i <= 1 =>
         // $n slots ← USING expressions (locals already substituted);
         // out-of-range slots defer instead of inlining garbage
-        val usingArgs = splitTopLevelCommas(usingRaw).map(subst(env))
+        val usingArgs = SqlLex.split(usingRaw, ',').map(subst(env))
         val dyn0 = sql.replace("''", "'")
         val slots = "(?<![\\w])\\$(\\d+)".r.findAllMatchIn(dyn0)
           .map(_.group(1).toInt).toSeq
@@ -1849,7 +1725,7 @@ object GpSqlDialect {
   private val LoopDeleteRe =
     "(?is)^DELETE\\s+FROM\\s+(\\w+)\\s+WHERE\\s+(.+)$".r
   private def isDmlLoopBody(body: String): Boolean = {
-    val stmts = splitStatements(body).map(_.trim).filter(_.nonEmpty)
+    val stmts = SqlLex.split(body, ';')
     stmts.nonEmpty && stmts.forall {
       case LoopInsertValsRe(_, _, _) => true
       case LoopUpdateRe(_, _, _) => true
@@ -1872,14 +1748,13 @@ object GpSqlDialect {
       spark: SparkSession, loopVar: String, sel: String, body: String,
       basePath: String): Unit = {
     import org.apache.spark.sql.functions.expr
-    val stmts = splitStatements(body).map(_.trim).filter(_.nonEmpty)
+    val stmts = SqlLex.split(body, ';')
     val parsed = stmts.map {
       case st @ LoopInsertValsRe(t, _, vals) =>
-        // single VALUES tuple only: a depth-0 ')' inside the capture
-        // means `VALUES (..),(..)` — reject rather than mangle
-        var d = 0
-        vals.foreach { case '(' => d += 1; case ')' => d -= 1; case _ => }
-        if (d < 0 || vals.count(_ == '(') != vals.count(_ == ')'))
+        // single VALUES tuple only: the capture's own parens must close
+        // exactly at its end, else it is `VALUES (..),(..)` — reject
+        // rather than mangle
+        if (SqlLex.matchParen(s"($vals)", 0) != vals.length + 1)
           throw new UnsupportedOperationException(
             "DML loop INSERT must use a single VALUES tuple: " +
               firstStatement(st))
@@ -1939,12 +1814,12 @@ object GpSqlDialect {
   def executeCreateProcedure(
       spark: SparkSession, gpSql: String): DataFrame = {
     val m = CreateProcedureRe.findFirstMatchIn(gpSql).get
-    val params = splitTopLevelCommas(m.group(2)).map(_.trim)
+    val params = SqlLex.split(m.group(2), ',')
       .map(_.replaceAll("(?is)^(?:IN|OUT|INOUT)\\s+", ""))
       .map { p =>
         val sp = p.indexWhere(_.isWhitespace)
         if (sp < 0) p else p.substring(0, sp)
-      }.filter(_.nonEmpty)
+      }
     procedures(m.group(1).toLowerCase) = Procedure(params, m.group(4))
     spark.emptyDataFrame
   }
@@ -1955,7 +1830,7 @@ object GpSqlDialect {
     import spark.implicits._
     val p = procedures.getOrElse(name.toLowerCase,
       throw new IllegalArgumentException(s"unknown procedure $name"))
-    val args = splitTopLevelCommas(argsRaw).map(_.trim).filter(_.nonEmpty)
+    val args = SqlLex.split(argsRaw, ',')
     // arity check up front — a silent zip would leave unsubstituted
     // parameter names in the body and surface later as an opaque
     // unresolved-column error instead of a clear wrong-arg-count one
@@ -2013,7 +1888,7 @@ object GpSqlDialect {
     // set-based SQL statement. Unassigned declared vars keep the
     // static textual-substitution contract. Loop/record/cursor names
     // never join either env (their binding is per-row, not scalar).
-    val maskedStmts = maskLiterals(stmtsRaw)
+    val maskedStmts = SqlLex.mask(stmtsRaw)
     def isAssigned(v: String): Boolean =
       s"(?i)(?<![\\w.])$v\\s*:=".r.findFirstIn(maskedStmts).isDefined ||
         s"(?i)\\bINTO\\s+$v(?![\\w.])".r.findFirstIn(maskedStmts).isDefined
@@ -2024,7 +1899,7 @@ object GpSqlDialect {
       scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val mutInits =
       scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    splitStatements(declsRaw).foreach { d =>
+    SqlLex.split(declsRaw, ';').foreach { d =>
       val isCursor = "(?i)\\bCURSOR\\b".r.findFirstIn(d).isDefined
       d match {
         case DeclInit(v0, init) if !isCursor =>
@@ -2132,7 +2007,7 @@ object GpSqlDialect {
       grouped.toSeq
     }
     def runStmts(text: String): Unit =
-      groupBlocks(splitStatements(text)).foreach(runStmt)
+      groupBlocks(SqlLex.split(text, ';')).foreach(runStmt)
     def runStmt(g0: String): Unit = g0 match {
       // ---- scalar-state control statements match on the RAW text
       // (variable names must survive; expressions substitute at
@@ -2226,7 +2101,7 @@ object GpSqlDialect {
         val dyn0 = dynSql.replace("''", "'")
         val dyn = Option(usingRaw) match {
           case Some(u) =>
-            val args = splitTopLevelCommas(u)
+            val args = SqlLex.split(u, ',')
             "(?<![\\w])\\$(\\d+)".r.replaceAllIn(dyn0, pm => {
               val n = pm.group(1).toInt
               require(n >= 1 && n <= args.length,
@@ -2277,65 +2152,37 @@ object GpSqlDialect {
       changed = false
       rounds += 1
       for ((name, fn) <- sqlFunctions) {
-        val call = s"(?i)\\b$name\\s*\\(".r
-        val out = new StringBuilder
-        var pos = 0
-        var m = call.findFirstMatchIn(cur.substring(pos))
-        while (m.isDefined) {
-          val mm = m.get
-          val abs = pos + mm.start
-          // skip if preceded by identifier char or '.' (qualified name)
-          val prevOk = abs == 0 || {
-            val pc = cur.charAt(abs - 1)
-            !Character.isLetterOrDigit(pc) && pc != '_' && pc != '.'
-          }
-          val open = pos + mm.end - 1
-          val close = matchParen(cur, open)
-          if (!prevOk || close < 0) {
-            out ++= cur.substring(pos, open + 1)
-            pos = open + 1
-          } else {
-            val rawArgs = splitTopLevelCommas(cur.substring(open + 1, close))
-            val args = // `f()`: no args, not one blank arg
-              if (rawArgs.forall(_.trim.isEmpty)) Seq.empty else rawArgs
-            require(args.length == fn.params.length,
-              s"$name() expects ${fn.params.length} args, got ${args.length}")
-            // one simultaneous pass: args containing other parameter names
-            // must not be re-substituted (inline_function does the same
-            // via parse-tree param nodes)
-            val byName = fn.params.zipWithIndex
-              .map { case (p, i) => p.toLowerCase -> i }.toMap
-            val paramPat = (if (fn.params.isEmpty) "(?i)\\$(\\d+)"
-              else "(?i)(?<![\\w.$])(" +
-                fn.params.map(java.util.regex.Pattern.quote).mkString("|") +
-                ")\\b|\\$(\\d+)").r
-            def substRun(run: String): String =
-              paramPat.replaceAllIn(run, pm => {
-                val i =
-                  if (pm.group(1) != null) byName(pm.group(1).toLowerCase)
-                  else pm.group(if (fn.params.isEmpty) 1 else 2).toInt - 1
-                java.util.regex.Matcher.quoteReplacement(s"(${args(i)})")
-              })
-            // substitute OUTSIDE string literals only — a param name
-            // (or $n) occurring inside a quoted literal is data, not a
-            // reference (hit in r8: the 's' of a regex '\\s' inside an
-            // RLIKE pattern was being replaced with the argument)
-            val expanded = mapOutsideLiterals(fn.body)(substRun)
-            // a generator body must stay bare — Spark rejects explode()
-            // nested inside any expression, including plain parens
-            val rendered =
-              if ("(?is)^\\s*(explode|posexplode)\\b".r
-                .findFirstIn(expanded).isDefined) expanded
-              else s"($expanded)"
-            out ++= cur.substring(pos, abs)
-            out ++= rendered
-            pos = close + 1
-            changed = true
-          }
-          m = call.findFirstMatchIn(cur.substring(pos))
+        val next = rewriteCalls(cur, name) { case args =>
+          require(args.length == fn.params.length,
+            s"$name() expects ${fn.params.length} args, got ${args.length}")
+          // one simultaneous pass: args containing other parameter names
+          // must not be re-substituted (inline_function does the same
+          // via parse-tree param nodes)
+          val byName = fn.params.zipWithIndex
+            .map { case (p, i) => p.toLowerCase -> i }.toMap
+          val paramPat = (if (fn.params.isEmpty) "(?i)\\$(\\d+)"
+            else "(?i)(?<![\\w.$])(" +
+              fn.params.map(java.util.regex.Pattern.quote).mkString("|") +
+              ")\\b|\\$(\\d+)").r
+          def substRun(run: String): String =
+            paramPat.replaceAllIn(run, pm => {
+              val i =
+                if (pm.group(1) != null) byName(pm.group(1).toLowerCase)
+                else pm.group(if (fn.params.isEmpty) 1 else 2).toInt - 1
+              java.util.regex.Matcher.quoteReplacement(s"(${args(i)})")
+            })
+          // substitute OUTSIDE string literals only — a param name
+          // (or $n) occurring inside a quoted literal is data, not a
+          // reference (hit in r8: the 's' of a regex '\\s' inside an
+          // RLIKE pattern was being replaced with the argument)
+          val expanded = SqlLex.mapCode(fn.body)(substRun)
+          // a generator body must stay bare — Spark rejects explode()
+          // nested inside any expression, including plain parens
+          if ("(?is)^\\s*(explode|posexplode)\\b".r
+            .findFirstIn(expanded).isDefined) expanded
+          else s"($expanded)"
         }
-        out ++= cur.substring(pos)
-        cur = out.toString
+        if (next != cur) { changed = true; cur = next }
       }
     }
     cur
@@ -2507,66 +2354,50 @@ object GpSqlDialect {
     // the document first — swap at the call site. PG returns matched
     // nodes as xml[]; Spark returns their string values (documented
     // divergence — text()-selecting paths are identical).
-    val afterXpath = rewriteCalls(afterSample, "xpath", 2) { args =>
-      s"xpath(${args(1)}, ${args(0)})"
+    val afterXpath = rewriteCalls(afterSample, "xpath") {
+      case Seq(path, doc) => s"xpath($doc, $path)"
     }
-    val afterXpathEx = rewriteCalls(afterXpath, "xpath_exists", 2) { args =>
-      s"xpath_boolean(${args(1)}, ${args(0)})"
+    val afterXpathEx = rewriteCalls(afterXpath, "xpath_exists") {
+      case Seq(path, doc) => s"xpath_boolean($doc, $path)"
     }
     // contrib/intagg (intagg--1.0.sql:22,32) + gpcontrib/gp_array_agg:
     // array aggregation/enumeration under their contrib names
-    val afterIntAgg = rewriteCalls(afterXpathEx, "int_array_aggregate", 1) {
-      args => s"array_agg(${args(0)})"
+    val afterIntAgg = rewriteCalls(afterXpathEx, "int_array_aggregate") {
+      case Seq(a) => s"array_agg($a)"
     }
-    val afterGpArr = rewriteCalls(afterIntAgg, "gp_array_agg", 1) { args =>
-      s"array_agg(${args(0)})"
+    val afterGpArr = rewriteCalls(afterIntAgg, "gp_array_agg") {
+      case Seq(a) => s"array_agg($a)"
     }
-    val afterEnum = rewriteCalls(afterGpArr, "int_array_enum", 1) { args =>
-      s"explode(${args(0)})"
+    val afterEnum = rewriteCalls(afterGpArr, "int_array_enum") {
+      case Seq(a) => s"explode($a)"
     }
     // gpcontrib/gp_legacy_string_agg: the one-arg, no-delimiter
     // string_agg whose GP order is unspecified — lowered SORTED so the
     // result is deterministic across engines, runs, and cluster sizes
     // (documented strengthening; 2-arg string_agg is untouched)
-    rewriteCalls(afterEnum, "string_agg", 1) { args =>
-      s"concat_ws('', array_sort(array_agg(${args(0)})))"
+    rewriteCalls(afterEnum, "string_agg") {
+      case Seq(a) => s"concat_ws('', array_sort(array_agg($a)))"
     }
   }
 
-  /** Rewrite every `name(arg, ...)` call with exactly `arity` top-level
-    * arguments through `repl` (balanced parens, single left-to-right
-    * pass — replacements are not rescanned, so a rewrite may reuse the
-    * same function name). Other arities pass through untouched. */
-  private def rewriteCalls(sql: String, name: String, arity: Int)(
-      repl: Seq[String] => String): String = {
-    val call = s"(?i)\\b$name\\s*\\(".r
+  /** Rewrite every `name(arg, ...)` call in code whose top-level
+    * argument list `repl` is defined at (balanced parens, single
+    * left-to-right pass — replacements are not rescanned, so a rewrite
+    * may reuse the same function name). Other calls pass through. */
+  private def rewriteCalls(sql: String, name: String)(
+      repl: PartialFunction[Seq[String], String]): String = {
+    val call = s"(?i)(?<![\\w.])$name\\s*\\(".r
     val out = new StringBuilder
     var pos = 0
-    var m = call.findFirstMatchIn(sql.substring(pos))
-    while (m.isDefined) {
-      val mm = m.get
-      val abs = pos + mm.start
-      val prevOk = abs == 0 || {
-        val pc = sql.charAt(abs - 1)
-        !Character.isLetterOrDigit(pc) && pc != '_' && pc != '.'
-      }
-      val open = pos + mm.end - 1
-      val close = matchParen(sql, open)
-      if (!prevOk || close < 0) {
-        out ++= sql.substring(pos, open + 1)
-        pos = open + 1
-      } else {
-        val args = splitTopLevelCommas(sql.substring(open + 1, close))
-        if (args.length == arity) {
-          out ++= sql.substring(pos, abs)
-          out ++= repl(args.map(_.trim))
+    for (m <- call.findAllMatchIn(SqlLex.mask(sql)) if m.start >= pos) {
+      val close = SqlLex.matchParen(sql, m.end - 1)
+      if (close >= 0) {
+        val args = SqlLex.split(sql.substring(m.end, close), ',')
+        repl.lift(args).foreach { r =>
+          out ++= sql.substring(pos, m.start) ++= r
           pos = close + 1
-        } else {
-          out ++= sql.substring(pos, open + 1)
-          pos = open + 1
         }
       }
-      m = call.findFirstMatchIn(sql.substring(pos))
     }
     out ++= sql.substring(pos)
     out.toString
@@ -2583,70 +2414,9 @@ object GpSqlDialect {
     // directives, not SQL — dropped line-wise like pg_restore does
     val sql = script.linesIterator
       .filterNot(_.trim.startsWith("\\")).mkString("\n")
-    val stmts = splitStatements(sql)
+    val stmts = SqlLex.split(sql, ';')
     if (stmts.isEmpty) return spark.emptyDataFrame
     stmts.map(execute(spark, _, basePath)).last
-  }
-
-  /** Apply `f` only to the regions of `sql` outside single-quoted and
-    * double-quoted spans, dollar-quoted bodies and `--` line comments
-    * (same state machine as [[splitStatements]]), so textual rewrites
-    * like the `pg_catalog.` strip never touch string literals or
-    * function bodies — `VALUES ('pg_catalog.pg_class')` keeps its
-    * literal intact while `pg_catalog.setval(...)` still resolves. */
-  private[graft] def mapOutsideQuotes(sql: String)(
-      f: String => String): String = {
-    val out = new StringBuilder
-    val plain = new StringBuilder
-    def flush(): Unit = { out ++= f(plain.toString); plain.clear() }
-    var i = 0
-    var inS = false; var inD = false; var inDollar = false; var inC = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      val two = if (i + 1 < sql.length) sql.substring(i, i + 2) else ""
-      if (inC) { if (c == '\n') inC = false; out += c; i += 1 }
-      else if (inDollar) {
-        if (two == "$$") { inDollar = false; out ++= two; i += 2 }
-        else { out += c; i += 1 }
-      }
-      else if (inS) { if (c == '\'') inS = false; out += c; i += 1 }
-      else if (inD) { if (c == '"') inD = false; out += c; i += 1 }
-      else if (two == "--") { inC = true; flush(); out ++= two; i += 2 }
-      else if (two == "$$") { inDollar = true; flush(); out ++= two; i += 2 }
-      else if (c == '\'') { inS = true; flush(); out += c; i += 1 }
-      else if (c == '"') { inD = true; flush(); out += c; i += 1 }
-      else { plain += c; i += 1 }
-    }
-    flush()
-    out.toString
-  }
-
-  /** Split on top-level semicolons: quotes ('...', "..."), dollar-quoted
-    * bodies ($$...$$) and `--` line comments hide their contents. */
-  private[graft] def splitStatements(script: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var i = 0
-    var inS = false; var inD = false; var inDollar = false; var inC = false
-    while (i < script.length) {
-      val c = script.charAt(i)
-      val two = if (i + 1 < script.length) script.substring(i, i + 2) else ""
-      if (inC) { if (c == '\n') inC = false; cur += c; i += 1 }
-      else if (inDollar) {
-        if (two == "$$") { inDollar = false; cur ++= two; i += 2 }
-        else { cur += c; i += 1 }
-      }
-      else if (inS) { if (c == '\'') inS = false; cur += c; i += 1 }
-      else if (inD) { if (c == '"') inD = false; cur += c; i += 1 }
-      else if (two == "--") { inC = true; cur ++= two; i += 2 }
-      else if (two == "$$") { inDollar = true; cur ++= two; i += 2 }
-      else if (c == '\'') { inS = true; cur += c; i += 1 }
-      else if (c == '"') { inD = true; cur += c; i += 1 }
-      else if (c == ';') { out += cur.toString; cur.clear(); i += 1 }
-      else { cur += c; i += 1 }
-    }
-    out += cur.toString
-    out.map(_.trim).filter(_.nonEmpty).toSeq
   }
 
   /** `PREPARE name [(types)] AS stmt` / `EXECUTE name (args)` /
@@ -2762,61 +2532,6 @@ object GpSqlDialect {
   // statement-level, WHEN clauses, argument lists, and OLD.* references
   // reject loudly.
 
-  /** Apply `f` to the runs of `text` OUTSIDE single-quoted string
-    * literals; literal content (with '' escapes) passes through
-    * verbatim. Every textual substitution over SQL must route through
-    * this — a parameter/column name inside a literal is data, not a
-    * reference (r8 review: the inliner and the trigger composer each
-    * re-implemented this and one of them forgot). */
-  private[graft] def mapOutsideLiterals(text: String)(
-      f: String => String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    var runStart = 0
-    while (i < text.length) {
-      if (text.charAt(i) == '\'') {
-        sb ++= f(text.substring(runStart, i))
-        var j = i + 1
-        var closed = false
-        while (j < text.length && !closed) {
-          if (text.charAt(j) == '\'') {
-            if (j + 1 < text.length && text.charAt(j + 1) == '\'') j += 2
-            else closed = true
-          } else j += 1
-        }
-        val end = math.min(j, text.length - 1)
-        sb ++= text.substring(i, end + 1)
-        i = end + 1
-        runStart = i
-      } else i += 1
-    }
-    sb ++= f(text.substring(runStart))
-    sb.toString
-  }
-
-  /** Same-length mask of `text` with string-literal CONTENT blanked —
-    * for scanners that search positions (castSites): indices align with
-    * the original, but nothing inside quotes can match. */
-  private[graft] def maskLiterals(text: String): String = {
-    val arr = text.toCharArray
-    var i = 0
-    while (i < arr.length) {
-      if (arr(i) == '\'') {
-        var j = i + 1
-        var closed = false
-        while (j < arr.length && !closed) {
-          if (arr(j) == '\'') {
-            if (j + 1 < arr.length && arr(j + 1) == '\'') {
-              arr(j) = ' '; arr(j + 1) = ' '; j += 2
-            } else closed = true
-          } else { arr(j) = ' '; j += 1 }
-        }
-        i = j + 1
-      } else i += 1
-    }
-    new String(arr)
-  }
-
   sealed private trait TrigStep
   private case class TrigSkip(cond: String) extends TrigStep
   private case class TrigAssign(col: String, expr: String) extends TrigStep
@@ -2830,6 +2545,11 @@ object GpSqlDialect {
   // keys never match inside it) and resolves to the bare pre-image
   // column in the final composed UPDATE
   private val OldTokenRe = "(?i)__trig_old_(\\w+)\\b".r
+  /** Tokenize a row-trigger expression: NEW.col → the bare column,
+    * OLD.col → its [[OldTokenRe]] token; quoted text is data. */
+  private def trigTokens(e: String): String = SqlLex.mapCode(e)(
+    _.replaceAll("(?i)(?<![\\w.])OLD\\.(\\w+)", "__trig_old_$1")
+      .replaceAll("(?i)(?<![\\w.])NEW\\.", ""))
   // `when`: the CREATE TRIGGER ... WHEN (cond) predicate, stored
   // TOKENIZED (NEW. stripped to bare column, OLD.col → __trig_old_col)
   // — PG evaluates it once per row at trigger entry (trigger.c
@@ -2865,7 +2585,7 @@ object GpSqlDialect {
     * are single-quoted strings and bare numerics. */
   private def parseTriggerArgs(raw: String, trigName: String)
       : Seq[String] =
-    splitTopLevelCommas(raw).map(_.trim).filter(_.nonEmpty).map {
+    SqlLex.split(raw, ',').map {
       case a if a.startsWith("'") && a.endsWith("'") && a.length >= 2 =>
         a.substring(1, a.length - 1).replace("''", "'")
       case a if a.matches("-?\\d+(\\.\\d+)?") => a
@@ -3033,7 +2753,7 @@ object GpSqlDialect {
     * literals — the bound-relation column naming for INSTEAD OF
     * bodies. */
   private def substNewOld(e: String): String =
-    mapOutsideLiterals(e)(
+    SqlLex.mapCode(e)(
       _.replaceAll("(?i)(?<![\\w.])NEW\\.(\\w+)", "__iof_new_$1")
         .replaceAll("(?i)(?<![\\w.])OLD\\.(\\w+)", "__iof_old_$1"))
 
@@ -3135,7 +2855,7 @@ object GpSqlDialect {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit}
     val (trigName, fn) = viewInsteadTriggers(s"$view/update")
     val v = spark.table(view)
-    val setPairs = splitTopLevel(setClause, ',').map { a =>
+    val setPairs = SqlLex.split(setClause, ',').map { a =>
       val Array(k, s) = a.split("=", 2)
       k.trim.toLowerCase -> s.trim
     }.toMap
@@ -3250,8 +2970,8 @@ object GpSqlDialect {
           throw new UnsupportedOperationException(
             s"transition trigger ${tg.name} on $table: the statement " +
               "rewrote table files but no pre-image was retained — " +
-              "partition-granular DML paths do not capture (see " +
-              "operators/Cdc.scala scope); use the full-table DML forms")
+              "TRUNCATE and ALTER TABLE ... PARTITION do not capture " +
+              "(see operators/Cdc.scala scope)")
         val prev = spark.read.parquet(prevDir)
         val cur = readTable(spark, t)
         (prev.exceptAll(cur), cur.exceptAll(prev))
@@ -3343,6 +3063,9 @@ object GpSqlDialect {
         s.trim
       case other => return defer(firstStatement(other))
     }
+    val parts = SqlLex.split(rawBody, ';')
+    val masked = SqlLex.mask(rawBody)
+    val usesOld = "(?i)(?<![\\w.])OLD\\.".r.findFirstIn(masked).isDefined
     // statement-level tier (commands/trigger.c: FOR EACH STATEMENT —
     // the audit-log migration shape): a body of straight-line
     // INSERT/UPDATE/DELETE statements with no row context (no NEW/OLD/
@@ -3350,12 +3073,11 @@ object GpSqlDialect {
     // of the row tier: the SAME fn name can attach FOR EACH STATEMENT
     // even though it defers as a row trigger.
     locally {
-      val parts0 = splitStatements(rawBody).map(_.trim).filter(_.nonEmpty)
-      val dmls = parts0.takeWhile(p =>
+      val dmls = parts.takeWhile(p =>
         "(?is)^(INSERT|UPDATE|DELETE)\\b".r.findFirstIn(p).isDefined)
-      val rest = parts0.drop(dmls.length)
+      val rest = parts.drop(dmls.length)
       val noRowCtx = "(?i)(?<![\\w.])(NEW|OLD|TG_\\w+)(?![\\w])".r
-        .findFirstIn(maskLiterals(rawBody)).isEmpty
+        .findFirstIn(masked).isEmpty
       if (dmls.nonEmpty && noRowCtx &&
         (rest.isEmpty || (rest.length == 1 &&
           rest.head.matches("(?is)^RETURN\\s+(NULL|NEW)$"))))
@@ -3368,16 +3090,15 @@ object GpSqlDialect {
     // bind to the affected-rows relation at fire time. OLD use is
     // recorded so CREATE TRIGGER ... INSTEAD OF INSERT can reject it.
     locally {
-      val parts0 = splitStatements(rawBody).map(_.trim).filter(_.nonEmpty)
       def parseStep(p: String): Option[InsteadStep] = p match {
         case InsteadInsRe(tbl, cols, vals) =>
           Some(InsteadInsert(tbl.toLowerCase,
             Option(cols).map(_.split(",").map(_.trim.toLowerCase)
               .filter(_.nonEmpty).toSeq),
-            splitTopLevelCommas(vals).map(_.trim)))
+            SqlLex.split(vals, ',')))
         case InsteadUpdRe(tbl, sets, where) =>
           Some(InsteadUpdate(tbl.toLowerCase,
-            splitTopLevel(sets, ',').map { a =>
+            SqlLex.split(sets, ',').map { a =>
               val Array(k, v) = a.split("=", 2)
               k.trim.toLowerCase -> v.trim
             }, where.trim))
@@ -3385,26 +3106,16 @@ object GpSqlDialect {
           Some(InsteadDelete(tbl.toLowerCase, where.trim))
         case _ => None
       }
-      val steps = parts0.map(parseStep).takeWhile(_.isDefined).flatten
-      val rest = parts0.drop(steps.length)
-      val noTg = "(?i)(?<![\\w.])TG_\\w+".r
-        .findFirstIn(maskLiterals(rawBody)).isEmpty
+      val steps = parts.map(parseStep).takeWhile(_.isDefined).flatten
+      val rest = parts.drop(steps.length)
+      val noTg = "(?i)(?<![\\w.])TG_\\w+".r.findFirstIn(masked).isEmpty
       if (steps.nonEmpty && noTg &&
         (rest.isEmpty || (rest.length == 1 &&
           rest.head.matches("(?is)^RETURN\\s+(NULL|NEW|OLD)$")))) {
         triggerFnInsteadBodies(name) = steps
-        triggerFnInsteadUsesOld(name) =
-          "(?i)(?<![\\w.])OLD\\.".r
-            .findFirstIn(maskLiterals(rawBody)).isDefined
+        triggerFnInsteadUsesOld(name) = usesOld
       }
     }
-    val usesOld =
-      "(?i)(?<![\\w.])OLD\\.".r.findFirstIn(rawBody).isDefined
-    val body =
-      rawBody.replaceAll("(?i)(?<![\\w.])OLD\\.(\\w+)", "__trig_old_$1")
-    def stripNew(s: String): String =
-      s.replaceAll("(?i)(?<![\\w.])NEW\\.", "")
-    val parts = splitStatements(body).map(_.trim).filter(_.nonEmpty)
     val AssignNewRe = "(?is)^NEW\\.(\\w+)\\s*:=\\s*(.+)$".r
     val SkipIfRe = "(?is)^IF\\s+(.+?)\\s+THEN\\s+RETURN\\s+NULL$".r
     val steps = scala.collection.mutable.ArrayBuffer.empty[TrigStep]
@@ -3413,9 +3124,9 @@ object GpSqlDialect {
       parts(i) match {
         case SkipIfRe(cond) if i + 1 < parts.length &&
             parts(i + 1).matches("(?is)^END\\s+IF$") =>
-          steps += TrigSkip(stripNew(cond)); i += 2
+          steps += TrigSkip(trigTokens(cond)); i += 2
         case AssignNewRe(c, e) =>
-          steps += TrigAssign(c.toLowerCase, stripNew(e)); i += 1
+          steps += TrigAssign(c.toLowerCase, trigTokens(e)); i += 1
         case r if r.matches("(?is)^RETURN\\s+NEW$") && i == parts.length - 1 =>
           i += 1
         case other => return defer(firstStatement(other))
@@ -3449,9 +3160,7 @@ object GpSqlDialect {
     // column, OLD.col becomes the pre-image token; OLD in WHEN is
     // UPDATE-only for the same reason as OLD in the body
     val when = whenRaw.map { w =>
-      val t = w.trim
-        .replaceAll("(?i)(?<![\\w.])OLD\\.(\\w+)", "__trig_old_$1")
-        .replaceAll("(?i)(?<![\\w.])NEW\\.", "")
+      val t = trigTokens(w.trim)
       if (events.contains("insert") && OldTokenRe.findFirstIn(t).isDefined)
         throw new UnsupportedOperationException(
           s"trigger $trigName WHEN clause references OLD.* — OLD is " +
@@ -3603,7 +3312,7 @@ object GpSqlDialect {
       val pat = ("(?i)(?<![\\w.])(" +
         env.keys.map(java.util.regex.Pattern.quote).mkString("|") +
         ")(?![\\w.(])").r
-      mapOutsideLiterals(e)(run =>
+      SqlLex.mapCode(e)(run =>
         pat.replaceAllIn(run, m => java.util.regex.Matcher
           .quoteReplacement("(" + env(m.group(1).toLowerCase) + ")")))
     }
@@ -4111,7 +3820,7 @@ object GpSqlDialect {
   // column type in later DDL (SURVEY §1.4 composite → StructType) -----
   // greedy body capture anchored to the statement's final ')', so
   // parenthesized field types (a numeric(10,2)) stay inside the match;
-  // splitTopLevelCommas re-balances the nesting
+  // SqlLex.split re-balances the nesting
   private val CreateCompositeRe =
     "(?is)^\\s*CREATE\\s+TYPE\\s+(\\w+)\\s+AS\\s*(?!ENUM)\\((.*)\\)\\s*$".r
   val composites =
@@ -4230,8 +3939,8 @@ object GpSqlDialect {
     val m = CreateAggregateFullRe.findFirstMatchIn(sql).getOrElse {
       return defer("CREATE AGGREGATE statement shape not recognized")
     }
-    val argTypes = splitTopLevelCommas(m.group(2)).map(_.trim)
-    val opts = splitTopLevelCommas(m.group(3)).flatMap { kv =>
+    val argTypes = SqlLex.split(m.group(2), ',')
+    val opts = SqlLex.split(m.group(3), ',').flatMap { kv =>
       kv.split("=", 2) match {
         case Array(k, v) => Some(k.trim.toLowerCase -> v.trim)
         case _ => None
@@ -4425,9 +4134,12 @@ object GpSqlDialect {
   private val domains =
     scala.collection.concurrent.TrieMap.empty[String, GpDomain]
 
+  // a DEFAULT value: a quoted literal ('' escapes), a paren group or a
+  // bare token
+  private val DefaultValue = "('(?:[^']|'')*'|\\([^)]*\\)|\\S+)"
   private val CreateDomainRe =
     ("(?is)^\\s*CREATE\\s+DOMAIN\\s+(\\w+)\\s+AS\\s+([\\w ()]+?)" +
-      "(?:\\s+DEFAULT\\s+('[^']*'|\\([^)]*\\)|\\S+))?" +
+      s"(?:\\s+DEFAULT\\s+$DefaultValue)?" +
       "(?:\\s+CHECK\\s*\\((.+)\\))?\\s*$").r
   private val DropDomainRe =
     "(?is)^\\s*DROP\\s+DOMAIN\\s+(?:IF\\s+EXISTS\\s+)?(\\w+)\\s*$".r
@@ -4549,7 +4261,7 @@ object GpSqlDialect {
       "'(\\w+)'\\s*\\)\\s*(?:AS\\s+\\w+)?\\s*$").r
 
   private def rewriteCatalogNames(sql: String): String =
-    mapOutsideQuotes(sql)(
+    SqlLex.mapCode(sql)(
       _.replaceAll("(?i)\\binformation_schema\\.columns\\b",
         "information_schema_columns")
         .replaceAll("(?i)\\binformation_schema\\.tables\\b",
@@ -4839,25 +4551,11 @@ object GpSqlDialect {
   private val IncAggItemRe =
     "(?is)^\\s*(count|sum|min|max)\\s*\\(\\s*(\\*|[\\w.]+)\\s*\\)\\s+AS\\s+(\\w+)\\s*$".r
 
-  /** Split a select list on top-level commas (parens stay intact). */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var start = 0
-    s.zipWithIndex.foreach {
-      case ('(', _) => depth += 1
-      case (')', _) => depth -= 1
-      case (',', i) if depth == 0 => out += s.substring(start, i); start = i + 1
-      case _ =>
-    }
-    out += s.substring(start)
-    out.map(_.trim).filter(_.nonEmpty).toSeq
-  }
-
   private def parseIncremental(sql: String): Option[IncAgg] =
     IncMatViewRe.findFirstMatchIn(sql).flatMap { m =>
       val groupCols = m.group(4).split(",").map(_.trim.toLowerCase).toSeq
       if (!groupCols.forall(_.matches("\\w+"))) return None
-      val items = splitTopLevel(m.group(1))
+      val items = SqlLex.split(m.group(1), ',')
       val aggs = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
       val ok = items.forall {
         case item if groupCols.contains(item.trim.toLowerCase) => true
@@ -5332,7 +5030,7 @@ object GpSqlDialect {
     import org.apache.spark.sql.functions.{coalesce, expr, lit}
     import spark.implicits._
     val t = catalog(table)
-    val setPairs = splitTopLevel(setClause, ',').map { a =>
+    val setPairs = SqlLex.split(setClause, ',').map { a =>
       val Array(k, v) = a.split("=", 2)
       k.trim.toLowerCase -> v.trim
     }
@@ -5380,7 +5078,7 @@ object GpSqlDialect {
     import spark.implicits._
     rejectTriggersOn(table, Set("update"), "UPDATE ... FROM")
     val t = catalog(table)
-    val assignments = splitTopLevel(setClause, ',').map { a =>
+    val assignments = SqlLex.split(setClause, ',').map { a =>
       val Array(k, v) = a.split("=", 2)
       k.trim.toLowerCase -> expr(v.trim)
     }.toMap
@@ -5394,23 +5092,6 @@ object GpSqlDialect {
     refreshView(spark, t)
     reresolveDependentViews(spark, Set(table))
     Seq(table).toDF("updated_table")
-  }
-
-  /** Split on top-level `sep` (parens and quotes hide theirs). */
-  private[graft] def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var inQ = false
-    s.foreach {
-      case '\'' => inQ = !inQ; cur += '\''
-      case '(' if !inQ => depth += 1; cur += '('
-      case ')' if !inQ => depth -= 1; cur += ')'
-      case c if c == sep && depth == 0 && !inQ =>
-        out += cur.toString; cur.clear()
-      case c => cur += c
-    }
-    out += cur.toString
-    out.map(_.trim).filter(_.nonEmpty).toSeq
   }
 
   /** `CLUSTER table BY (cols)` (commands/cluster.c; GP REORGANIZE) →
@@ -5516,45 +5197,15 @@ object GpSqlDialect {
   private val CreateWithCols =
     "(?is)^\\s*CREATE\\s+TABLE\\s+(\\w+)\\s*\\(".r
 
-  /** Index of the ')' matching the '(' at `open`. */
-  private def matchParen(s: String, open: Int): Int = {
-    var d = 0
-    var i = open
-    var inQ = false // parens inside '...' are literal text
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQ) { if (c == '\'') inQ = false }
-      else if (c == '\'') inQ = true
-      else if (c == '(') d += 1
-      else if (c == ')') { d -= 1; if (d == 0) return i }
-      i += 1
-    }
-    -1
-  }
-
   /** Split a CTE body at the top-level UNION [ALL]. */
   private def splitTopLevelUnion(body: String): (String, String, Boolean) = {
-    val upper = body.toUpperCase
-    var d = 0
-    var i = 0
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (c == '(') d += 1
-      else if (c == ')') d -= 1
-      else if (d == 0 && upper.startsWith("UNION", i) &&
-        (i == 0 || !body.charAt(i - 1).isLetterOrDigit) &&
-        (i + 5 >= body.length || !body.charAt(i + 5).isLetterOrDigit)) {
-        val rest = body.substring(i + 5)
-        val restTrim = rest.dropWhile(_.isWhitespace)
-        val isAll = restTrim.toUpperCase.startsWith("ALL") &&
-          (restTrim.length == 3 || !restTrim.charAt(3).isLetterOrDigit)
-        val step = if (isAll) restTrim.substring(3) else rest
-        return (body.substring(0, i).trim, step.trim, isAll)
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(
+    val i = SqlLex.keyword(body, "UNION")
+    if (i < 0) throw new IllegalArgumentException(
       "WITH RECURSIVE body has no top-level UNION")
+    val rest = body.substring(i + 5).trim
+    val isAll = SqlLex.keyword(rest, "ALL") == 0
+    (body.substring(0, i).trim,
+      (if (isAll) rest.substring(3) else rest).trim, isAll)
   }
 
   /** `WITH RECURSIVE name [(cols)] AS ( seed UNION [ALL] step ) main`:
@@ -5573,7 +5224,7 @@ object GpSqlDialect {
     val open = m.end
     require(open < sql.length && sql.charAt(open) == '(',
       "expected ( after AS in WITH RECURSIVE")
-    val close = matchParen(sql, open)
+    val close = SqlLex.matchParen(sql, open)
     require(close > 0, "unbalanced parens in WITH RECURSIVE body")
     val (seedSql, stepSql, isAll) =
       splitTopLevelUnion(sql.substring(open + 1, close))
@@ -5647,7 +5298,7 @@ object GpSqlDialect {
 
   /** Parse an `AS t(name type, …)` column list to (name, type) pairs. */
   private def parseColSpec(spec: String): Seq[(String, DataType)] =
-    splitTopLevelCommas(spec).map { c =>
+    SqlLex.split(spec, ',').map { c =>
       val parts = c.trim.split("\\s+", 2)
       require(parts.length == 2, s"column def needs name + type: $c")
       (parts(0).toLowerCase, sparkType(parts(1)))
@@ -5839,13 +5490,13 @@ object GpSqlDialect {
                 val open = sql.indexWhere(!_.isWhitespace, pos + tm.end)
                 pos =
                   if (open >= 0 && sql.charAt(open) == '(')
-                    matchParen(sql, open) + 1
+                    SqlLex.matchParen(sql, open) + 1
                   else pos + tm.end
               case None =>
                 // the GP per-partition spec list is the next balanced group
                 val after = sql.indexWhere(!_.isWhitespace, pos)
                 if (after >= 0 && sql.charAt(after) == '(')
-                  pos = matchParen(sql, after) + 1
+                  pos = SqlLex.matchParen(sql, after) + 1
                 done = true
             }
           }
@@ -5868,20 +5519,8 @@ object GpSqlDialect {
     * entries lower as no-ops (no index machinery); CHECK and NOT NULL
     * are enforced on INSERT through the table's check list. */
   private def parseColumnDefs(defs: String): (Seq[ColDef], Seq[String]) = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var d = 0
-    var start = 0
-    var i = 0
-    while (i < defs.length) {
-      val c = defs.charAt(i)
-      if (c == '(') d += 1
-      else if (c == ')') d -= 1
-      else if (c == ',' && d == 0) { out += defs.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    out += defs.substring(start)
     val tableChecks = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cols = out.toSeq.map(_.trim).filter(_.nonEmpty).flatMap { cd =>
+    val cols = SqlLex.split(defs, ',').flatMap { cd =>
       if (TableConstraintRe.findFirstIn(cd).isDefined) {
         CheckClauseRe.findFirstMatchIn(cd).foreach(m => tableChecks += m.group(1))
         None
@@ -5890,14 +5529,13 @@ object GpSqlDialect {
         require(sp > 0, s"cannot parse column def: $cd")
         val name = cd.substring(0, sp)
         val noCheck = CheckClauseRe.replaceAllIn(cd, "")
-        val default = "(?is)\\bDEFAULT\\s+('[^']*'|\\([^)]*\\)|\\S+)".r
-          .findFirstMatchIn(noCheck).map(_.group(1))
+        val defaultRe = s"(?is)\\bDEFAULT\\s+$DefaultValue".r
+        val default = defaultRe.findFirstMatchIn(noCheck).map(_.group(1))
         val check = CheckClauseRe.findFirstMatchIn(cd).map(_.group(1))
-        val notNull =
-          "(?is)\\bNOT\\s+NULL\\b".r.findFirstIn(noCheck).isDefined
-        // drop trailing constraints from the type
-        val tpe = noCheck.substring(sp + 1).trim
-          .replaceAll("(?is)\\bDEFAULT\\s+('[^']*'|\\([^)]*\\)|\\S+)", "")
+        // type and constraints, without the default's literal text
+        val rest = defaultRe.replaceAllIn(noCheck.substring(sp + 1), "")
+        val notNull = "(?is)\\bNOT\\s+NULL\\b".r.findFirstIn(rest).isDefined
+        val tpe = rest
           .replaceAll("(?is)\\b(NOT\\s+NULL|NULL|PRIMARY\\s+KEY|UNIQUE)\\b", "")
           .trim
         Some(ColDef(name, tpe, default, check, notNull))
@@ -5944,7 +5582,7 @@ object GpSqlDialect {
         s"cannot parse CREATE TABLE: $gpSql"))
     val name = m.group(1).toLowerCase
     val open = ddl.cleanSql.indexOf('(', m.start)
-    val close = matchParen(ddl.cleanSql, open)
+    val close = SqlLex.matchParen(ddl.cleanSql, open)
     val (colDefs, tableChecks) =
       parseColumnDefs(ddl.cleanSql.substring(open + 1, close))
     val schema = StructType(colDefs.map(c =>
@@ -6150,9 +5788,9 @@ object GpSqlDialect {
       spark: SparkSession, name: String, rest: String,
       colList: Option[Seq[String]] = None): DataFrame = {
     // trailing RETURNING list (PG returns the inserted rows post-cast/
-    // default); quote-parity guard like SelectIntoRe
+    // default); a RETURNING inside a string literal is data
     "(?is)^(.*?)\\s+RETURNING\\s+(.+?)\\s*$".r.findFirstMatchIn(rest) match {
-      case Some(m) if m.group(1).count(_ == '\'') % 2 == 0 =>
+      case Some(m) if SqlLex.isCode(rest, m.end(1)) =>
         val t = catalog(name)
         // BEFORE ROW triggers fire on the aligned new tuples (post
         // defaults/casts, like PG); RETURNING reflects the post-trigger
@@ -6163,7 +5801,7 @@ object GpSqlDialect {
         appendFrame(spark, t, inserted)
         reresolveDependentViews(spark, Set(name))
         return inserted.selectExpr(
-          splitTopLevel(m.group(2), ','): _*)
+          SqlLex.split(m.group(2), ','): _*)
       case _ =>
     }
     val t = catalog(name)
@@ -6346,14 +5984,14 @@ object GpSqlDialect {
             s"MERGE: cannot parse NOT MATCHED action: $action"))
         insertCols = Option(im.group(1)).map(_.split(",")
           .map(_.trim.toLowerCase).filter(_.nonEmpty).toSeq)
-        insertVals = Some(splitTopLevel(im.group(2), ',').map(rewrite))
+        insertVals = Some(SqlLex.split(im.group(2), ',').map(rewrite))
         insertGuard = guard
       } else if (action.equalsIgnoreCase("DELETE")) {
         delete = true; deleteGuard = guard
       } else {
         val setClause = "(?is)^UPDATE\\s+SET\\s+(.+)$".r
           .findFirstMatchIn(action).get.group(1)
-        updateSet = Some(splitTopLevel(setClause, ',').map { a =>
+        updateSet = Some(SqlLex.split(setClause, ',').map { a =>
           val Array(k, v) = a.split("=", 2)
           k.trim.toLowerCase -> expr(rewrite(v.trim))
         }.toMap)
@@ -6442,7 +6080,7 @@ object GpSqlDialect {
         "ON CONFLICT DO UPDATE cannot affect the same row a second time")
       val setClause = "(?is)^UPDATE\\s+SET\\s+(.+)$".r
         .findFirstMatchIn(action.trim).get.group(1)
-      val assignments = splitTopLevel(setClause, ',').map { a =>
+      val assignments = SqlLex.split(setClause, ',').map { a =>
         val Array(k, v) = a.split("=", 2)
         // EXCLUDED.c → the renamed proposed-row column in the upsert join
         k.trim.toLowerCase ->
@@ -6581,7 +6219,7 @@ object GpSqlDialect {
     val writable = m.group(1) != null
     val name = m.group(2).toLowerCase
     val open = gpSql.indexOf('(', m.start + m.group(0).length - 1)
-    val close = matchParen(gpSql, open)
+    val close = SqlLex.matchParen(gpSql, open)
     val schema = StructType(
       parseColumnDefs(gpSql.substring(open + 1, close))._1.map(c =>
         StructField(c.name, sparkType(c.tpe))))

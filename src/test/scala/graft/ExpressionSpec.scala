@@ -1438,8 +1438,8 @@ class ExpressionSpec extends AnyFunSuite {
   test("GpSqlDialect scripts split correctly and PREPARE/EXECUTE substitutes") {
     Tables.registerAll(spark, sf)
     // splitter: quotes, $$ bodies and -- comments hide semicolons
-    assert(GpSqlDialect.splitStatements(
-      "SELECT 'a;b'; -- c;\nSELECT $$x;y$$; SELECT 1").size == 3)
+    assert(graft.sql.SqlLex.split(
+      "SELECT 'a;b'; -- c;\nSELECT $$x;y$$; SELECT 1", ';').size == 3)
     val last = GpSqlDialect.executeScript(spark,
       """PREPARE topn AS
         |  SELECT n_name FROM nation WHERE n_regionkey = $1
@@ -3068,5 +3068,61 @@ class ExpressionSpec extends AnyFunSuite {
       ("r1", "r0", 1, "r0.r1"),
       ("r2", "r1", 2, "r0.r1.r2"),
       ("r3", "r1", 2, "r0.r1.r3"))) // r4 is level 3 — cut by max_depth 2
+  }
+
+  // Quoted text is data: commas, keywords and NEW. references inside a
+  // literal must not steer the dialect's splits and rewrites.
+
+  test("a quoted comma in a column DEFAULT does not split the column " +
+    "list; '' and NOT NULL inside the literal are data") {
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_lex_default"
+    def run(sql: String) = GpSqlDialect.execute(spark, sql, base)
+    run("DROP TABLE IF EXISTS lex_def")
+    run("CREATE TABLE lex_def (id int, note text DEFAULT 'x,y', q int, " +
+      "tag text DEFAULT 'it''s NOT NULL')")
+    run("INSERT INTO lex_def (id, q) VALUES (1, 2)")
+    run("INSERT INTO lex_def (id, q, tag) VALUES (2, 3, NULL)")
+    val r = run("SELECT id, note, q, tag FROM lex_def ORDER BY id").collect()
+    assert(r.map(x => (x.getInt(0), x.getString(1), x.getInt(2),
+      x.getString(3))).toSeq ==
+      Seq((1, "x,y", 2, "it's NOT NULL"), (2, "x,y", 3, null)))
+  }
+
+  test("a quoted UNION in a recursive CTE seed is not the seed/step split") {
+    val out = GpSqlDialect.execute(spark,
+      """WITH RECURSIVE lex_r(n, s) AS (
+        |  SELECT 1, 'a union b'
+        |  UNION ALL
+        |  SELECT n + 1, s FROM lex_r WHERE n < 3)
+        |SELECT s FROM lex_r ORDER BY n""".stripMargin, "/tmp/never")
+    assert(out.collect().map(_.getString(0)).toSeq == Seq.fill(3)("a union b"))
+  }
+
+  test("a trigger assignment keeps NEW. inside its string literal") {
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_lex_trig"
+    def run(sql: String) = GpSqlDialect.execute(spark, sql, base)
+    run("DROP TABLE IF EXISTS lex_trig")
+    run("CREATE TABLE lex_trig (id int, note text)")
+    run("""CREATE FUNCTION lex_trig_fn() RETURNS trigger AS $$
+          |BEGIN
+          |  NEW.note := 'set NEW.note';
+          |  RETURN NEW;
+          |END $$ LANGUAGE plpgsql""".stripMargin)
+    run("CREATE TRIGGER lex_trig_t BEFORE INSERT ON lex_trig " +
+      "FOR EACH ROW EXECUTE PROCEDURE lex_trig_fn()")
+    run("INSERT INTO lex_trig VALUES (1, 'raw')")
+    assert(run("SELECT note FROM lex_trig").head.getString(0) ==
+      "set NEW.note")
+  }
+
+  test("a quoted FROM in a SQL function body keeps it a scalar expression") {
+    GpSqlDialect.execute(spark,
+      "CREATE FUNCTION lex_fromfn(x int) RETURNS text " +
+        "AS $$ SELECT 'from ' || x $$ LANGUAGE SQL", "/tmp/never")
+    assert(GpSqlDialect.inlineSqlFunctions("SELECT lex_fromfn(a) FROM t")
+      == "SELECT ('from ' || (a)) FROM t")
+    // a call spelled inside a literal is data, not a call
+    assert(GpSqlDialect.inlineSqlFunctions("SELECT 'lex_fromfn(a)' FROM t")
+      == "SELECT 'lex_fromfn(a)' FROM t")
   }
 }

@@ -458,4 +458,30 @@ class PropertySpec extends AnyFunSuite {
     assert(math.abs(grads.map(_._3).sum) < 1e-6)
     assert(b1 > 0.0) // labels trend up in x1
   }
+
+  test("SqlLex: quoted separators, escapes and bodies never split a piece") {
+    import graft.sql.SqlLex
+    // text that holds every separator the splitters look for
+    val inner = Gen.listOf(Gen.oneOf("a", "b", " ", ",", ";", "(", ")"))
+      .map(_.mkString)
+    val word = Gen.nonEmptyListOf(Gen.alphaChar).map(_.take(6).mkString)
+    val literal = Gen.listOf(Gen.oneOf(inner, Gen.const("''"),
+      Gen.const("\""))).map(_.mkString("'", "", "'"))
+    val ident = Gen.listOf(Gen.oneOf(inner, Gen.const("\"\""),
+      Gen.const("'"))).map(_.mkString("\"", "", "\""))
+    val dollar = Gen.listOf(Gen.oneOf(inner, Gen.const("'"),
+      Gen.const("\""))).map(_.mkString("$$", "", "$$"))
+    val comment = Gen.zip(inner, word).map { case (c, w) => s"-- $c\n$w" }
+    val atom = Gen.oneOf(word, literal, ident, dollar, comment)
+    val group = Gen.nonEmptyListOf(atom).map(_.take(3).mkString("(", ", ", ")"))
+    val frag = Gen.zip(word, Gen.listOf(Gen.oneOf(atom, group)))
+      .map { case (w, rest) => (w +: rest.take(4)).mkString(" ") }
+    for (frags <- samples(Gen.nonEmptyListOf(frag).map(_.take(5)), 200)) {
+      val commas = frags.mkString(",")
+      assert(SqlLex.split(commas, ',') == frags, commas)
+      assert(SqlLex.split(frags.mkString(";"), ';') == frags)
+      assert(SqlLex.mapCode(commas)(identity) == commas)
+      assert(SqlLex.mask(commas).length == commas.length)
+    }
+  }
 }
