@@ -56,47 +56,6 @@ object Dml {
       fs.delete(new Path(old), true)
   }
 
-  /** DELETE FROM path WHERE cond (SQL semantics: rows where cond is
-    * null are kept). Returns the deleted-row count, counted by an
-    * `observe()` metric riding the rewrite's own scan (r10: the caller
-    * previously ran a standalone `filter(cond).count()` — a SECOND full
-    * pass over the table per DELETE statement, guide §1.2/§5). */
-  def deleteWhere(spark: SparkSession, path: String, cond: Column,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): Long = {
-    // declared schema when the caller has one (the dialect catalog):
-    // inference runs a one-task footer-read job per call (r10)
-    val df = schema.fold(spark.read)(spark.read.schema).parquet(path)
-    val matched = coalesce(cond, lit(false))
-    val obs = org.apache.spark.sql.Observation()
-    val observed = df.observe(obs,
-      coalesce(sum(when(matched, 1L).otherwise(0L)), lit(0L)).as("n_hit"))
-    overwrite(spark, path, observed.filter(!matched))
-    obs.get("n_hit").asInstanceOf[Long]
-  }
-
-  /** UPDATE path SET assignments WHERE cond. Returns the updated-row
-    * count via the same single-pass `observe()` discipline as
-    * [[deleteWhere]]. */
-  def updateWhere(
-      spark: SparkSession, path: String,
-      assignments: Map[String, Column], cond: Column,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): Long = {
-    val df = schema.fold(spark.read)(spark.read.schema).parquet(path)
-    val matched = coalesce(cond, lit(false))
-    val obs = org.apache.spark.sql.Observation()
-    val observed = df.observe(obs,
-      coalesce(sum(when(matched, 1L).otherwise(0L)), lit(0L)).as("n_hit"))
-    val updated = observed.select(df.columns.map { c =>
-      assignments.get(c) match {
-        case Some(v) => when(matched, v)
-          .otherwise(col(c)).as(c)
-        case None => col(c)
-      }
-    }: _*)
-    overwrite(spark, path, updated)
-    obs.get("n_hit").asInstanceOf[Long]
-  }
-
   /** VACUUM FULL analogue (commands/vacuum.c; GP reclaims AO segment
     * files the same way): rewrite the table into ~`targetBytes` files.
     * Every DML here is copy-on-write, so the small-file problem arrives
@@ -118,96 +77,130 @@ object Dml {
     (before.size, dataFiles.size)
   }
 
-  /** UPDATE path SET assignments FROM source WHERE joinCond — PG/GP's
-    * correlated UPDATE ... FROM (grammar gram.y UpdateStmt from_clause;
-    * executor joins the result relation to the FROM list). Implemented
-    * as one left join; matched rows take the assignments (which may
-    * reference source columns), unmatched rows pass through. Like PG,
-    * which of several matching source rows wins is unspecified — pass a
-    * deduplicated source for deterministic results. */
-  def updateFrom(
-      spark: SparkSession, path: String, source: DataFrame,
-      joinCond: Column, assignments: Map[String, Column],
-      schema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
-    val df = schema.fold(spark.read)(spark.read.schema).parquet(path)
-    val src = source.withColumn("__matched", lit(true))
-    val joined = df.join(src, joinCond, "left")
-    val matched = coalesce(col("__matched"), lit(false))
-    val updated = joined.select(df.columns.map { c =>
-      assignments.get(c) match {
-        case Some(v) => when(matched, v).otherwise(df(c)).as(c)
-        case None => df(c).as(c)
-      }
-    }: _*)
-    // Multi-match guard (r8 review): a target row matching SEVERAL
-    // source rows would be MULTIPLIED by the left join and silently
-    // corrupt the table (PG's UPDATE ... FROM updates such a row once,
-    // from an arbitrary match — data-dependent nondeterminism we refuse
-    // rather than replicate). nBefore is parquet footer metadata; the
-    // join-result count rides the WRITE dataflow as an observed metric
-    // (r9 optimization: the previous standalone updated.count() executed
-    // the join a second time), and a violation aborts before the
-    // tmp→live rename, so the published table is never touched.
-    val nBefore = df.count()
+  /** The relation a MERGE joins to its target, with its ON condition. */
+  final case class Source(rows: DataFrame, on: Column)
+
+  /** What a WHEN MATCHED clause does to the target rows it takes. */
+  sealed trait MatchedAction
+  /** New values by lower-case column name; other columns keep theirs. */
+  final case class Update(set: Map[String, Column]) extends MatchedAction
+  case object Delete extends MatchedAction
+  /** The inserted row by lower-case column name; other columns are null. */
+  final case class Insert(values: Map[String, Column])
+
+  /** One WHEN clause. An absent guard always holds; a NULL guard does
+    * not. */
+  sealed trait When
+  final case class Matched(guard: Option[Column], action: MatchedAction)
+      extends When
+  final case class NotMatched(guard: Option[Column], insert: Insert)
+      extends When
+
+  private val TPresent = "__t_present"
+  private val SPresent = "__s_present"
+
+  /** The one copy-on-write DML rewrite (PG 15's ExecMerge; UPDATE and
+    * DELETE are the MERGE of the table with itself, GP's SplitUpdate the
+    * update that re-places its row). `target` is the table at `path`;
+    * `whens` run in order and the first clause whose guard holds takes
+    * the row, as one CASE chain. The join follows from the clauses:
+    *  - no source: one scan plus a filter or a projection;
+    *  - only an unguarded DELETE: a left-anti join;
+    *  - matched clauses only: a left join;
+    *  - any NOT MATCHED clause: a full outer join.
+    * A target row that two source rows match would come out twice, so
+    * the joins compare their target-side rows with the target's count
+    * and refuse before the swap (PG: "cannot affect row a second
+    * time"). The result replaces the table through [[overwrite]] with
+    * its Hive partition layout. Returns the affected-row count, counted
+    * by `observe()` metrics on the rewrite's own dataflow, not by a
+    * second pass. */
+  def merge(
+      spark: SparkSession, path: String, target: DataFrame,
+      source: Option[Source], whens: Seq[When],
+      partitionCols: Seq[String]): Long = {
+    val matched = whens.collect { case m: Matched => m }
+    val inserts = whens.collect { case n: NotMatched => n }
+    require(matched.nonEmpty || inserts.nonEmpty, "MERGE without WHEN clauses")
+    require(source.nonEmpty || inserts.isEmpty,
+      "WHEN NOT MATCHED needs a source relation")
     val obs = org.apache.spark.sql.Observation()
-    overwrite(spark, path,
-      updated.observe(obs, count(lit(1)).as("n_rows")),
-      validate = () => {
-        val nAfter = obs.get("n_rows").asInstanceOf[Long]
-        require(nAfter == nBefore,
-          s"UPDATE ... FROM matched multiple source rows for at least " +
-            s"one target row ($nBefore target rows, $nAfter join results)" +
-            " — PG would pick one match arbitrarily; dedup the source on" +
-            " the join keys instead")
-      })
-  }
-
-  /** MERGE INTO path USING source ON key: matched rows take the source's
-    * values, unmatched source rows are inserted, other target rows kept.
-    * Source must have the target's schema. */
-  def mergeInto(
-      spark: SparkSession, path: String, source: DataFrame,
-      key: String): Unit = {
-    val target = spark.read.parquet(path)
-    val cols = target.columns
-    // presence of the source key marks a matched-or-inserted row; using it
-    // (not per-column coalesce) lets a source row legitimately write NULL
-    val merged = target.alias("t")
-      .join(source.alias("s"), target(key) === source(key), "full_outer")
-      .select(cols.map { c =>
-        when(col(s"s.$key").isNotNull, col(s"s.$c"))
-          .otherwise(col(s"t.$c")).as(c)
-      }: _*)
-    overwrite(spark, path, merged)
-  }
-
-  /** `INSERT ... ON CONFLICT DO UPDATE` lowering (nodeModifyTable.c
-    * speculative insertion): ONE full-outer join on the conflict keys.
-    * Conflicting target rows take the assignment expressions — which may
-    * reference target columns by name and the proposed source row via
-    * `__exc_`-prefixed columns (the dialect rewrites `EXCLUDED.c` to
-    * `__exc_c`) — unmatched source rows insert, other target rows keep.
-    * NULL keys never conflict (unique-index semantics: === join). */
-  def upsert(
-      spark: SparkSession, path: String, source: DataFrame,
-      keys: Seq[String], assignments: Map[String, Column],
-      partitionCols: Seq[String] = Seq.empty,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): Unit = {
-    val target = schema.fold(spark.read)(spark.read.schema).parquet(path)
-    val cols = target.columns
-    val tgt = target.withColumn("__t_present", lit(true))
-    val exc = cols.foldLeft(source.toDF(cols.toSeq: _*))((d, c) =>
-      d.withColumnRenamed(c, s"__exc_$c"))
-      .withColumn("__s_present", lit(true))
-    val joinCond = keys.map(k => tgt(k) === exc(s"__exc_$k")).reduce(_ && _)
-    val merged = tgt.join(exc, joinCond, "full_outer")
-      .select(cols.map { c =>
-        when(col("__t_present") && col("__s_present"),
-          assignments.getOrElse(c.toLowerCase, tgt(c)))
-          .when(col("__s_present"), col(s"__exc_$c"))
-          .otherwise(tgt(c))
-          .cast(target.schema(c).dataType).as(c)
-      }: _*)
-    overwrite(spark, path, merged, partitionCols)
+    source match {
+      case Some(src) if whens == Seq(Matched(None, Delete)) =>
+        // target rows with any match drop; counting both sides of the
+        // join gives the deleted rows without a second pass
+        val all = org.apache.spark.sql.Observation()
+        val kept = target.observe(all, count(lit(1)).as("n"))
+          .join(src.rows, src.on, "left_anti")
+          .observe(obs, count(lit(1)).as("n"))
+        overwrite(spark, path, kept, partitionCols)
+        all.get("n").asInstanceOf[Long] - obs.get("n").asInstanceOf[Long]
+      case _ =>
+        val tgt =
+          if (inserts.isEmpty) target else target.withColumn(TPresent, lit(true))
+        val rows = source.fold(tgt) { src =>
+          tgt.join(src.rows.withColumn(SPresent, lit(true)), src.on,
+            if (inserts.isEmpty) "left" else "full_outer")
+        }
+        def present(c: String) = coalesce(col(c), lit(false))
+        // the row classes each clause kind can take (None: every row)
+        val matchedRow = source.map(_ =>
+          if (inserts.isEmpty) present(SPresent)
+          else present(TPresent) && present(SPresent))
+        val sourceOnly = present(SPresent) && !present(TPresent)
+        def hit(scope: Option[Column], guard: Option[Column]): Column =
+          (scope ++ guard.map(g => coalesce(g, lit(false))))
+            .reduceOption(_ && _).getOrElse(lit(true))
+        val mHits = matched.map(m => hit(matchedRow, m.guard))
+        val iHits = inserts.map(n => hit(Some(sourceOnly), n.guard))
+        def firstOf(arms: Seq[(Column, Column)], otherwise: Column): Column =
+          arms.tail.foldLeft(when(arms.head._1, arms.head._2)) {
+            case (acc, (c, v)) => acc.when(c, v) }.otherwise(otherwise)
+        // dropped: the first matched clause that holds is a DELETE, or a
+        // source-only row that no NOT MATCHED clause inserts
+        val deleted =
+          if (!matched.exists(_.action == Delete)) None
+          else if (matched.forall(_.action == Delete))
+            Some(mHits.reduce(_ || _))
+          else Some(firstOf(
+            mHits.zip(matched).map { case (h, m) => h -> lit(m.action == Delete) },
+            lit(false)))
+        val unInserted =
+          if (inserts.isEmpty) None else Some(sourceOnly && !iHits.reduce(_ || _))
+        // the multi-match check counts the join's target-side rows
+        val nTarget = source.map(_ => target.count())
+        val checked = nTarget.map(_ =>
+          (if (inserts.isEmpty) count(lit(1)) else count(col(TPresent)))
+            .as("n_rows")).toSeq
+        val observed = rows.observe(obs,
+          coalesce(sum(when((mHits ++ iHits).reduce(_ || _), 1L)
+            .otherwise(0L)), lit(0L)).as("n_hit"), checked: _*)
+        val survivors = (deleted ++ unInserted).reduceOption(_ || _)
+          .fold(observed)(d => observed.filter(!d))
+        // a DELETE arm never shows in a surviving row's values, and the
+        // arms after the last one that sets `c` all keep `c`
+        val next = survivors.select(target.schema.fields.toSeq.map { f =>
+          val lc = f.name.toLowerCase
+          val arms = mHits.zip(matched).collect {
+            case (h, Matched(_, Update(set))) => h -> set.get(lc)
+          } ++ iHits.zip(inserts).map { case (h, n) =>
+            h -> Some(n.insert.values.getOrElse(lc, lit(null)))
+          }
+          val setting = arms.take(arms.lastIndexWhere(_._2.nonEmpty) + 1)
+          val old = tgt(f.name)
+          if (setting.isEmpty) old
+          else firstOf(setting.map { case (h, v) => h -> v.getOrElse(old) },
+            old).cast(f.dataType).as(f.name)
+        }: _*)
+        overwrite(spark, path, next, partitionCols, validate = () =>
+          nTarget.foreach { n =>
+            val nRows = obs.get("n_rows").asInstanceOf[Long]
+            require(nRows == n,
+              s"a target row matched multiple source rows ($n target rows," +
+                s" $nRows join results) and a command cannot affect a row" +
+                " a second time; dedup the source on the join keys")
+          })
+        obs.get("n_hit").asInstanceOf[Long]
+    }
   }
 }

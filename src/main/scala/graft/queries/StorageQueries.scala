@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
 import graft.aggregates.GeoMean
+import graft.operators.Dml
 import graft.sources.{ExternalTables, ForeignTables}
 import graft.sql.{GpMapReduce, GpSqlDialect}
 
@@ -12,6 +13,19 @@ object StorageQueries {
 
   private def tmp(name: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_$name"
+
+  /** MERGE of `source` (the target's columns) into the table at `path`
+    * on `key`: matched rows take the source row, the others insert. */
+  private def upsertOn(
+      s: org.apache.spark.sql.SparkSession, path: String,
+      source: org.apache.spark.sql.DataFrame, key: String): Unit = {
+    val row = source.columns.map(c => c -> col(s"s_$c")).toMap
+    Dml.merge(s, path, s.read.parquet(path),
+      Some(Dml.Source(source.toDF(source.columns.map("s_" + _): _*),
+        col(key) === col(s"s_$key"))),
+      Seq(Dml.Matched(None, Dml.Update(row)),
+        Dml.NotMatched(None, Dml.Insert(row))), Nil)
+  }
 
   /** Shared fixture: orders partitioned by year (q_partitioned_scan, q_dpp). */
   private val writeOrdersByYear: (org.apache.spark.sql.SparkSession, String) => Unit =
@@ -384,7 +398,9 @@ object StorageQueries {
       (s, dir) =>
         import s.implicits._
         val path = tmp("dml_delete_orders")
-        graft.operators.Dml.deleteWhere(s, path, col("o_orderstatus") === "F")
+        Dml.merge(s, path, s.read.parquet(path), None,
+          Seq(Dml.Matched(Some(col("o_orderstatus") === "F"), Dml.Delete)),
+          Nil)
         s.read.parquet(path)
           .groupBy($"o_orderstatus")
           .agg(count(lit(1)).as("n"), Q.dsum($"o_totalprice").as("total"))
@@ -406,9 +422,10 @@ object StorageQueries {
       (s, dir) =>
         import s.implicits._
         val path = tmp("dml_update_orders")
-        graft.operators.Dml.updateWhere(s, path,
-          Map("o_totalprice" -> (col("o_totalprice") * 1.1)),
-          col("o_orderstatus") === "O")
+        Dml.merge(s, path, s.read.parquet(path), None,
+          Seq(Dml.Matched(Some(col("o_orderstatus") === "O"),
+            Dml.Update(Map("o_totalprice" -> (col("o_totalprice") * 1.1))))),
+          Nil)
         s.read.parquet(path)
           .groupBy($"o_orderstatus")
           .agg(count(lit(1)).as("n"), Q.dsum($"o_totalprice").as("total"))
@@ -434,9 +451,11 @@ object StorageQueries {
       val building = Tables.T(s, dir).customer
         .filter($"c_mktsegment" === "BUILDING")
         .select($"c_custkey")
-      graft.operators.Dml.updateFrom(s, path, building,
-        col("o_custkey") === col("c_custkey"),
-        Map("o_totalprice" -> (col("o_totalprice") * 0.9)))
+      Dml.merge(s, path, s.read.parquet(path),
+        Some(Dml.Source(building, col("o_custkey") === col("c_custkey"))),
+        Seq(Dml.Matched(None,
+          Dml.Update(Map("o_totalprice" -> (col("o_totalprice") * 0.9))))),
+        Nil)
       s.read.parquet(path)
         .groupBy($"o_orderstatus")
         .agg(count(lit(1)).as("n"), Q.dsum($"o_totalprice").as("total"))
@@ -462,7 +481,7 @@ object StorageQueries {
         val o = Tables.T(s, dir).orders
         val source = o.filter($"o_orderkey" > 1500 && $"o_orderkey" <= 4500)
           .withColumn("o_totalprice", $"o_totalprice" + 1000)
-        graft.operators.Dml.mergeInto(s, path, source, "o_orderkey")
+        upsertOn(s, path, source, "o_orderkey")
         s.read.parquet(path)
           .agg(count(lit(1)).as("n"), Q.dsum($"o_totalprice").as("total"))
     },
@@ -491,7 +510,7 @@ object StorageQueries {
       val source = Tables.T(s, dir).orders
         .filter($"o_orderkey" > 1000 && $"o_orderkey" <= 2500)
         .withColumn("o_totalprice", $"o_totalprice" + 1000)
-      graft.operators.Dml.mergeInto(s, path, source, "o_orderkey")
+      upsertOn(s, path, source, "o_orderkey")
       graft.operators.Cdc.changes(s, path, Seq("o_orderkey"))
         .select($"o_orderkey", $"op",
           $"old_row.o_totalprice".as("old_price"),
@@ -804,7 +823,7 @@ object StorageQueries {
     // applied) as columns of ONE derived relation; the body's
     // UPDATE/DELETE/INSERT statements against base tables run
     // SET-BASED over it — the update is one equi-join
-    // (Dml.updateFrom), the delete one left-anti join, the audit
+    // (Dml.merge), the delete one left-anti join, the audit
     // insert one projection. Zero per-row calls at any row count.
     Q("q_dml_trigger_instead_ud", Some(
       """WITH ins AS (SELECT CAST(c_custkey AS BIGINT) AS id,

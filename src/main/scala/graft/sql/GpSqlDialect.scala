@@ -3,7 +3,7 @@ package graft.sql
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.operators.SequenceOps
+import graft.operators.{Dml, SequenceOps}
 
 /** GPDB DDL dialect shim (SURVEY §3.4 / §7.3): accepts the MPP clauses of
   * `CREATE TABLE` — `DISTRIBUTED BY (cols)` / `DISTRIBUTED RANDOMLY` /
@@ -1784,12 +1784,11 @@ object GpSqlDialect {
       }
     }
     val lv = java.util.regex.Pattern.quote(loopVar)
-    val df = execute(spark, sel, basePath)
-    df.toDF(df.columns.map(c => "__src_" + c.toLowerCase).toIndexedSeq: _*)
+    prefixed(execute(spark, sel, basePath))
       .createOrReplaceTempView("__loop_src")
     def deref(e: String): String =
       s"(?i)(?<![\\w.])$lv\\.(\\w+)".r
-        .replaceAllIn(e, m => "__src_" + m.group(1).toLowerCase)
+        .replaceAllIn(e, m => SrcPrefix + m.group(1).toLowerCase)
     parsed.foreach { case (_, st) =>
       st match {
         case LoopInsertValsRe(t, cols, vals) =>
@@ -1800,12 +1799,9 @@ object GpSqlDialect {
         case LoopUpdateRe(t, set, cond) =>
           executeUpdateFrom(spark, t, deref(set), "__loop_src", deref(cond))
         case LoopDeleteRe(t, cond) =>
-          val tb = catalog(t)
-          val remaining = spark.read.parquet(tb.path)
-            .join(spark.table("__loop_src"), expr(deref(cond)), "left_anti")
-          graft.operators.Dml.overwrite(spark, tb.path, remaining,
-            tb.partitionCols)
-          refreshView(spark, tb)
+          mergeTable(spark, catalog(t), Some(Dml.Source(
+            dmlSource(spark, "__loop_src"), expr(deref(cond)))),
+            Seq(Dml.Matched(None, Dml.Delete)))
       }
       ()
     }
@@ -2078,15 +2074,14 @@ object GpSqlDialect {
         ()
       case PlForUpdateRe(v, sel, table, set, cond) =>
         // row-at-a-time UPDATE loop → ONE set-based UPDATE ... FROM;
-        // source columns take a __src_ prefix so bare references in
+        // source columns take the source prefix so bare references in
         // SET/WHERE unambiguously mean the TARGET table
         val lv = java.util.regex.Pattern.quote(v)
-        val df = execute(spark, sel, basePath)
-        df.toDF(df.columns.map("__src_" + _).toIndexedSeq: _*)
+        prefixed(execute(spark, sel, basePath))
           .createOrReplaceTempView("__loop_src")
         def deref(e: String): String =
           s"(?i)(?<![\\w.])$lv\\.(\\w+)".r
-            .replaceAllIn(e, m => "__src_" + m.group(1))
+            .replaceAllIn(e, m => SrcPrefix + m.group(1).toLowerCase)
         executeUpdateFrom(spark, table, deref(set), "__loop_src",
           deref(cond))
         ()
@@ -2762,9 +2757,10 @@ object GpSqlDialect {
     * statement evaluates SET-BASED against ALL affected rows at once.
     * Body INSERTs still fire base-table BEFORE ROW triggers (PG
     * nesting); body UPDATE/DELETE reject on triggered bases like the
-    * other composed DML paths. Afterwards base temp views refresh and
-    * dependent views re-resolve (their registered temp views captured
-    * the parquet file listing before these writes). */
+    * other composed DML paths. Afterwards views that read a table the
+    * body inserted into re-resolve (their registered temp views captured
+    * the parquet file listing before these writes; UPDATE and DELETE
+    * steps re-resolve theirs in [[mergeTable]]). */
   private def runInsteadSteps(
       spark: SparkSession, trigName: String, fn: String,
       bound: DataFrame): Unit = {
@@ -2788,23 +2784,20 @@ object GpSqlDialect {
         case InsteadUpdate(table, sets, where) =>
           rejectTriggersOn(table, Set("update"),
             "an INSTEAD OF body UPDATE")
-          val assignments = sets.map { case (k, v) =>
-            k -> expr(substNewOld(v)) }.toMap
-          graft.operators.Dml.updateFrom(
-            spark, t.path, bound, expr(substNewOld(where)), assignments)
-          refreshView(spark, t)
+          mergeTable(spark, t,
+            Some(Dml.Source(bound, expr(substNewOld(where)))),
+            Seq(Dml.Matched(None, Dml.Update(sets.map { case (k, v) =>
+              k -> expr(substNewOld(v)) }.toMap))))
         case InsteadDelete(table, where) =>
           rejectTriggersOn(table, Set("delete"),
             "an INSTEAD OF body DELETE")
-          val target = readTable(spark, t)
-          val remaining = target.join(
-            bound, expr(substNewOld(where)), "left_anti")
-          graft.operators.Dml.overwrite(
-            spark, t.path, remaining, t.partitionCols)
-          refreshView(spark, t)
+          mergeTable(spark, t,
+            Some(Dml.Source(bound, expr(substNewOld(where)))),
+            Seq(Dml.Matched(None, Dml.Delete)))
       }
     }
-    reresolveDependentViews(spark, steps.map(_.table).toSet)
+    reresolveDependentViews(spark,
+      steps.collect { case InsteadInsert(table, _, _) => table }.toSet)
   }
 
   /** INSERT INTO a view bearing an INSTEAD OF INSERT trigger: align
@@ -2855,10 +2848,7 @@ object GpSqlDialect {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit}
     val (trigName, fn) = viewInsteadTriggers(s"$view/update")
     val v = spark.table(view)
-    val setPairs = SqlLex.split(setClause, ',').map { a =>
-      val Array(k, s) = a.split("=", 2)
-      k.trim.toLowerCase -> s.trim
-    }.toMap
+    val setPairs = setList(setClause).toMap
     setPairs.keys.foreach(k =>
       require(v.columns.map(_.toLowerCase).contains(k),
         s"UPDATE $view: column $k does not exist in the view"))
@@ -3097,11 +3087,7 @@ object GpSqlDialect {
               .filter(_.nonEmpty).toSeq),
             SqlLex.split(vals, ',')))
         case InsteadUpdRe(tbl, sets, where) =>
-          Some(InsteadUpdate(tbl.toLowerCase,
-            SqlLex.split(sets, ',').map { a =>
-              val Array(k, v) = a.split("=", 2)
-              k.trim.toLowerCase -> v.trim
-            }, where.trim))
+          Some(InsteadUpdate(tbl.toLowerCase, setList(sets), where.trim))
         case InsteadDelRe(tbl, where) =>
           Some(InsteadDelete(tbl.toLowerCase, where.trim))
         case _ => None
@@ -4784,7 +4770,7 @@ object GpSqlDialect {
   }
 
   /** `VACUUM [FULL] table` (commands/vacuum.c) → file compaction of the
-    * catalog table ([[graft.operators.Dml.compact]]). */
+    * catalog table ([[Dml.compact]]). */
   private val VacuumRe =
     "(?is)^\\s*VACUUM\\s+(?:FULL\\s+)?(\\w+)\\s*$".r
 
@@ -4818,8 +4804,7 @@ object GpSqlDialect {
     val redistributed =
       if (newDist.nonEmpty) df.repartition(parts, newDist.map(df.col): _*)
       else df.repartition(parts)
-    graft.operators.Dml.overwrite(spark, t.path, redistributed,
-      t.partitionCols)
+    Dml.overwrite(spark, t.path, redistributed, t.partitionCols)
     catalog.put(table, t.copy(distributionCols = newDist))
     refreshView(spark, catalog(table))
   }
@@ -4940,8 +4925,7 @@ object GpSqlDialect {
       case other => throw new UnsupportedOperationException(
         s"ALTER TABLE $table: unsupported action '${other.trim}'")
     }
-    next.foreach(graft.operators.Dml.overwrite(spark, t.path, _,
-      t.partitionCols))
+    next.foreach(Dml.overwrite(spark, t.path, _, t.partitionCols))
     val reloaded = spark.read.parquet(t.path)
     reloaded.createOrReplaceTempView(table)
     val defaults = action match {
@@ -5017,10 +5001,8 @@ object GpSqlDialect {
     val ret = returning.map(r =>
       df.filter(coalesce(cond, lit(false)))
         .selectExpr(r.split(",").map(_.trim): _*).localCheckpoint(true))
-    val nDeleted = graft.operators.Dml.deleteWhere(spark, t.path, cond,
-      if (t.partitionCols.isEmpty) Some(t.schema) else None)
-    refreshView(spark, t)
-    reresolveDependentViews(spark, Set(table))
+    val nDeleted = mergeTable(spark, t, None,
+      Seq(Dml.Matched(Some(cond), Dml.Delete)))
     ret.getOrElse(Seq(nDeleted).toDF("deleted"))
   }
 
@@ -5030,14 +5012,11 @@ object GpSqlDialect {
     import org.apache.spark.sql.functions.{coalesce, expr, lit}
     import spark.implicits._
     val t = catalog(table)
-    val setPairs = SqlLex.split(setClause, ',').map { a =>
-      val Array(k, v) = a.split("=", 2)
-      k.trim.toLowerCase -> v.trim
-    }
     // BEFORE UPDATE row triggers compose over the SET clause in text
     // space (the SET is the initial NEW image; trigger skips AND into
     // the update predicate) — the rewritten UPDATE stays one pass
-    val (effPairs, trigSkips) = composeUpdateTriggers(table, setPairs)
+    val (effPairs, trigSkips) =
+      composeUpdateTriggers(table, setList(setClause))
     val assignments = effPairs.map { case (k, v) => k -> expr(v) }.toMap
     val baseCond = where.map(expr).getOrElse(lit(true))
     val cond = trigSkips.foldLeft(baseCond) { (c, sk) =>
@@ -5054,18 +5033,15 @@ object GpSqlDialect {
             org.apache.spark.sql.functions.col(c)).as(c)): _*)
       updated.selectExpr(r.split(",").map(_.trim): _*).localCheckpoint(true)
     }
-    val nUpdated =
-      graft.operators.Dml.updateWhere(spark, t.path, assignments, cond,
-        if (t.partitionCols.isEmpty) Some(t.schema) else None)
-    refreshView(spark, t)
-    reresolveDependentViews(spark, Set(table))
+    val nUpdated = mergeTable(spark, t, None,
+      Seq(Dml.Matched(Some(cond), Dml.Update(assignments))))
     ret.getOrElse(Seq(nUpdated).toDF("updated"))
   }
 
   /** `UPDATE t SET a = expr, ... FROM src WHERE cond` (PG's correlated
-    * update; gram.y update from_clause) → one left join via
-    * [[graft.operators.Dml.updateFrom]]. Assignment expressions and the
-    * join condition may reference `src` columns; `src` can be any
+    * update; gram.y update from_clause) → one left join in
+    * [[Dml.merge]]. Assignment expressions and the join condition may
+    * reference `src` columns by their bare names; `src` can be any
     * registered relation or catalog table. */
   private val UpdateFromRe =
     ("(?is)^\\s*UPDATE\\s+(\\w+)\\s+SET\\s+(.+?)\\s+FROM\\s+(\\w+)" +
@@ -5077,20 +5053,11 @@ object GpSqlDialect {
     import org.apache.spark.sql.functions.expr
     import spark.implicits._
     rejectTriggersOn(table, Set("update"), "UPDATE ... FROM")
-    val t = catalog(table)
-    val assignments = SqlLex.split(setClause, ',').map { a =>
-      val Array(k, v) = a.split("=", 2)
-      k.trim.toLowerCase -> expr(v.trim)
-    }.toMap
-    val src = catalog.get(srcName.toLowerCase) match {
-      case Some(s) if s.format != "csv" => readTable(spark, s)
-      case _ => spark.table(srcName)
-    }
-    graft.operators.Dml.updateFrom(
-      spark, t.path, src, expr(whereCond), assignments,
-      if (t.partitionCols.isEmpty) Some(t.schema) else None)
-    refreshView(spark, t)
-    reresolveDependentViews(spark, Set(table))
+    val assignments = setList(setClause).map { case (k, v) =>
+      k -> expr(v) }.toMap
+    mergeTable(spark, catalog(table),
+      Some(Dml.Source(dmlSource(spark, srcName), expr(whereCond))),
+      Seq(Dml.Matched(None, Dml.Update(assignments))))
     Seq(table).toDF("updated_table")
   }
 
@@ -5114,7 +5081,7 @@ object GpSqlDialect {
     import spark.implicits._
     val t = catalog.getOrElse(table, throw new IllegalArgumentException(
       s"VACUUM target $table is not a graft catalog table"))
-    val (before, after) = graft.operators.Dml.compact(spark, t.path)
+    val (before, after) = Dml.compact(spark, t.path)
     refreshView(spark, t)
     Seq((table, before, after)).toDF("table", "files_before", "files_after")
   }
@@ -5871,37 +5838,31 @@ object GpSqlDialect {
     *    WHEN MATCHED [AND guard] THEN UPDATE SET ... | DELETE
     *    WHEN NOT MATCHED [AND guard] THEN INSERT [(cols)] VALUES (...)`
     * (PG 15 / GP 7 parse_merge.c, executor nodeModifyTable.c
-    * ExecMerge): ONE full-outer join on the merge condition; each
-    * output row picks its branch — matched rows update in place or
-    * drop (DELETE), source-only rows insert, target-only rows keep.
-    * Source columns are addressable via the source alias; alias
-    * references are rewritten onto the prefixed join columns. */
+    * ExecMerge) → [[Dml.merge]] with the clauses in statement order:
+    * the first clause whose condition holds takes the row. Source
+    * columns are addressable via the source alias; alias references
+    * are rewritten onto the prefixed join columns. */
   private val MergeRe =
     ("(?is)^\\s*MERGE\\s+INTO\\s+(\\w+)(?:\\s+(?:AS\\s+)?(\\w+))?" +
       "\\s+USING\\s+(\\w+)(?:\\s+(?:AS\\s+)?(\\w+))?\\s+ON\\s+(.+?)" +
       "(\\s+WHEN\\s+(?:NOT\\s+)?MATCHED\\b.+)$").r
 
-  /** Rewrite relation-qualified references for the two-table DML joins:
-    * source alias → `__src_`-prefixed join columns, target alias →
-    * bare names, bare source-only columns → prefixed. */
+  /** Rewrite relation-qualified references for the two-table DML joins
+    * over `t` and `src`: source alias → [[prefixed]] join columns,
+    * target alias → bare names, bare source-only columns → prefixed. */
   private def rewriteRelRefs(
       e: String, tName: String, tAlias: Option[String], sName: String,
-      sAlias: Option[String], srcCols: Set[String],
-      tgtCols: Set[String]): String = {
-    var out = e
-    sAlias.orElse(Some(sName)).foreach { a =>
-      out = out.replaceAll("(?i)\\b" + java.util.regex.Pattern.quote(a) +
-        "\\.(\\w+)", "__src_$1")
+      sAlias: Option[String], src: DataFrame, t: GpTable): String = {
+    def quoted(a: String) = java.util.regex.Pattern.quote(a)
+    val srcOnly = src.columns.map(_.toLowerCase).toSet --
+      t.schema.fieldNames.map(_.toLowerCase)
+    srcOnly.foldLeft(
+      e.replaceAll(s"(?i)\\b${quoted(sAlias.getOrElse(sName))}\\.(\\w+)",
+        SrcPrefix + "$1")
+        .replaceAll(s"(?i)\\b${quoted(tAlias.getOrElse(tName))}\\.(\\w+)",
+          "$1")) { (out, c) =>
+      out.replaceAll(s"(?i)\\b${quoted(c)}\\b(?!\\w)", SrcPrefix + c)
     }
-    tAlias.orElse(Some(tName)).foreach { a =>
-      out = out.replaceAll("(?i)\\b" + java.util.regex.Pattern.quote(a) +
-        "\\.(\\w+)", "$1")
-    }
-    (srcCols -- tgtCols).foreach { c =>
-      out = out.replaceAll("(?i)\\b" + java.util.regex.Pattern.quote(c) +
-        "\\b(?!\\w)", s"__src_$c")
-    }
-    out
   }
 
   /** `DELETE FROM t [AS a] USING s [AS b] WHERE cond` (PG gram.y
@@ -5916,129 +5877,57 @@ object GpSqlDialect {
   def executeDeleteUsing(
       spark: SparkSession, tName: String, tAlias: Option[String],
       sName: String, sAlias: Option[String], cond: String): DataFrame = {
-    import org.apache.spark.sql.functions.{expr, lit}
+    import org.apache.spark.sql.functions.expr
     import spark.implicits._
     val t = catalog(tName)
-    val src0 = catalog.get(sName) match {
-      case Some(s) if s.format != "csv" => spark.read.parquet(s.path)
-      case _ => spark.table(sName)
-    }
-    val srcCols = src0.columns.map(_.toLowerCase).toSet
-    val tgtCols = t.schema.fieldNames.map(_.toLowerCase).toSet
-    val exc = src0.columns.foldLeft(src0)((d, c) =>
-      d.withColumnRenamed(c, s"__src_${c.toLowerCase}"))
-    val target = readTable(spark, t)
-    val remaining = target.join(exc,
-      expr(rewriteRelRefs(cond, tName, tAlias, sName, sAlias,
-        srcCols, tgtCols)), "left_anti")
-    graft.operators.Dml.overwrite(spark, t.path, remaining,
-      t.partitionCols)
-    refreshView(spark, t)
-    reresolveDependentViews(spark, Set(tName.toLowerCase))
+    val src = dmlSource(spark, sName)
+    mergeTable(spark, t, Some(Dml.Source(prefixed(src),
+      expr(rewriteRelRefs(cond, tName, tAlias, sName, sAlias, src, t)))),
+      Seq(Dml.Matched(None, Dml.Delete)))
     Seq(tName).toDF("deleted_from")
   }
+
   private val WhenClauseRe =
     ("(?is)\\bWHEN\\s+(NOT\\s+)?MATCHED(?:\\s+AND\\s+(.+?))?\\s+THEN\\s+" +
       "(UPDATE\\s+SET\\s+.+?|DELETE|INSERT\\b.*?)" +
       "(?=\\s+WHEN\\s+(?:NOT\\s+)?MATCHED|\\s*$)").r
 
+  private val MergeInsertRe =
+    "(?is)^INSERT\\s*(?:\\(([^)]*)\\)\\s*)?VALUES\\s*\\((.+)\\)\\s*$".r
+
   def executeMerge(
       spark: SparkSession, tName: String, tAlias: Option[String],
       sName: String, sAlias: Option[String], onCond: String,
       whenClauses: String): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
+    import org.apache.spark.sql.functions.expr
     import spark.implicits._
     rejectTriggersOn(tName, Set("insert", "update"), "MERGE")
     val t = catalog(tName)
-    val src0 = catalog.get(sName) match {
-      case Some(s) if s.format != "csv" => spark.read.parquet(s.path)
-      case _ => spark.table(sName)
-    }
-    // alias-qualified references: source alias → prefixed join columns,
-    // target alias → bare; bare source-only columns also prefix
-    val srcCols = src0.columns.map(_.toLowerCase).toSet
-    val tgtCols = t.schema.fieldNames.map(_.toLowerCase).toSet
-    def rewrite(e: String): String =
-      rewriteRelRefs(e, tName, tAlias, sName, sAlias, srcCols, tgtCols)
-    val exc = src0.columns.foldLeft(src0)((d, c) =>
-      d.withColumnRenamed(c, s"__src_${c.toLowerCase}"))
-      .withColumn("__s_present", lit(true))
-    val tgt = readTable(spark, t).withColumn("__t_present", lit(true))
-    val joined = tgt.join(exc, expr(rewrite(onCond)), "full_outer")
-
-    var updateSet: Option[Map[String, org.apache.spark.sql.Column]] = None
-    var updateGuard: Option[String] = None
-    var delete = false
-    var deleteGuard: Option[String] = None
-    var insertCols: Option[Seq[String]] = None
-    var insertVals: Option[Seq[String]] = None
-    var insertGuard: Option[String] = None
-    WhenClauseRe.findAllMatchIn(whenClauses).foreach { m =>
-      val notMatched = m.group(1) != null
+    val src = dmlSource(spark, sName)
+    def rewrite(e: String) =
+      expr(rewriteRelRefs(e, tName, tAlias, sName, sAlias, src, t))
+    val whens = WhenClauseRe.findAllMatchIn(whenClauses).map { m =>
       val guard = Option(m.group(2)).map(rewrite)
       val action = m.group(3).trim
-      if (notMatched) {
-        val im = ("(?is)^INSERT\\s*(?:\\(([^)]*)\\)\\s*)?" +
-          "VALUES\\s*\\((.+)\\)\\s*$").r.findFirstMatchIn(action)
+      if (m.group(1) != null) {
+        val im = MergeInsertRe.findFirstMatchIn(action)
           .getOrElse(throw new IllegalArgumentException(
             s"MERGE: cannot parse NOT MATCHED action: $action"))
-        insertCols = Option(im.group(1)).map(_.split(",")
+        val cols = Option(im.group(1)).map(_.split(",")
           .map(_.trim.toLowerCase).filter(_.nonEmpty).toSeq)
-        insertVals = Some(SqlLex.split(im.group(2), ',').map(rewrite))
-        insertGuard = guard
-      } else if (action.equalsIgnoreCase("DELETE")) {
-        delete = true; deleteGuard = guard
-      } else {
-        val setClause = "(?is)^UPDATE\\s+SET\\s+(.+)$".r
-          .findFirstMatchIn(action).get.group(1)
-        updateSet = Some(SqlLex.split(setClause, ',').map { a =>
-          val Array(k, v) = a.split("=", 2)
-          k.trim.toLowerCase -> expr(rewrite(v.trim))
-        }.toMap)
-        updateGuard = guard
-      }
-    }
-    def guarded(g: Option[String]) =
-      g.map(s => coalesce(expr(s), lit(false))).getOrElse(lit(true))
-    val matched = coalesce(col("__t_present"), lit(false)) &&
-      coalesce(col("__s_present"), lit(false))
-    val srcOnly = coalesce(col("__s_present"), lit(false)) &&
-      !coalesce(col("__t_present"), lit(false))
-    val updCond = matched && guarded(updateGuard)
-    val delCond = matched && guarded(deleteGuard)
-    val insCond = srcOnly && guarded(insertGuard)
-    val keep =
-      (if (delete) !delCond else lit(true)) &&
-        (!srcOnly || (if (insertVals.isDefined) insCond else lit(false)))
-    val insertByCol: Map[String, String] = (insertCols, insertVals) match {
-      case (Some(cs), Some(vs)) =>
-        require(cs.length == vs.length, "MERGE INSERT arity mismatch")
-        cs.zip(vs).toMap
-      case (None, Some(vs)) =>
-        require(vs.length == t.schema.length, "MERGE INSERT arity mismatch")
-        t.schema.fieldNames.map(_.toLowerCase).zip(vs).toMap
-      case _ => Map.empty
-    }
-    val merged = joined.filter(keep).select(t.schema.fields.map { f =>
-      val c = f.name
-      val base = col(c)
-      val withUpd = updateSet match {
-        case Some(as) => when(updCond, as.getOrElse(c.toLowerCase, base))
-          .otherwise(base)
-        case None => base
-      }
-      val withIns =
-        if (insertVals.isDefined)
-          when(insCond, insertByCol.get(c.toLowerCase).map(expr)
-            .getOrElse(t.defaults.get(c.toLowerCase).map(expr)
-              .getOrElse(lit(null))))
-            .otherwise(withUpd)
-        else withUpd
-      withIns.cast(f.dataType).as(c)
-    }.toSeq: _*)
-    graft.operators.Dml.overwrite(spark, t.path, merged,
-      t.partitionCols)
-    refreshView(spark, t)
+          .getOrElse(t.schema.fieldNames.map(_.toLowerCase).toSeq)
+        val vals = SqlLex.split(im.group(2), ',').map(rewrite)
+        require(cols.length == vals.length, "MERGE INSERT arity mismatch")
+        Dml.NotMatched(guard, Dml.Insert(
+          t.defaults.map { case (c, d) => c -> expr(d) } ++ cols.zip(vals)))
+      } else if (action.equalsIgnoreCase("DELETE"))
+        Dml.Matched(guard, Dml.Delete)
+      else Dml.Matched(guard, Dml.Update(
+        setList(action.replaceFirst("(?is)^UPDATE\\s+SET\\s+", ""))
+          .map { case (k, v) => k -> rewrite(v) }.toMap))
+    }.toSeq
+    mergeTable(spark, t, Some(Dml.Source(prefixed(src), rewrite(onCond))),
+      whens)
     Seq(tName).toDF("merged_table")
   }
 
@@ -6046,8 +5935,8 @@ object GpSqlDialect {
     * DO UPDATE SET ...` (gram.y on_conflict; executor speculative
     * insertion nodeModifyTable.c). DO NOTHING anti-joins the source on
     * the conflict keys and appends only genuinely-new rows; DO UPDATE
-    * runs one full-outer upsert ([[graft.operators.Dml.upsert]]) with
-    * `EXCLUDED.c` addressing the proposed row. */
+    * is the MERGE of the proposed rows on the keys (one full-outer join
+    * in [[Dml.merge]]), with `EXCLUDED.c` addressing the proposed row. */
   private val InsertConflictRe =
     ("(?is)^\\s*INSERT\\s+INTO\\s+(\\w+)\\s*(?:\\(([^()]*)\\)\\s*)?" +
       "((?:VALUES|SELECT).+?)\\s+ON\\s+CONFLICT\\s*\\(([^)]*)\\)\\s+DO\\s+" +
@@ -6078,18 +5967,19 @@ object GpSqlDialect {
         .as[(Long, Long)].head()
       require(n == d,
         "ON CONFLICT DO UPDATE cannot affect the same row a second time")
-      val setClause = "(?is)^UPDATE\\s+SET\\s+(.+)$".r
-        .findFirstMatchIn(action.trim).get.group(1)
-      val assignments = SqlLex.split(setClause, ',').map { a =>
-        val Array(k, v) = a.split("=", 2)
-        // EXCLUDED.c → the renamed proposed-row column in the upsert join
-        k.trim.toLowerCase ->
-          expr(v.trim.replaceAll("(?i)\\bEXCLUDED\\.(\\w+)", "__exc_$1"))
-      }.toMap
-      graft.operators.Dml.upsert(spark, t.path, src, keys, assignments,
-        t.partitionCols,
-        if (t.partitionCols.isEmpty) Some(t.schema) else None)
-      refreshView(spark, t)
+      // EXCLUDED.c → the prefixed proposed-row column in the join
+      val assignments =
+        setList(action.trim.replaceFirst("(?is)^UPDATE\\s+SET\\s+", ""))
+          .map { case (k, v) => k ->
+            expr(v.replaceAll("(?i)\\bEXCLUDED\\.(\\w+)", SrcPrefix + "$1"))
+          }.toMap
+      val cols = t.schema.fieldNames.map(_.toLowerCase).toSeq
+      mergeTable(spark, t, Some(Dml.Source(prefixed(src),
+        keys.map(k => col(k) === col(SrcPrefix + k)).reduce(_ && _))),
+        Seq(Dml.Matched(None, Dml.Update(assignments)),
+          Dml.NotMatched(None,
+            Dml.Insert(cols.map(c => c -> col(SrcPrefix + c)).toMap))))
+      spark.table(name)
     }
   }
 
@@ -6202,6 +6092,50 @@ object GpSqlDialect {
     back.createOrReplaceTempView(t.name)
     back
   }
+
+  /** Every copy-on-write DML statement on catalog table `t` (UPDATE,
+    * DELETE, their FROM / USING forms, MERGE, ON CONFLICT DO UPDATE and
+    * the INSTEAD OF and DML-loop bodies) is one
+    * [[Dml.merge]] over `t` read with its declared
+    * schema, written back with `t`'s partition layout. Afterwards `t`'s
+    * view and the views that read it re-resolve. Returns the
+    * affected-row count. */
+  private def mergeTable(
+      spark: SparkSession, t: GpTable, source: Option[Dml.Source],
+      whens: Seq[Dml.When]): Long = {
+    // the rewrite writes Parquet back: any other format would silently
+    // change under a writable external table's readers
+    require(t.format == "parquet",
+      s"${t.name}: UPDATE, DELETE and MERGE rewrite Parquet tables only," +
+        s" not ${t.format}")
+    val n = Dml.merge(spark, t.path, readTable(spark, t), source, whens,
+      t.partitionCols)
+    refreshView(spark, t)
+    reresolveDependentViews(spark, Set(t.name))
+    n
+  }
+
+  /** A DML statement's FROM / USING relation: a catalog table read with
+    * its declared schema, else a registered view. */
+  private def dmlSource(spark: SparkSession, name: String): DataFrame =
+    catalog.get(name.toLowerCase) match {
+      case Some(s) if s.format != "csv" => readTable(spark, s)
+      case _ => spark.table(name)
+    }
+
+  private val SrcPrefix = "__src_"
+
+  /** A DML source with every column under [[SrcPrefix]], so that bare
+    * names in the statement's expressions mean the target's columns. */
+  private def prefixed(src: DataFrame): DataFrame =
+    src.toDF(src.columns.map(c => SrcPrefix + c.toLowerCase).toIndexedSeq: _*)
+
+  /** `a = e, b = f` → (lower-case column, expression text) pairs. */
+  private def setList(clause: String): Seq[(String, String)] =
+    SqlLex.split(clause, ',').map { a =>
+      val Array(k, v) = a.split("=", 2)
+      k.trim.toLowerCase -> v.trim
+    }
 
   // ---- phase 2: CREATE EXTERNAL TABLE --------------------------------
 

@@ -835,6 +835,26 @@ class ExpressionSpec extends AnyFunSuite {
         |WHEN MATCHED THEN UPDATE SET v = pd_s.v""".stripMargin, base)
     assert(partDirs() == Set("region=0", "region=1"))
     assert(spark.table("pd_t").filter(col("v") === "merged").count() == 1)
+    // UPDATE, DELETE, UPDATE ... FROM and DELETE ... USING too. The
+    // INSERT after each lands in a region= directory, so a rewrite that
+    // flattened the table would leave its rows unread beside the new one
+    spark.sql("SELECT CAST(3 AS BIGINT) AS sk, 'from' AS sv")
+      .createOrReplaceTempView("pd_u")
+    var rows = 26L
+    Seq("UPDATE pd_t SET v = 'u' WHERE k = 1" -> 0L,
+      "DELETE FROM pd_t WHERE k = 2" -> -1L,
+      "UPDATE pd_t SET v = sv FROM pd_u WHERE k = sk" -> 0L,
+      "DELETE FROM pd_t USING pd_u WHERE pd_t.k = pd_u.sk" -> -1L
+    ).zipWithIndex.foreach { case ((sql, delta), i) =>
+      GpSqlDialect.execute(spark, sql, base)
+      assert(partDirs() == Set("region=0", "region=1"), sql)
+      GpSqlDialect.execute(spark,
+        s"INSERT INTO pd_t VALUES (${200 + i}, 'i', 1)", base)
+      rows += delta + 1
+      assert(spark.table("pd_t").count() == rows, sql)
+    }
+    assert(spark.table("pd_t").filter(col("k") === 1)
+      .select("v").head.getString(0) == "u")
   }
 
   test("DELETE FROM ... USING drops rows matching another relation") {
@@ -884,6 +904,84 @@ class ExpressionSpec extends AnyFunSuite {
     assert(rows.filter(_.getLong(0) >= 15)
       .forall(r => r.getLong(2) == 2L && r.getString(1).startsWith("X-")))
     assert(rows.length == 19) // 10 keep + 4 update + 5 insert
+  }
+
+  test("MERGE applies its WHEN clauses in order, first match wins") {
+    Tables.registerAll(spark, sf)
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_mergeord"
+    def reset(): Unit = {
+      GpSqlDialect.execute(spark, "DROP TABLE IF EXISTS mo_t", base)
+      GpSqlDialect.execute(spark,
+        """CREATE TABLE mo_t AS
+          |SELECT CAST(n_nationkey AS BIGINT) AS k, 'orig' AS v
+          |FROM nation WHERE n_nationkey BETWEEN 1 AND 5""".stripMargin,
+        base)
+    }
+    spark.sql(
+      """SELECT CAST(n_nationkey AS BIGINT) AS k FROM nation
+        |WHERE n_nationkey BETWEEN 1 AND 5""".stripMargin)
+      .createOrReplaceTempView("mo_s")
+    def table() = spark.table("mo_t").orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    // PG: an earlier guarded UPDATE takes the rows it matches ...
+    reset()
+    GpSqlDialect.execute(spark,
+      """MERGE INTO mo_t t USING mo_s s ON t.k = s.k
+        |WHEN MATCHED AND s.k < 3 THEN UPDATE SET v = 'first'
+        |WHEN MATCHED THEN UPDATE SET v = 'second'""".stripMargin, base)
+    assert(table() == Seq(1L -> "first", 2L -> "first", 3L -> "second",
+      4L -> "second", 5L -> "second"))
+    // ... and keeps them from a later DELETE
+    reset()
+    GpSqlDialect.execute(spark,
+      """MERGE INTO mo_t t USING mo_s s ON t.k = s.k
+        |WHEN MATCHED AND s.k = 1 THEN UPDATE SET v = 'kept'
+        |WHEN MATCHED THEN DELETE""".stripMargin, base)
+    assert(table() == Seq(1L -> "kept"))
+  }
+
+  test("MERGE refuses to update a target row two source rows match") {
+    Tables.registerAll(spark, sf)
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_mergedup"
+    GpSqlDialect.execute(spark, "DROP TABLE IF EXISTS d_t", base)
+    GpSqlDialect.execute(spark,
+      "CREATE TABLE d_t AS SELECT CAST(1 AS BIGINT) AS k, 'a' AS v", base)
+    spark.sql("SELECT * FROM VALUES (CAST(1 AS BIGINT), 'x'), " +
+      "(CAST(1 AS BIGINT), 'y') AS d(k, w)").createOrReplaceTempView("d_s")
+    // PG: "MERGE command cannot affect row a second time"
+    val e = intercept[IllegalArgumentException] {
+      GpSqlDialect.execute(spark,
+        """MERGE INTO d_t USING d_s ON d_t.k = d_s.k
+          |WHEN MATCHED THEN UPDATE SET v = d_s.w""".stripMargin, base)
+    }
+    assert(e.getMessage.contains("a second time"), e.getMessage)
+    // refused before the swap: the table is as it was
+    assert(spark.table("d_t").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq == Seq(1L -> "a"))
+  }
+
+  test("DML statements keep their Spark job floor") {
+    Tables.registerAll(spark, sf)
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_dmljobs"
+    def run(sql: String) = GpSqlDialect.execute(spark, sql, base)
+    run("DROP TABLE IF EXISTS jf_t")
+    run("DROP TABLE IF EXISTS jf_s")
+    run("""CREATE TABLE jf_t AS SELECT CAST(o_orderkey AS BIGINT) AS k,
+          |  o_custkey AS c, o_totalprice AS p FROM orders
+          |DISTRIBUTED BY (k)""".stripMargin)
+    run("""CREATE TABLE jf_s AS SELECT c_custkey AS sc
+          |FROM customer WHERE c_mktsegment = 'BUILDING'""".stripMargin)
+    // a statement's jobs include collecting its result, as a client does
+    def stmtJobs(sql: String) = jobs(run(sql).collect())
+    // the copy-on-write write job only: the declared schema spares the
+    // footer-reading inference job and the affected-row count rides the
+    // write as an observed metric, not a second scan
+    assert(stmtJobs("UPDATE jf_t SET p = p + 1 WHERE k < 100") == 1)
+    assert(stmtJobs("DELETE FROM jf_t WHERE k >= 5000") == 1)
+    // plus the target row count that the multi-match check compares with
+    assert(stmtJobs("UPDATE jf_t SET p = 0 FROM jf_s WHERE c = sc") == 4)
+    assert(stmtJobs(
+      "INSERT INTO jf_t SELECT k + 100000, c, p FROM jf_t WHERE k < 50") == 3)
   }
 
   test("transaction no-ops, ROLLBACK rejection, AT TIME ZONE rewrite") {
@@ -2149,6 +2247,15 @@ class ExpressionSpec extends AnyFunSuite {
     assert(run("SELECT sum(n_nationkey) AS s FROM ext_out_orc")
       .head.getLong(0) ==
       spark.table("nation").agg(sum("n_nationkey")).head.getLong(0))
+    // copy-on-write DML writes Parquet, so a JSON sink refuses it rather
+    // than come back rewritten in another format
+    Seq("DELETE FROM ext_out_json WHERE n_nationkey = 1",
+      """MERGE INTO ext_out_json USING nation
+        |ON ext_out_json.n_nationkey = nation.n_nationkey
+        |WHEN MATCHED THEN UPDATE SET n_name = 'x'""".stripMargin
+    ).foreach(sql => intercept[IllegalArgumentException](run(sql)))
+    assert(run("SELECT count(*) AS n FROM ext_out_json WHERE n_name <> 'x'")
+      .head.getLong(0) == spark.table("nation").count())
   }
 
   test("gp_bloat_diag flags fragmented tables; VACUUM clears it") {

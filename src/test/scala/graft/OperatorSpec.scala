@@ -737,8 +737,9 @@ class OperatorSpec extends AnyFunSuite {
       .toDF("id", "name", "v").write.parquet(dir)
     Cdc.enable(dir)
     // statement 1: UPDATE — one changed row, old/new pair
-    Dml.updateWhere(spark, dir, Map("v" -> (col("v") * 2)),
-      col("id") === 2)
+    def table = spark.read.parquet(dir)
+    Dml.merge(spark, dir, table, None, Seq(Dml.Matched(Some(col("id") === 2),
+      Dml.Update(Map("v" -> (col("v") * 2))))), Nil)
     val d1 = Cdc.changes(spark, dir, Seq("id")).collect()
     assert(d1.length == 1)
     assert(d1.head.getAs[String]("op") == "update")
@@ -748,12 +749,17 @@ class OperatorSpec extends AnyFunSuite {
     // unchanged and filtered by the null-safe struct compare
     val src = Seq((1L, "a", 11.0), (3L, "c", 30.0), (4L, "d", 40.0))
       .toDF("id", "name", "v")
-    Dml.mergeInto(spark, dir, src, "id")
+    val row = src.columns.map(c => c -> col(s"s_$c")).toMap
+    Dml.merge(spark, dir, table, Some(Dml.Source(
+      src.toDF(src.columns.map("s_" + _): _*), col("id") === col("s_id"))),
+      Seq(Dml.Matched(None, Dml.Update(row)),
+        Dml.NotMatched(None, Dml.Insert(row))), Nil)
     val d2 = Cdc.changes(spark, dir, Seq("id")).orderBy("id")
       .select($"id", $"op").as[(Long, String)].collect().toSeq
     assert(d2 == Seq((1L, "update"), (4L, "insert")))
     // statement 3: DELETE — captured as op=delete with null new_row
-    Dml.deleteWhere(spark, dir, col("id") === 2)
+    Dml.merge(spark, dir, table, None,
+      Seq(Dml.Matched(Some(col("id") === 2), Dml.Delete)), Nil)
     val d3 = Cdc.changes(spark, dir, Seq("id")).collect()
     assert(d3.length == 1 && d3.head.getAs[String]("op") == "delete")
     assert(d3.head.getAs[Row]("new_row") == null)
@@ -1029,19 +1035,19 @@ class OperatorSpec extends AnyFunSuite {
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_updfrom_spec"
     Seq((1L, 10L), (2L, 20L)).toDF("id", "v")
       .write.mode("overwrite").parquet(path)
+    def updateFrom(src: org.apache.spark.sql.DataFrame) =
+      Dml.merge(spark, path, spark.read.parquet(path),
+        Some(Dml.Source(src, col("id") === col("sid"))),
+        Seq(Dml.Matched(None, Dml.Update(Map("v" -> col("sv"))))), Nil)
     // 1:1 source updates normally
-    Dml.updateFrom(spark, path,
-      Seq((1L, 100L)).toDF("sid", "sv"),
-      col("id") === col("sid"), Map("v" -> col("sv")))
+    updateFrom(Seq((1L, 100L)).toDF("sid", "sv"))
     val after = spark.read.parquet(path).orderBy("id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(after.toSeq == Seq((1L, 100L), (2L, 20L)))
     // a source matching one target row TWICE would multiply it through
     // the left join — must refuse loudly, never corrupt
     val e = intercept[IllegalArgumentException] {
-      Dml.updateFrom(spark, path,
-        Seq((1L, 7L), (1L, 8L)).toDF("sid", "sv"),
-        col("id") === col("sid"), Map("v" -> col("sv")))
+      updateFrom(Seq((1L, 7L), (1L, 8L)).toDF("sid", "sv"))
     }
     assert(e.getMessage.contains("multiple source rows"), e.getMessage)
     // table unchanged after the refused update
@@ -1817,21 +1823,6 @@ class OperatorSpec extends AnyFunSuite {
 
   test("pageRank and hits pay at most three jobs per score update") {
     import spark.implicits._
-    // jobs of `run`, counted once the listener bus has drained, so no
-    // event of an earlier action or a late event of `run` is miscounted
-    def jobs(run: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          n.incrementAndGet()
-      }
-      val sc = spark.sparkContext
-      org.apache.spark.graftobs.Bus.drain(sc)
-      sc.addSparkListener(l)
-      try { run; org.apache.spark.graftobs.Bus.drain(sc); n.get }
-      finally sc.removeSparkListener(l)
-    }
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 2L),
       (2L, 5L)).toDF("src", "dst")
     def pr(k: Int) = jobs(Components.pageRank(edges, "src", "dst",

@@ -14,6 +14,23 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     GraftSession.configure(s)
   }
+
+  /** Spark jobs started by `run`, counted once the listener bus has
+    * drained, so no event of an earlier action or a late event of `run`
+    * is miscounted. */
+  def jobs(run: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftobs.Bus.drain(sc)
+    sc.addSparkListener(l)
+    try { run; org.apache.spark.graftobs.Bus.drain(sc); n.get }
+    finally sc.removeSparkListener(l)
+  }
 }
 
 /** One sf0.001 execution per query, shared by GoldenSpec (the hash) and
