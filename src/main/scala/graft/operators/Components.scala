@@ -3,26 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Connected components over a pair relation — the canonicalization
-  * step of a dedup pipeline: near-dup kernels (minhash/simhash/jaccard)
-  * emit PAIRS, but keep-one-per-cluster needs each document's duplicate
-  * CLUSTER, i.e. components of the pair graph. (The reference has no
-  * graph operator; recursive reachability runs through WITH RECURSIVE,
-  * nodeRecursiveunion.c — this is the same fixpoint specialised to
-  * min-label convergence.)
-  *
-  * Algorithm: distributed min-label propagation WITH pointer jumping.
-  * Every vertex starts labelled with itself; each round (a) pulls
-  * neighbour labels across edges and keeps the min, then (b) shortcuts
-  * through the label table itself (comp := label(comp) — labels only
-  * decrease, so following your label's label is always sound). Step (a)
-  * alone needs diameter-many rounds; the jump in (b) doubles the
-  * effective reach per round, giving O(log diameter) convergence — the
-  * same guarantee as large-star/small-star [Kiveris et al., "Connected
-  * Components in MapReduce and Beyond"] with a simpler dataflow. Each
-  * round is two equi-joins + one partial/final min-aggregate — no
-  * driver state beyond a convergence probe, no all-pairs blowup.
-  * Lineage is cut with localCheckpoint every round, like RecursiveCte.
+/** Graph kernels (MADlib `graph` module parity): ranking, centrality,
+  * paths, communities and components. Every iterative kernel cuts its
+  * lineage with an eager localCheckpoint per round, except [[pageRank]]
+  * and [[hits]], whose node-scale state rides the driver.
   */
 object Components {
 
@@ -48,24 +32,21 @@ object Components {
     * into the edge join requires anyway. Returns (id, rank). */
   def pageRank(
       edgesDf: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 5, damping: Double = 0.85,
-      checkpoint: Boolean = true): DataFrame = {
-    // checkpoint=false keeps the full lineage visible — PlanSpec uses it
-    // to assert the per-round join/agg shape that the cuts hide
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint(eager = true) else df
-    val edgesRaw = cut(edgesDf
+      iterations: Int = 5, damping: Double = 0.85): DataFrame = {
+    val edgesRaw = edgesDf
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-      .distinct())
-    val nodes = cut(edgesRaw.select(col("src").as("id"))
-      .union(edgesRaw.select(col("dst").as("id"))).distinct())
+      .distinct().localCheckpoint(eager = true)
+    val nodes = edgesRaw.select(col("src").as("id"))
+      .union(edgesRaw.select(col("dst").as("id"))).distinct()
+      .localCheckpoint(eager = true)
     val n = nodes.count().toDouble
     // out-degree is loop-invariant: fuse it into the edge list ONCE so
     // no round re-aggregates or re-joins it (round-over-round this was
     // the single largest cost)
-    val edges = cut(edgesRaw
-      .join(edgesRaw.groupBy("src").agg(count(lit(1)).as("deg")), "src"))
+    val edges = edgesRaw
+      .join(edgesRaw.groupBy("src").agg(count(lit(1)).as("deg")), "src")
+      .localCheckpoint(eager = true)
     def rank(cs: Column): Column =
       lit((1.0 - damping) / n) + lit(damping) * coalesce(cs, lit(0.0))
     var contribs: Option[DataFrame] = None // None: every rank is 1/N
@@ -80,7 +61,7 @@ object Components {
               (rank(col("cs")) / col("deg")).as("c"))
       }
       val agg = c.groupBy("id").agg(sum(col("c")).as("cs"))
-      contribs = Some(if (checkpoint) ferried(agg, agg.collect()) else agg)
+      contribs = Some(ferried(agg, agg.collect()))
     }
     contribs match {
       case None => nodes.select(col("id"), (lit(1.0) / lit(n)).as("rank"))
@@ -110,15 +91,14 @@ object Components {
     * broadcast into the edge join requires anyway. */
   def hits(
       edgesDf: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 3, checkpoint: Boolean = true): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint(eager = true) else df
-    val edges = cut(edgesDf
+      iterations: Int = 3): DataFrame = {
+    val edges = edgesDf
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-      .distinct())
-    val nodes = cut(edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct())
+      .distinct().localCheckpoint(eager = true)
+    val nodes = edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id"))).distinct()
+      .localCheckpoint(eager = true)
     final case class Scores(raw: DataFrame, norm: Double) {
       def s: Column = col("c") / lit(norm)
     }
@@ -126,7 +106,7 @@ object Components {
       val rows = raw.collect()
       val norm = math.sqrt(rows.foldLeft(0.0) { (a, r) =>
         a + r.getDouble(1) * r.getDouble(1) })
-      Scores(if (checkpoint) ferried(raw, rows) else raw, norm)
+      Scores(ferried(raw, rows), norm)
     }
     // one half-round: sum the `from` scores across the edges into `to`
     def step(v: Scores, from: String, to: String): Scores =
@@ -162,9 +142,31 @@ object Components {
     df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
       df.schema)
 
-  /** Components of the undirected pair graph. Returns (`id`,
-    * `component`) for every vertex that appears in `pairs`, where
-    * `component` is the least vertex id in the component. */
+  /** Connected components over a pair relation — the canonicalization
+    * step of a dedup pipeline: near-dup kernels (minhash/simhash/jaccard)
+    * emit PAIRS, but keep-one-per-cluster needs each document's duplicate
+    * CLUSTER, i.e. components of the pair graph. (The reference has no
+    * graph operator; recursive reachability runs through WITH RECURSIVE,
+    * nodeRecursiveunion.c — this is the same fixpoint specialised to
+    * min-label convergence.)
+    *
+    * Algorithm: distributed min-label propagation WITH pointer jumping.
+    * Every vertex starts labelled with itself; each round (a) pulls
+    * neighbour labels across edges and keeps the min, then (b) shortcuts
+    * through the label table itself (comp := label(comp) — labels only
+    * decrease, so following your label's label is always sound). Step (a)
+    * alone needs diameter-many rounds; the jump in (b) doubles the
+    * effective reach per round, giving O(log diameter) convergence — the
+    * same guarantee as large-star/small-star [Kiveris et al., "Connected
+    * Components in MapReduce and Beyond"] with a simpler dataflow. Each
+    * round is two equi-joins + one partial/final min-aggregate — no
+    * driver state beyond a convergence probe, no all-pairs blowup.
+    * Lineage is cut with localCheckpoint every round; the rounds run on
+    * [[RecursiveCte.fixpoint]] and stop after the first round that
+    * changes no label.
+    *
+    * Returns (`id`, `component`) for every vertex that appears in
+    * `pairs`, where `component` is the least vertex id in the component. */
   def connectedComponents(
       pairs: DataFrame, a: String, b: String,
       maxIter: Int = 25): DataFrame = {
@@ -180,12 +182,10 @@ object Components {
     // the symmetric edge list, so grouping edges by src yields each
     // vertex's min neighbour directly — label(v) = min(v, min-neighbour)
     // without the join+agg+join round the loop would spend on it.
-    var labels = edges.groupBy(col("src").as("id"))
+    val init = edges.groupBy(col("src").as("id"))
       .agg(least(min(col("dst")), col("src")).as("component"))
       .localCheckpoint(eager = true)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
+    RecursiveCte.fixpoint(init, maxIter, "connectedComponents") { labels =>
       // (a) pull the neighbour labels, keep the min of (own, neighbours).
       // The vertex's own row rides along with `own` = its current label,
       // so convergence is decided in this same pass (no probe join).
@@ -223,14 +223,9 @@ object Components {
         .localCheckpoint(eager = true)
       // any-change probe over the in-memory checkpoint — no join, no
       // shuffle, early-stops at the first changed partition
-      converged = next.filter(col("changed")).limit(1).count() == 0
-      labels = next.select("id", "component")
-      iter += 1
+      (next.select("id", "component"),
+        next.filter(col("changed")).limit(1).count() > 0)
     }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds " +
-        "(graph diameter exceeds the bound; raise maxIter)")
-    labels
   }
 
   /** Dedup-pipeline composition: given candidate pairs and the full
@@ -261,14 +256,11 @@ object Components {
     * exact, so min-ties are value-identical on any relax order. */
   def sssp(
       edgesDf: DataFrame, srcCol: String, dstCol: String, wCol: String,
-      source: Long, iterations: Int,
-      checkpoint: Boolean = true): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint(eager = true) else df
-    val edges = cut(edgesDf.select(
+      source: Long, iterations: Int): DataFrame = {
+    val edges = edgesDf.select(
       col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"),
-      col(wCol).cast("long").as("w")))
+      col(wCol).cast("long").as("w")).localCheckpoint(eager = true)
     val spark = edgesDf.sparkSession
     import spark.implicits._
     var dist = Seq((source, 0L)).toDF("id", "dist")
@@ -276,8 +268,9 @@ object Components {
       val relaxed = edges
         .join(broadcast(dist), edges("src") === dist("id"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      dist = cut(dist.union(relaxed)
-        .groupBy("id").agg(min(col("dist")).as("dist")))
+      dist = dist.union(relaxed)
+        .groupBy("id").agg(min(col("dist")).as("dist"))
+        .localCheckpoint(eager = true)
     }
     dist
   }
@@ -335,6 +328,37 @@ object Components {
       greatest(col("u"), col("y")).as("c"))
   }
 
+  /** All-pairs shortest paths (MADlib `graph_apsp`): multi-source
+    * Bellman–Ford — the sssp relax rounds run for EVERY source at once
+    * over a (source, vertex, dist) relation. `wCol` = None is BFS
+    * (unit weights). Integer weights keep path sums exact. Same O(V²)
+    * state contract as [[closeness]] (which consumes this). Each round
+    * is one equi-join on the frontier vertex + one min-aggregate with
+    * map-side partials; lineage cut per round. */
+  def apsp(
+      edgesDf: DataFrame, srcCol: String, dstCol: String,
+      wCol: Option[String], iterations: Int): DataFrame = {
+    val wExpr = wCol.map(c => col(c).cast("long")).getOrElse(lit(1L))
+    val edges = edgesDf
+      .select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"), wExpr.as("w"))
+      .filter(col("src") =!= col("dst"))
+      .groupBy("src", "dst").agg(min(col("w")).as("w"))
+      .localCheckpoint(eager = true)
+    val nodes = edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id"))).distinct()
+    var d = nodes.select(col("id").as("s"), col("id").as("v"),
+      lit(0L).as("dist"))
+    for (_ <- 0 until iterations) {
+      val relax = d.join(edges, d("v") === edges("src"))
+        .select(col("s"), col("dst").as("v"),
+          (col("dist") + col("w")).as("dist"))
+      d = d.unionByName(relax).groupBy("s", "v")
+        .agg(min(col("dist")).as("dist")).localCheckpoint(eager = true)
+    }
+    d
+  }
+
   /** Closeness centrality (MADlib `graph_closeness` parity — MADlib
     * computes it from APSP, and so does this): multi-source BFS with a
     * FIXED round count over the (source, vertex) distance relation,
@@ -349,43 +373,10 @@ object Components {
     * contract); run it on catalog-scale graphs (dimension graphs,
     * cluster topologies) or pre-restrict the source set. Each round is
     * one equi-join + one min-aggregate with map-side partials. */
-  /** All-pairs shortest paths (MADlib `graph_apsp`): multi-source
-    * Bellman–Ford — the sssp relax rounds run for EVERY source at once
-    * over a (source, vertex, dist) relation. `wCol` = None is BFS
-    * (unit weights). Integer weights keep path sums exact. Same O(V²)
-    * state contract as [[closeness]] (which consumes this). Each round
-    * is one equi-join on the frontier vertex + one min-aggregate with
-    * map-side partials; lineage cut per round. */
-  def apsp(
-      edgesDf: DataFrame, srcCol: String, dstCol: String,
-      wCol: Option[String], iterations: Int,
-      checkpoint: Boolean = true): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint(eager = true) else df
-    val wExpr = wCol.map(c => col(c).cast("long")).getOrElse(lit(1L))
-    val edges = cut(edgesDf
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"), wExpr.as("w"))
-      .filter(col("src") =!= col("dst"))
-      .groupBy("src", "dst").agg(min(col("w")).as("w")))
-    val nodes = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct()
-    var d = nodes.select(col("id").as("s"), col("id").as("v"),
-      lit(0L).as("dist"))
-    for (_ <- 0 until iterations) {
-      val relax = d.join(edges, d("v") === edges("src"))
-        .select(col("s"), col("dst").as("v"),
-          (col("dist") + col("w")).as("dist"))
-      d = cut(d.unionByName(relax).groupBy("s", "v")
-        .agg(min(col("dist")).as("dist")))
-    }
-    d
-  }
-
   def closeness(
       edgesDf: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 4, checkpoint: Boolean = true): DataFrame = {
-    val d = apsp(edgesDf, srcCol, dstCol, None, iterations, checkpoint)
+      iterations: Int = 4): DataFrame = {
+    val d = apsp(edgesDf, srcCol, dstCol, None, iterations)
     val other = col("v") =!= col("s")
     d.groupBy(col("s").as("id")).agg(
       count(when(other, 1)).as("k_degree"),
@@ -428,27 +419,25 @@ object Components {
     * with map-side partials; lineage cut per round. */
   def labelPropagation(
       edgesDf: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 3, checkpoint: Boolean = true): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint(eager = true) else df
+      iterations: Int = 3): DataFrame = {
     val e0 = edgesDf.select(col(srcCol).cast("long").as("a"),
       col(dstCol).cast("long").as("b")).distinct()
     // undirected + self-loops, deduped
-    val und = cut(e0.select(col("a").as("src"), col("b").as("dst"))
+    val und = e0.select(col("a").as("src"), col("b").as("dst"))
       .union(e0.select(col("b").as("src"), col("a").as("dst")))
       .union(e0.select(col("a").as("src"), col("a").as("dst")))
       .union(e0.select(col("b").as("src"), col("b").as("dst")))
-      .distinct())
+      .distinct().localCheckpoint(eager = true)
     var labels = und.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lab"))
     for (_ <- 0 until iterations) {
       val cnt = und.join(broadcast(labels), und("dst") === labels("id"))
         .select(und("src").as("v"), col("lab"))
         .groupBy("v", "lab").agg(count(lit(1)).as("c"))
-      labels = cut(cnt.groupBy("v")
+      labels = cnt.groupBy("v")
         .agg(max_by(col("lab"), col("c") * lit(100000000L) - col("lab"))
           .as("lab"))
-        .select(col("v").as("id"), col("lab")))
+        .select(col("v").as("id"), col("lab")).localCheckpoint(eager = true)
     }
     labels
   }
@@ -480,25 +469,23 @@ object Components {
     * way. */
   def kCore(
       edgesDf: DataFrame, srcCol: String, dstCol: String, k: Int,
-      rounds: Int = 6, checkpoint: Boolean = true): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint(eager = true) else df
+      rounds: Int = 6): DataFrame = {
     val e0 = edgesDf.select(col(srcCol).cast("long").as("a"),
       col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    val und = cut(e0.select(col("a").as("src"), col("b").as("dst"))
+    val und = e0.select(col("a").as("src"), col("b").as("dst"))
       .union(e0.select(col("b").as("src"), col("a").as("dst")))
-      .distinct())
+      .distinct().localCheckpoint(eager = true)
     var deg = und.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("deg"))
     for (_ <- 0 until rounds) {
       val alive = deg.filter(col("deg") >= k).select(col("id"))
-      deg = cut(und
+      deg = und
         .join(broadcast(alive), und("src") === alive("id"), "left_semi")
         .join(broadcast(alive.withColumnRenamed("id", "id2")),
           und("dst") === col("id2"), "left_semi")
         .groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("deg")))
+        .agg(count(lit(1)).as("deg")).localCheckpoint(eager = true)
     }
     deg.filter(col("deg") >= k)
   }
@@ -525,16 +512,13 @@ object Components {
     * frontier-scale with map-side partials; lineage cut per level. */
   def betweenness(
       edgesDf: DataFrame, srcCol: String, dstCol: String,
-      levels: Int = 4, sources: Int = 0,
-      checkpoint: Boolean = true): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint(eager = true) else df
+      levels: Int = 4, sources: Int = 0): DataFrame = {
     val e0 = edgesDf.select(col(srcCol).cast("long").as("a"),
       col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    val und = cut(e0.select(col("a").as("src"), col("b").as("dst"))
+    val und = e0.select(col("a").as("src"), col("b").as("dst"))
       .union(e0.select(col("b").as("src"), col("a").as("dst")))
-      .distinct())
+      .distinct().localCheckpoint(eager = true)
     val nodes = und.select(col("src").as("id")).distinct()
     // sources = 0 → exact (all sources); k → the deterministic
     // modulus sample (Brandes sampling, Bader et al. — per-source
@@ -547,20 +531,20 @@ object Components {
           .limit(sources)
       }
     // forward BFS: per-level frontiers with path counts
-    val f0 = cut(srcNodes.select(col("id").as("s"), col("id").as("v"),
-      lit(1L).as("sig"), lit(0).as("dist")))
+    val f0 = srcNodes.select(col("id").as("s"), col("id").as("v"),
+      lit(1L).as("sig"), lit(0).as("dist")).localCheckpoint(eager = true)
     val frontiers = scala.collection.mutable.ArrayBuffer(f0)
     var vis = f0
     for (lev <- 1 to levels) {
       val prev = frontiers.last
-      val nxt = cut(prev.join(und, prev("v") === und("src"))
+      val nxt = prev.join(und, prev("v") === und("src"))
         .select(col("s"), col("dst").as("v"), col("sig"))
         .join(vis.select(col("s").as("s2"), col("v").as("v2")),
           col("s") === col("s2") && col("v") === col("v2"), "left_anti")
         .groupBy("s", "v").agg(sum(col("sig")).as("sig"))
-        .withColumn("dist", lit(lev)))
+        .withColumn("dist", lit(lev)).localCheckpoint(eager = true)
       frontiers += nxt
-      vis = cut(vis.unionByName(nxt))
+      vis = vis.unionByName(nxt).localCheckpoint(eager = true)
     }
     // backward accumulation: δ in exact integer micros, one level at
     // a time (BFS DAG edges connect adjacent levels only)
@@ -582,9 +566,10 @@ object Components {
         .join(dp, col("ds") === col("s") && col("dv") === col("dst"))
         .select(col("s"), cur("v").as("v"), term.as("t"))
         .groupBy("s", "v").agg(sum(col("t")).as("tm"))
-      deltaPrev = cut(cur.select(col("s"), col("v"))
+      deltaPrev = cur.select(col("s"), col("v"))
         .join(sums, Seq("s", "v"), "left")
-        .select(col("s"), col("v"), coalesce(col("tm"), lit(0L)).as("dm")))
+        .select(col("s"), col("v"), coalesce(col("tm"), lit(0L)).as("dm"))
+        .localCheckpoint(eager = true)
       deltas += deltaPrev
     }
     // bc is emitted UNROUNDED: micros-sum / 1e6 / 2 is an exact

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{LocatedFileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -61,20 +61,29 @@ object Dml {
     * Every DML here is copy-on-write, so the small-file problem arrives
     * with frequent updates exactly like AO segment bloat — compaction is
     * the maintenance op that keeps scan task counts sane at 100 TB.
-    * Returns (filesBefore, filesAfter). */
+    * `table` is the table at `path` read with its declared schema; the
+    * rewrite keeps its Hive partition layout. Returns (filesBefore,
+    * filesAfter), counting the data files of every partition. */
   def compact(
-      spark: SparkSession, path: String,
+      spark: SparkSession, path: String, table: DataFrame,
+      partitionCols: Seq[String],
       targetBytes: Long = 128L << 20): (Int, Int) = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles = fs.listStatus(new Path(path)).toSeq
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val before = dataFiles
+    val before = dataFiles(spark, path)
     val totalBytes = before.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(path)
-    overwrite(spark, path, df.coalesce(nOut))
-    (before.size, dataFiles.size)
+    overwrite(spark, path, table.coalesce(nOut), partitionCols)
+    (before.size, dataFiles(spark, path).size)
+  }
+
+  /** The parquet data files under `path`, partition directories
+    * included. */
+  private[graft] def dataFiles(
+      spark: SparkSession, path: String): Seq[LocatedFileStatus] = {
+    val it = new Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(new Path(path), true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(_.getPath.getName.endsWith(".parquet")).toSeq
   }
 
   /** The relation a MERGE joins to its target, with its ON condition. */

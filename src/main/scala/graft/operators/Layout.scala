@@ -63,15 +63,14 @@ object Layout {
   }
 
   /** `CLUSTER table BY (cols)` — rewrite the catalog table's parquet in
-    * Z-order (in-place swap like every Dml rewrite). Returns the file
-    * count after rewrite. */
+    * Z-order (in-place swap like every Dml rewrite). `table` is the
+    * table at `path` read with its declared schema; the rewrite keeps
+    * its Hive partition layout. Returns the data-file count after the
+    * rewrite, every partition included. */
   def clusterTable(
-      spark: SparkSession, path: String, colNames: Seq[String]): Int = {
-    val ordered = zorder(spark.read.parquet(path), colNames)
-    Dml.overwrite(spark, path, ordered)
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(new org.apache.hadoop.fs.Path(path))
-      .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      spark: SparkSession, path: String, table: DataFrame,
+      partitionCols: Seq[String], colNames: Seq[String]): Int = {
+    Dml.overwrite(spark, path, zorder(table, colNames), partitionCols)
+    Dml.dataFiles(spark, path).size
   }
 }

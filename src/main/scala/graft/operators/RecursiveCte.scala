@@ -8,9 +8,13 @@ import org.apache.spark.sql.DataFrame
   * standard semi-naive fixpoint loop on the driver: each iteration is a
   * distributed job; only the delta is fed back.
   *
-  * Scale note: the working/delta sets are cached per iteration and
-  * unpersisted after use; at 100 TB the delta (not the full input) is what
-  * recirculates, matching the reference's worktable design. `maxIterations`
+  * [[fixpoint]] is the one loop every recursion in graft runs on: the
+  * two CTE variants here, tablefunc `connectby` and
+  * [[Components.connectedComponents]].
+  *
+  * Scale note: each round's delta is an eager local checkpoint; at 100 TB
+  * the delta (not the full input) is what recirculates, matching the
+  * reference's worktable design. `maxIterations`
   * bounds runaway recursion (GP: gp_max_slices-style guardrails).
   */
 object RecursiveCte {
@@ -23,27 +27,30 @@ object RecursiveCte {
     * lineage depth ≤ K. */
   private val CheckpointEvery = 8
 
+  /** Runs `round` from `init` until a round reports that it changed
+    * nothing, and returns the state that round produced. A round that
+    * still changes the state at the `maxRounds`-th call means the
+    * recursion does not converge within the bound: `what` names it in
+    * the IllegalStateException. */
+  def fixpoint[S](init: S, maxRounds: Int, what: String)(
+      round: S => (S, Boolean)): S = {
+    @annotation.tailrec
+    def loop(state: S, rounds: Int): S = round(state) match {
+      case (next, false) => next
+      case _ if rounds == maxRounds => throw new IllegalStateException(
+        s"$what did not converge in $maxRounds rounds")
+      case (next, true) => loop(next, rounds + 1)
+    }
+    loop(init, 1)
+  }
+
   /** UNION ALL variant (`WITH RECURSIVE t AS (seed UNION ALL step)`).
     * Termination: step returns empty. */
   def unionAll(
       seed: DataFrame,
       step: DataFrame => DataFrame,
-      maxIterations: Int = 100): DataFrame = {
-    var acc = seed
-    var delta = seed
-    var i = 0
-    while (i < maxIterations && !delta.isEmpty) {
-      delta = step(delta).localCheckpoint(eager = true)
-      acc = acc.unionAll(delta)
-      if ((i + 1) % CheckpointEvery == 0)
-        acc = acc.localCheckpoint(eager = true)
-      i += 1
-    }
-    if (i == maxIterations)
-      throw new IllegalStateException(
-        s"recursive CTE did not converge in $maxIterations iterations")
-    acc
-  }
+      maxIterations: Int = 100): DataFrame =
+    union(seed, maxIterations)((delta, _) => step(delta))
 
   /** UNION (distinct) variant: new rows are deduped against everything seen
     * so far (semi-naive evaluation — only genuinely-new rows recirculate).
@@ -53,20 +60,24 @@ object RecursiveCte {
   def unionDistinct(
       seed: DataFrame,
       step: DataFrame => DataFrame,
-      maxIterations: Int = 100): DataFrame = {
-    var acc = seed.distinct().localCheckpoint(eager = true)
-    var delta = acc
-    var i = 0
-    while (i < maxIterations && !delta.isEmpty) {
-      delta = step(delta).distinct().exceptAll(acc).localCheckpoint(eager = true)
-      acc = acc.unionAll(delta)
-      if ((i + 1) % CheckpointEvery == 0)
-        acc = acc.localCheckpoint(eager = true)
-      i += 1
+      maxIterations: Int = 100): DataFrame =
+    union(seed.distinct().localCheckpoint(eager = true), maxIterations) {
+      (delta, acc) => step(delta).distinct().exceptAll(acc)
     }
-    if (i == maxIterations)
-      throw new IllegalStateException(
-        s"recursive CTE did not converge in $maxIterations iterations")
-    acc
-  }
+
+  /** The semi-naive loop both variants share: `next(delta, acc)` is the
+    * round's new rows, checkpointed and appended to `acc` until it comes
+    * back empty. */
+  private def union(seed: DataFrame, maxIterations: Int)(
+      next: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    fixpoint((seed, seed, 0), maxIterations, "recursive CTE") {
+      case (acc, delta, i) =>
+        val d = next(delta, acc).localCheckpoint(eager = true)
+        if (d.isEmpty) ((acc, d, i), false)
+        else {
+          val grown = acc.unionAll(d)
+          ((if ((i + 1) % CheckpointEvery == 0)
+            grown.localCheckpoint(eager = true) else grown, d, i + 1), true)
+        }
+    }._1
 }

@@ -4315,17 +4315,7 @@ object GpSqlDialect {
     val rows = catalog.values.toSeq.sortBy(_.name)
       .filter(_.format != "csv")
       .map { t =>
-        val p = new org.apache.hadoop.fs.Path(t.path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val files = {
-          val it = fs.listFiles(p, true)
-          val b = List.newBuilder[Long]
-          while (it.hasNext) {
-            val f = it.next()
-            if (f.getPath.getName.endsWith(".parquet")) b += f.getLen
-          }
-          b.result()
-        }
+        val files = Dml.dataFiles(spark, t.path).map(_.getLen)
         val n = files.length.toLong
         val bytes = files.sum
         val avg = if (n == 0) 0L else bytes / n
@@ -5071,7 +5061,8 @@ object GpSqlDialect {
       spark: SparkSession, table: String, cols: Seq[String]): DataFrame = {
     import spark.implicits._
     val t = catalog(table)
-    val files = graft.operators.Layout.clusterTable(spark, t.path, cols)
+    val files = graft.operators.Layout.clusterTable(spark, t.path,
+      readTable(spark, t), t.partitionCols, cols)
     refreshView(spark, t)
     Seq((table, cols.mkString(","), files))
       .toDF("table", "cluster_key", "files")
@@ -5081,7 +5072,8 @@ object GpSqlDialect {
     import spark.implicits._
     val t = catalog.getOrElse(table, throw new IllegalArgumentException(
       s"VACUUM target $table is not a graft catalog table"))
-    val (before, after) = Dml.compact(spark, t.path)
+    val (before, after) =
+      Dml.compact(spark, t.path, readTable(spark, t), t.partitionCols)
     refreshView(spark, t)
     Seq((table, before, after)).toDF("table", "files_before", "files_after")
   }
@@ -5328,11 +5320,12 @@ object GpSqlDialect {
     * frontier (≡ the WorkTableScan loop), extending branch paths with
     * the delimiter. max_depth 0 descends until the frontier empties.
     *
-    * Scale: per-round work is one equi-join of the (checkpointed)
-    * frontier against the table — the recursive-CTE shape; no driver
-    * data paths. Cycles are cut by the iteration cap (tablefunc raises
-    * on branch repetition; the cap keeps the loop bounded without
-    * per-row path scans). */
+    * Scale: a [[graft.operators.RecursiveCte.unionAll]] whose step joins
+    * only the frontier rows under max_depth against the table — the
+    * recursive-CTE shape; no driver data paths. The loop stops on the
+    * first empty frontier. Cycles are cut by the CTE's iteration cap
+    * (tablefunc raises on branch repetition; the cap keeps the loop
+    * bounded without per-row path scans). */
   private def executeConnectby(
       spark: SparkSession, rel: String, keyFld: String, parentFld: String,
       startWith: String, maxDepth: Int, delim: String,
@@ -5344,35 +5337,24 @@ object GpSqlDialect {
     val t = spark.table(rewriteCatalogNames(rel))
     // tablefunc.c:1276 emits the start_with row unconditionally (it
     // need not exist in the relation) with a NULL parent at level 0
-    var frontier = spark.range(1)
+    val root = spark.range(1)
       .select(lit(startWith).as("keyid"),
         lit(null).cast("string").as("parent_keyid"),
         lit(0).as("level"), lit(startWith).as("branch"))
-      .localCheckpoint(eager = true)
-    var acc = frontier
-    var lvl = 0
-    val cap = 100
-    while (frontier.limit(1).count() > 0 &&
-      (maxDepth == 0 || lvl < maxDepth) && lvl < cap) {
+    val acc = graft.operators.RecursiveCte.unionAll(root, { delta =>
+      val frontier =
+        if (maxDepth == 0) delta else delta.filter(col("level") < maxDepth)
       // qualify through t(...): the frontier's own column names
       // (keyid/parent_keyid) may coincide with the table's field names
-      val next = t.join(frontier,
-          t(parentFld).cast("string") === frontier("keyid"))
+      t.join(frontier, t(parentFld).cast("string") === frontier("keyid"))
         .select(t(keyFld).cast("string").as("keyid"),
           t(parentFld).cast("string").as("parent_keyid"),
           (frontier("level") + 1).as("level"),
           concat(frontier("branch"), lit(delim),
             t(keyFld).cast("string")).as("branch"))
-        .localCheckpoint(eager = true)
-      frontier = next
-      if (frontier.limit(1).count() > 0) acc = acc.union(frontier)
-      lvl += 1
-    }
-    if (lvl >= cap) throw new IllegalStateException(
-      s"connectby: depth cap $cap reached — cycle in '$rel'?")
-    val base = acc.select("keyid", "parent_keyid", "level", "branch")
-    val picked = base.select(cols.zipWithIndex.map { case ((n, tp), i) =>
-      col(base.columns(i)).cast(tp).as(n)
+    })
+    val picked = acc.select(cols.zipWithIndex.map { case ((n, tp), i) =>
+      col(acc.columns(i)).cast(tp).as(n)
     }: _*)
     val view = s"graft_connectby_$alias"
     picked.createOrReplaceTempView(view)

@@ -835,16 +835,19 @@ class ExpressionSpec extends AnyFunSuite {
         |WHEN MATCHED THEN UPDATE SET v = pd_s.v""".stripMargin, base)
     assert(partDirs() == Set("region=0", "region=1"))
     assert(spark.table("pd_t").filter(col("v") === "merged").count() == 1)
-    // UPDATE, DELETE, UPDATE ... FROM and DELETE ... USING too. The
-    // INSERT after each lands in a region= directory, so a rewrite that
-    // flattened the table would leave its rows unread beside the new one
+    // UPDATE, DELETE, UPDATE ... FROM, DELETE ... USING, VACUUM and
+    // CLUSTER too. The INSERT after each lands in a region= directory,
+    // so a rewrite that flattened the table would leave its rows unread
+    // beside the new one
     spark.sql("SELECT CAST(3 AS BIGINT) AS sk, 'from' AS sv")
       .createOrReplaceTempView("pd_u")
     var rows = 26L
     Seq("UPDATE pd_t SET v = 'u' WHERE k = 1" -> 0L,
       "DELETE FROM pd_t WHERE k = 2" -> -1L,
       "UPDATE pd_t SET v = sv FROM pd_u WHERE k = sk" -> 0L,
-      "DELETE FROM pd_t USING pd_u WHERE pd_t.k = pd_u.sk" -> -1L
+      "DELETE FROM pd_t USING pd_u WHERE pd_t.k = pd_u.sk" -> -1L,
+      "VACUUM pd_t" -> 0L,
+      "CLUSTER pd_t BY (k)" -> 0L
     ).zipWithIndex.foreach { case ((sql, delta), i) =>
       GpSqlDialect.execute(spark, sql, base)
       assert(partDirs() == Set("region=0", "region=1"), sql)
@@ -3158,15 +3161,23 @@ class ExpressionSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("LANGUAGE perl"))
   }
 
-  test("tablefunc connectby: root emitted with NULL parent even when " +
-    "absent from the relation; max_depth bounds descent") {
+  /** r0 → r1 → {r2, r3}, r2 → r4: levels 1 to 3 below the root r0. */
+  private def cbTree(): Unit = {
     import spark.implicits._
     Seq(("r1", "r0"), ("r2", "r1"), ("r3", "r1"), ("r4", "r2"))
       .toDF("k", "pk").createOrReplaceTempView("cb_tree")
-    val out = GpSqlDialect.execute(spark,
-      """SELECT * FROM connectby('cb_tree', 'k', 'pk', 'r0', 2, '.')
+  }
+
+  private def connectby(maxDepth: Int): Array[org.apache.spark.sql.Row] =
+    GpSqlDialect.execute(spark,
+      s"""SELECT * FROM connectby('cb_tree', 'k', 'pk', 'r0', $maxDepth, '.')
         |AS t(keyid text, parent_keyid text, level int, branch text)
         |ORDER BY level, keyid""".stripMargin, "/tmp/cb").collect()
+
+  test("tablefunc connectby: root emitted with NULL parent even when " +
+    "absent from the relation; max_depth bounds descent") {
+    cbTree()
+    val out = connectby(2)
       .map(r => (r.getString(0), r.getString(1), r.getInt(2),
         r.getString(3))).toSeq
     // r0 itself has no row in cb_tree — tablefunc.c:1276 emits it anyway
@@ -3175,6 +3186,17 @@ class ExpressionSpec extends AnyFunSuite {
       ("r1", "r0", 1, "r0.r1"),
       ("r2", "r1", 2, "r0.r1.r2"),
       ("r3", "r1", 2, "r0.r1.r3"))) // r4 is level 3 — cut by max_depth 2
+  }
+
+  test("tablefunc connectby: one more level of max_depth costs four " +
+    "jobs") {
+    cbTree()
+    // both depths stop above the tree's last level (r4 at level 3), so
+    // the difference is one more round of the recursive-CTE loop (its
+    // frontier broadcast, checkpoint and probe) plus a checkpoint job
+    // in the last round that the shallower call does not run
+    val perLevel = jobs(connectby(2)) - jobs(connectby(1))
+    assert(perLevel == 4, s"connectby pays $perLevel jobs per level")
   }
 
   // Quoted text is data: commas, keywords and NEW. references inside a

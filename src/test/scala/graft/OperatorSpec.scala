@@ -949,7 +949,7 @@ class OperatorSpec extends AnyFunSuite {
     val edges = Seq((0L, 1L, 5L), (0L, 2L, 1L), (2L, 1L, 2L),
       (1L, 3L, 1L), (2L, 3L, 10L), (4L, 0L, 1L)).toDF("src", "dst", "w")
     val d = Components.sssp(edges, "src", "dst", "w", source = 0L,
-      iterations = 4, checkpoint = false)
+      iterations = 4)
       .as[(Long, Long)].collect().toMap
     assert(d == Map(0L -> 0L, 1L -> 3L, 2L -> 1L, 3L -> 4L))
     // node 4 only has an OUT edge to the source — never reached

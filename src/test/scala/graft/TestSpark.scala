@@ -31,6 +31,29 @@ object TestSpark {
     try { run; org.apache.spark.graftobs.Bus.drain(sc); n.get }
     finally sc.removeSparkListener(l)
   }
+
+  /** The executed plan of every query execution `run` spawns (actions,
+    * collects and eager checkpoints alike), read once the listener bus
+    * has drained. */
+  def plans(run: => Unit): Seq[String] = {
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = got.add(qe.executedPlan.toString)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftobs.Bus.drain(sc)
+    spark.listenerManager.register(l)
+    try {
+      run
+      org.apache.spark.graftobs.Bus.drain(sc)
+      got.toArray(Array.empty[String]).toSeq
+    } finally spark.listenerManager.unregister(l)
+  }
 }
 
 /** One sf0.001 execution per query, shared by GoldenSpec (the hash) and
