@@ -185,7 +185,8 @@ object Components {
     val init = edges.groupBy(col("src").as("id"))
       .agg(least(min(col("dst")), col("src")).as("component"))
       .localCheckpoint(eager = true)
-    RecursiveCte.fixpoint(init, maxIter, "connectedComponents") { labels =>
+    RecursiveCte.fixpoint(init, maxIter, "connectedComponents") {
+      (labels, _) =>
       // (a) pull the neighbour labels, keep the min of (own, neighbours).
       // The vertex's own row rides along with `own` = its current label,
       // so convergence is decided in this same pass (no probe join).

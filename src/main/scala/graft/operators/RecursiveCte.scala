@@ -28,16 +28,17 @@ object RecursiveCte {
   private val CheckpointEvery = 8
 
   /** Runs `round` from `init` until a round reports that it changed
-    * nothing, and returns the state that round produced. A round that
-    * still changes the state at the `maxRounds`-th call means the
-    * recursion does not converge within the bound: `what` names it in
-    * the IllegalStateException. */
+    * nothing, and returns the state that round produced. Each call gets
+    * its round number, counted from 1. A round that still changes the
+    * state at the `maxRounds`-th call means the recursion does not
+    * converge within the bound: `what` names it in the
+    * IllegalStateException. */
   def fixpoint[S](init: S, maxRounds: Int, what: String)(
-      round: S => (S, Boolean)): S = {
+      round: (S, Int) => (S, Boolean)): S = {
     @annotation.tailrec
-    def loop(state: S, rounds: Int): S = round(state) match {
+    def loop(state: S, rounds: Int): S = round(state, rounds) match {
       case (next, false) => next
-      case _ if rounds == maxRounds => throw new IllegalStateException(
+      case _ if rounds >= maxRounds => throw new IllegalStateException(
         s"$what did not converge in $maxRounds rounds")
       case (next, true) => loop(next, rounds + 1)
     }
@@ -70,14 +71,14 @@ object RecursiveCte {
     * back empty. */
   private def union(seed: DataFrame, maxIterations: Int)(
       next: (DataFrame, DataFrame) => DataFrame): DataFrame =
-    fixpoint((seed, seed, 0), maxIterations, "recursive CTE") {
-      case (acc, delta, i) =>
+    fixpoint((seed, seed), maxIterations, "recursive CTE") {
+      case ((acc, delta), round) =>
         val d = next(delta, acc).localCheckpoint(eager = true)
-        if (d.isEmpty) ((acc, d, i), false)
+        if (d.isEmpty) ((acc, d), false)
         else {
           val grown = acc.unionAll(d)
-          ((if ((i + 1) % CheckpointEvery == 0)
-            grown.localCheckpoint(eager = true) else grown, d, i + 1), true)
+          ((if (round % CheckpointEvery == 0)
+            grown.localCheckpoint(eager = true) else grown, d), true)
         }
     }._1
 }

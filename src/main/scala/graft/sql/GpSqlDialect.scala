@@ -5060,10 +5060,8 @@ object GpSqlDialect {
   def executeCluster(
       spark: SparkSession, table: String, cols: Seq[String]): DataFrame = {
     import spark.implicits._
-    val t = catalog(table)
-    val files = graft.operators.Layout.clusterTable(spark, t.path,
-      readTable(spark, t), t.partitionCols, cols)
-    refreshView(spark, t)
+    val files = rewriteTable(spark, catalog(table), "CLUSTER")(
+      graft.operators.Layout.clusterTable(spark, _, _, _, cols))
     Seq((table, cols.mkString(","), files))
       .toDF("table", "cluster_key", "files")
   }
@@ -5073,8 +5071,7 @@ object GpSqlDialect {
     val t = catalog.getOrElse(table, throw new IllegalArgumentException(
       s"VACUUM target $table is not a graft catalog table"))
     val (before, after) =
-      Dml.compact(spark, t.path, readTable(spark, t), t.partitionCols)
-    refreshView(spark, t)
+      rewriteTable(spark, t, "VACUUM")(Dml.compact(spark, _, _, _))
     Seq((table, before, after)).toDF("table", "files_before", "files_after")
   }
 
@@ -6077,24 +6074,30 @@ object GpSqlDialect {
 
   /** Every copy-on-write DML statement on catalog table `t` (UPDATE,
     * DELETE, their FROM / USING forms, MERGE, ON CONFLICT DO UPDATE and
-    * the INSTEAD OF and DML-loop bodies) is one
-    * [[Dml.merge]] over `t` read with its declared
-    * schema, written back with `t`'s partition layout. Afterwards `t`'s
-    * view and the views that read it re-resolve. Returns the
-    * affected-row count. */
+    * the INSTEAD OF and DML-loop bodies) is one [[Dml.merge]] rewrite.
+    * Returns the affected-row count. */
   private def mergeTable(
       spark: SparkSession, t: GpTable, source: Option[Dml.Source],
-      whens: Seq[Dml.When]): Long = {
+      whens: Seq[Dml.When]): Long =
+    rewriteTable(spark, t, "UPDATE, DELETE and MERGE")(
+      Dml.merge(spark, _, _, source, whens, _))
+
+  /** Rewrites catalog table `t` in place. `kernel` gets `t`'s path, its
+    * rows read with the declared schema and its partition columns, and
+    * writes the new rows back as Parquet with that partition layout.
+    * Afterwards `t`'s view and the views that read it re-resolve. */
+  private def rewriteTable[A](
+      spark: SparkSession, t: GpTable, statement: String)(
+      kernel: (String, DataFrame, Seq[String]) => A): A = {
     // the rewrite writes Parquet back: any other format would silently
     // change under a writable external table's readers
     require(t.format == "parquet",
-      s"${t.name}: UPDATE, DELETE and MERGE rewrite Parquet tables only," +
+      s"${t.name}: $statement can only rewrite Parquet tables," +
         s" not ${t.format}")
-    val n = Dml.merge(spark, t.path, readTable(spark, t), source, whens,
-      t.partitionCols)
+    val out = kernel(t.path, readTable(spark, t), t.partitionCols)
     refreshView(spark, t)
     reresolveDependentViews(spark, Set(t.name))
-    n
+    out
   }
 
   /** A DML statement's FROM / USING relation: a catalog table read with

@@ -2250,13 +2250,18 @@ class ExpressionSpec extends AnyFunSuite {
     assert(run("SELECT sum(n_nationkey) AS s FROM ext_out_orc")
       .head.getLong(0) ==
       spark.table("nation").agg(sum("n_nationkey")).head.getLong(0))
-    // copy-on-write DML writes Parquet, so a JSON sink refuses it rather
-    // than come back rewritten in another format
+    // copy-on-write DML, VACUUM and CLUSTER write Parquet, so a JSON
+    // sink refuses them rather than come back rewritten in another format
+    def files() = new java.io.File(s"$base/out_json").list().toSet
+    val jsonFiles = files()
     Seq("DELETE FROM ext_out_json WHERE n_nationkey = 1",
       """MERGE INTO ext_out_json USING nation
         |ON ext_out_json.n_nationkey = nation.n_nationkey
-        |WHEN MATCHED THEN UPDATE SET n_name = 'x'""".stripMargin
+        |WHEN MATCHED THEN UPDATE SET n_name = 'x'""".stripMargin,
+      "VACUUM ext_out_json",
+      "CLUSTER ext_out_json BY (n_nationkey)"
     ).foreach(sql => intercept[IllegalArgumentException](run(sql)))
+    assert(files() == jsonFiles)
     assert(run("SELECT count(*) AS n FROM ext_out_json WHERE n_name <> 'x'")
       .head.getLong(0) == spark.table("nation").count())
   }
@@ -3188,15 +3193,17 @@ class ExpressionSpec extends AnyFunSuite {
       ("r3", "r1", 2, "r0.r1.r3"))) // r4 is level 3 — cut by max_depth 2
   }
 
-  test("tablefunc connectby: one more level of max_depth costs four " +
-    "jobs") {
+  test("tablefunc connectby: one more level of max_depth costs at most " +
+    "four jobs") {
     cbTree()
     // both depths stop above the tree's last level (r4 at level 3), so
     // the difference is one more round of the recursive-CTE loop (its
     // frontier broadcast, checkpoint and probe) plus a checkpoint job
-    // in the last round that the shallower call does not run
+    // in the last round that the shallower call does not run. Probe
+    // scale-up and AQE can drop a job, so the bound is an upper one; a
+    // loop that probed each level twice more would pay six
     val perLevel = jobs(connectby(2)) - jobs(connectby(1))
-    assert(perLevel == 4, s"connectby pays $perLevel jobs per level")
+    assert(perLevel <= 4, s"connectby pays $perLevel jobs per level")
   }
 
   // Quoted text is data: commas, keywords and NEW. references inside a

@@ -45,6 +45,26 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
+  test("RecursiveCte.fixpoint numbers its rounds and fails at the cap") {
+    // every round changes the state; a round past 100 means the cap was
+    // never applied, and fails the test instead of looping on
+    def rounds(cap: Int): Seq[Int] = {
+      val seen = Seq.newBuilder[Int]
+      intercept[IllegalStateException] {
+        RecursiveCte.fixpoint(0, cap, "never") { (n, round) =>
+          assert(round <= 100)
+          seen += round
+          (n + 1, true)
+        }
+      }
+      seen.result()
+    }
+    assert(rounds(3) == Seq(1, 2, 3))
+    // a cap of zero or less still ends the loop after its first round
+    assert(rounds(0) == Seq(1))
+    assert(rounds(-1) == Seq(1))
+  }
+
   test("AsOfJoin.leftAsOf picks latest right row at-or-before left time") {
     import spark.implicits._
     val left = Seq((1L, 10L, 100L), (2L, 10L, 250L), (3L, 20L, 100L))
