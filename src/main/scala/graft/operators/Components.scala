@@ -160,7 +160,7 @@ object Components {
     * same guarantee as large-star/small-star [Kiveris et al., "Connected
     * Components in MapReduce and Beyond"] with a simpler dataflow. Each
     * round is two equi-joins + one partial/final min-aggregate — no
-    * driver state beyond a convergence probe, no all-pairs blowup.
+    * driver state beyond a changed-label count, no all-pairs blowup.
     * Lineage is cut with localCheckpoint every round; the rounds run on
     * [[RecursiveCte.fixpoint]] and stop after the first round that
     * changes no label.
@@ -215,17 +215,18 @@ object Components {
           col("own"))
       val jump2 = step1.select(col("id").as("cid2"),
         col("component").as("ccomp2"))
+      // observed on the checkpoint itself: no probe job after it
+      val changed = org.apache.spark.sql.Observation()
       val next = step1
         .join(jump2, step1("component") === jump2("cid2"), "left")
         .select(step1("id").as("id"),
           coalesce(col("ccomp2"), step1("component")).as("component"),
-          (coalesce(col("ccomp2"), step1("component")) =!= col("own"))
-            .as("changed"))
+          col("own"))
+        .observe(changed,
+          count(when(col("component") =!= col("own"), 1)).as("n"))
+        .select("id", "component")
         .localCheckpoint(eager = true)
-      // any-change probe over the in-memory checkpoint — no join, no
-      // shuffle, early-stops at the first changed partition
-      (next.select("id", "component"),
-        next.filter(col("changed")).limit(1).count() > 0)
+      (next, changed.get("n") != 0L)
     }
   }
 

@@ -118,12 +118,12 @@ object Dml {
     *  - matched clauses only: a left join;
     *  - any NOT MATCHED clause: a full outer join.
     * A target row that two source rows match would come out twice, so
-    * the joins compare their target-side rows with the target's count
-    * and refuse before the swap (PG: "cannot affect row a second
-    * time"). The result replaces the table through [[overwrite]] with
-    * its Hive partition layout. Returns the affected-row count, counted
-    * by `observe()` metrics on the rewrite's own dataflow, not by a
-    * second pass. */
+    * the joins compare their target-side rows with the target's row
+    * count, both observed on the rewrite, and refuse before the swap
+    * (PG: "cannot affect row a second time"). The result replaces the
+    * table through [[overwrite]] with its Hive partition layout.
+    * Returns the affected-row count, counted by `observe()` metrics on
+    * the rewrite's own dataflow, not by a second pass. */
   def merge(
       spark: SparkSession, path: String, target: DataFrame,
       source: Option[Source], whens: Seq[When],
@@ -134,19 +134,23 @@ object Dml {
     require(source.nonEmpty || inserts.isEmpty,
       "WHEN NOT MATCHED needs a source relation")
     val obs = org.apache.spark.sql.Observation()
+    // a join's target rows, observed on the rewrite. AQE drops an empty
+    // target side from a full outer join, and its metric with it
+    val all = org.apache.spark.sql.Observation()
+    val counted = source.fold(target)(_ =>
+      target.observe(all, count(lit(1)).as("n")))
+    def nTarget = all.get.getOrElse("n", 0L).asInstanceOf[Long]
     source match {
       case Some(src) if whens == Seq(Matched(None, Delete)) =>
         // target rows with any match drop; counting both sides of the
         // join gives the deleted rows without a second pass
-        val all = org.apache.spark.sql.Observation()
-        val kept = target.observe(all, count(lit(1)).as("n"))
-          .join(src.rows, src.on, "left_anti")
+        val kept = counted.join(src.rows, src.on, "left_anti")
           .observe(obs, count(lit(1)).as("n"))
         overwrite(spark, path, kept, partitionCols)
-        all.get("n").asInstanceOf[Long] - obs.get("n").asInstanceOf[Long]
+        nTarget - obs.get("n").asInstanceOf[Long]
       case _ =>
-        val tgt =
-          if (inserts.isEmpty) target else target.withColumn(TPresent, lit(true))
+        val tgt = if (inserts.isEmpty) counted
+          else counted.withColumn(TPresent, lit(true))
         val rows = source.fold(tgt) { src =>
           tgt.join(src.rows.withColumn(SPresent, lit(true)), src.on,
             if (inserts.isEmpty) "left" else "full_outer")
@@ -176,9 +180,7 @@ object Dml {
             lit(false)))
         val unInserted =
           if (inserts.isEmpty) None else Some(sourceOnly && !iHits.reduce(_ || _))
-        // the multi-match check counts the join's target-side rows
-        val nTarget = source.map(_ => target.count())
-        val checked = nTarget.map(_ =>
+        val checked = source.map(_ =>
           (if (inserts.isEmpty) count(lit(1)) else count(col(TPresent)))
             .as("n_rows")).toSeq
         val observed = rows.observe(obs,
@@ -202,10 +204,10 @@ object Dml {
             old).cast(f.dataType).as(f.name)
         }: _*)
         overwrite(spark, path, next, partitionCols, validate = () =>
-          nTarget.foreach { n =>
+          source.foreach { _ =>
             val nRows = obs.get("n_rows").asInstanceOf[Long]
-            require(nRows == n,
-              s"a target row matched multiple source rows ($n target rows," +
+            require(nRows == nTarget,
+              s"a target row matched multiple source rows ($nTarget target rows," +
                 s" $nRows join results) and a command cannot affect a row" +
                 " a second time; dedup the source on the join keys")
           })

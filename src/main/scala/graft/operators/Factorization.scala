@@ -121,11 +121,9 @@ object Factorization {
     val (s11, s12, s22) = (col("s11") + lit(lambda), col("s12"),
       col("s22") + lit(lambda))
     val det = s11 * s22 - col("s12") * col("s12")
-    val solved = agg.select(col(keyCol),
+    agg.select(col(keyCol),
       q6((col("b1") * s22 - col("b2") * s12) / det).as("f1"),
       q6((col("b2") * s11 - col("b1") * s12) / det).as("f2"))
-    graft.tools.PlanCapture.record(s"als2.halfround_$keyCol", solved)
-    solved
   }
 
   /** `iterations` full ALS rounds (users given items, then items given
@@ -211,10 +209,8 @@ object Factorization {
         d.select(col("*") +: batch.map { case (n, e) =>
           expr(e).as(n) }: _*)
       }
-      val out = solved.select(col(keyCol) +: (0 until rank).map(i =>
+      solved.select(col(keyCol) +: (0 until rank).map(i =>
         q6(col(s"b${rank - 1}_$i")).as(s"f$i")): _*)
-      graft.tools.PlanCapture.record(s"alsK.halfround_$keyCol", out)
-      out
     }
     var items = byI.select(col("i")).distinct()
       .select(col("i") +: (0 until rank).map { f =>

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Recursive CTE (`WITH RECURSIVE`) — GP executes RecursiveUnion /
   * WorkTableScan (reference: src/backend/executor/nodeRecursiveunion.c:76,
@@ -68,13 +69,16 @@ object RecursiveCte {
 
   /** The semi-naive loop both variants share: `next(delta, acc)` is the
     * round's new rows, checkpointed and appended to `acc` until it comes
-    * back empty. */
+    * back empty. The row count rides the checkpoint as an observed
+    * metric, so no probe job follows it. */
   private def union(seed: DataFrame, maxIterations: Int)(
       next: (DataFrame, DataFrame) => DataFrame): DataFrame =
     fixpoint((seed, seed), maxIterations, "recursive CTE") {
       case ((acc, delta), round) =>
-        val d = next(delta, acc).localCheckpoint(eager = true)
-        if (d.isEmpty) ((acc, d), false)
+        val rows = Observation()
+        val d = next(delta, acc).observe(rows, count(lit(1)).as("n"))
+          .localCheckpoint(eager = true)
+        if (rows.get("n") == 0L) ((acc, d), false)
         else {
           val grown = acc.unionAll(d)
           ((if (round % CheckpointEvery == 0)

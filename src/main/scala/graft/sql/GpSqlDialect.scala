@@ -22,11 +22,6 @@ import graft.operators.{Dml, SequenceOps}
   */
 object GpSqlDialect {
 
-  /** Last INSERT write-side formatted plan — populated only when the
-    * `graft.capture.writeplan` system property is set (dev tooling;
-    * see [[graft.tools.ExplainQuery]]). */
-  @volatile private[graft] var lastWritePlan: String = ""
-
   final case class GpDdl(
       cleanSql: String,
       distributionCols: Seq[String],
@@ -4622,9 +4617,10 @@ object GpSqlDialect {
   }
 
   /** `EXPLAIN [ANALYZE|VERBOSE] stmt` (commands/explain.c ExplainQuery):
-    * one `plan` row per line of the physical plan. ANALYZE executes the
-    * statement and explains the final (AQE-resolved) plan, like GP's
-    * instrumented run; plain EXPLAIN only plans. */
+    * one `plan` row per line of the physical plan; plain EXPLAIN only
+    * plans. ANALYZE forces the statement's result under a
+    * [[graft.obs.Probe]] and prints the plan that ran (AQE-final) with
+    * each node's actual `rows=` (cdbexplain.c), then its job count. */
   private val ExplainRe =
     "(?is)^\\s*EXPLAIN\\s+(ANALYZE\\s+|VERBOSE\\s+)?(.+)$".r
 
@@ -4632,12 +4628,25 @@ object GpSqlDialect {
       spark: SparkSession, mode: Option[String], stmt: String,
       basePath: String): DataFrame = {
     import spark.implicits._
-    val df = execute(spark, stmt, basePath)
-    val analyze = mode.exists(_.trim.equalsIgnoreCase("ANALYZE"))
-    if (analyze) df.write.format("noop").mode("overwrite").save()
-    val text = df.queryExecution.explainString(
-      org.apache.spark.sql.execution.SimpleMode)
-    text.linesIterator.toSeq.toDF("plan")
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def withRows(p: SparkPlan, pad: String): Seq[String] =
+      (pad + p.simpleString(spark.sessionState.conf.maxToStringFields) +
+        p.metrics.get("numOutputRows").fold("")(m => s" rows=${m.value}")) +:
+        (p match {
+          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+          case q: QueryStageExec => Seq(q.plan)
+          case _ => p.children
+        }).flatMap(withRows(_, pad + "  "))
+    (if (!mode.exists(_.trim.equalsIgnoreCase("ANALYZE")))
+      execute(spark, stmt, basePath).queryExecution.explainString(
+        org.apache.spark.sql.execution.SimpleMode).linesIterator.toSeq
+    else {
+      val (_, ran) = graft.obs.Probe(spark)(execute(spark, stmt, basePath)
+        .write.format("noop").mode("overwrite").save())
+      withRows(ran.executions.last.executedPlan, "") :+
+        s"Spark jobs: ${ran.jobs}"
+    }).toDF("plan")
   }
 
   /** One textual ORDER BY item → a Spark sort Column. */
@@ -6032,13 +6041,6 @@ object GpSqlDialect {
         aligned.hint("rebalance",
           t.distributionCols.map(org.apache.spark.sql.functions.col): _*)
       else aligned
-    // dev-only plan capture (graft.tools.ExplainQuery sets the prop):
-    // the INSERT's write-side plan is invisible in any query's final
-    // SELECT, so the REBALANCE write shape is recorded here for the
-    // plans/ artifacts
-    if (sys.props.contains("graft.capture.writeplan"))
-      lastWritePlan = distributed.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
     if (t.format == "csv") {
       graft.sources.ExternalTables.writeCsv(
         distributed, t.path, mode = "append")

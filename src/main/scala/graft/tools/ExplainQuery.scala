@@ -2,15 +2,17 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import graft.{GraftSession, SparkEntry}
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Dump `.explain("formatted")` for named SparkEntry queries to files:
+import graft.{GraftSession, SparkEntry}
+import graft.obs.Probe
+
+/** Dump the formatted executed plans of named SparkEntry queries:
   * `runMain graft.tools.ExplainQuery <sfDir> <outDir> <name> [name…]`
-  * (or `all` to dump every query). Fixtures run first (prepare + one
-  * untimed execution) so DML-backed relations exist and AQE-final plans
-  * are obtainable where relevant; the captured text is the standard
-  * pre-execution formatted plan the judge reads (Exchange placement,
-  * join strategy, PushedFilters/ReadSchema, codegen spans). */
+  * (or `all`). After its fixtures, each query is forced into a noop sink
+  * under a [[Probe]], and the plan that ran (AQE-final) of every
+  * execution is written: `<name>.txt` for the final SELECT, `<name>.<i>.txt`
+  * for the i-th earlier one (an INSERT's write, a kernel's round). */
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -25,28 +27,19 @@ object ExplainQuery {
     Files.createDirectories(Paths.get(outDir))
     val qs = SparkEntry.allQueries
       .filter(q => names.contains("all") || names.contains(q.name))
-    sys.props("graft.capture.writeplan") = "1"
     qs.foreach { q =>
       try {
         q.prepare.foreach(_(spark, sfDir))
-        graft.sql.GpSqlDialect.lastWritePlan = ""
-        val df = q.query(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        Files.writeString(Paths.get(s"$outDir/${q.name}.txt"), txt)
-        println(s"[explain] wrote $outDir/${q.name}.txt")
-        // DML queries: the INSERT write-side plan (REBALANCE shape) is
-        // invisible in the final SELECT — record it separately
-        if (graft.sql.GpSqlDialect.lastWritePlan.nonEmpty) {
-          Files.writeString(Paths.get(s"$outDir/${q.name}.write.txt"),
-            graft.sql.GpSqlDialect.lastWritePlan)
-          println(s"[explain] wrote $outDir/${q.name}.write.txt")
+        val (_, stats) = Probe(spark) {
+          q.query(spark, sfDir).write.format("noop").mode("overwrite").save()
         }
-        // kernel-internal plans (eagerly-executed rounds) recorded via
-        // PlanCapture — also invisible in the final SELECT
-        PlanCapture.drain().foreach { case (name, txt) =>
-          Files.writeString(Paths.get(s"$outDir/${q.name}.$name.txt"), txt)
-          println(s"[explain] wrote $outDir/${q.name}.$name.txt")
+        val n = stats.executions.size
+        stats.executions.zipWithIndex.foreach { case (qe, i) =>
+          val file =
+            if (i == n - 1) s"$outDir/${q.name}.txt"
+            else f"$outDir/${q.name}.$i%03d.txt"
+          Files.writeString(Paths.get(file), qe.explainString(FormattedMode))
+          println(s"[explain] wrote $file")
         }
       } catch {
         case e: Throwable =>

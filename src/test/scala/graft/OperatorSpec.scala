@@ -1074,6 +1074,25 @@ class OperatorSpec extends AnyFunSuite {
     assert(spark.read.parquet(path).count() == 2)
   }
 
+  test("Dml.merge inserts into an empty target") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_merge_empty"
+    Seq((1L, 10L)).toDF("id", "v").filter(lit(false))
+      .write.mode("overwrite").parquet(path)
+    // the full outer join's empty target side carries the target-count
+    // metric of the multi-match check; AQE may drop both
+    val n = Dml.merge(spark, path, spark.read.parquet(path),
+      Some(Dml.Source(Seq((1L, 100L)).toDF("sid", "sv"),
+        col("id") === col("sid"))),
+      Seq(Dml.Matched(None, Dml.Update(Map("v" -> col("sv")))),
+        Dml.NotMatched(None,
+          Dml.Insert(Map("id" -> col("sid"), "v" -> col("sv"))))), Nil)
+    assert(n == 1)
+    assert(spark.read.parquet(path).as[(Long, Long)].collect().toSeq ==
+      Seq((1L, 100L)))
+  }
+
   test("Trees.decisionTree: broadcast-join reassignment ≡ CASE chain") {
     import spark.implicits._
     // the r8 depth guard switches frontier reassignment from a CASE

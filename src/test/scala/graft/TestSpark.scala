@@ -15,45 +15,14 @@ object TestSpark {
     GraftSession.configure(s)
   }
 
-  /** Spark jobs started by `run`, counted once the listener bus has
-    * drained, so no event of an earlier action or a late event of `run`
-    * is miscounted. */
-  def jobs(run: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graftobs.Bus.drain(sc)
-    sc.addSparkListener(l)
-    try { run; org.apache.spark.graftobs.Bus.drain(sc); n.get }
-    finally sc.removeSparkListener(l)
-  }
+  /** Spark jobs started by `run`, counted by a [[graft.obs.Probe]]. */
+  def jobs(run: => Unit): Int = graft.obs.Probe(spark)(run)._2.jobs
 
   /** The executed plan of every query execution `run` spawns (actions,
-    * collects and eager checkpoints alike), read once the listener bus
-    * has drained. */
-  def plans(run: => Unit): Seq[String] = {
-    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = got.add(qe.executedPlan.toString)
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.graftobs.Bus.drain(sc)
-    spark.listenerManager.register(l)
-    try {
-      run
-      org.apache.spark.graftobs.Bus.drain(sc)
-      got.toArray(Array.empty[String]).toSeq
-    } finally spark.listenerManager.unregister(l)
-  }
+    * collects and eager checkpoints alike), as a [[graft.obs.Probe]]
+    * records them. */
+  def plans(run: => Unit): Seq[String] =
+    graft.obs.Probe(spark)(run)._2.executions.map(_.executedPlan.toString)
 }
 
 /** One sf0.001 execution per query, shared by GoldenSpec (the hash) and
