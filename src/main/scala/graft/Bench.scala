@@ -74,6 +74,29 @@ object Bench {
       finally src.close()
     } catch { case _: Throwable => Map.empty }
 
+  // All numeric formatting goes through Locale.ROOT — the JVM default
+  // locale can print a decimal COMMA, which would corrupt the JSON
+  // artifact this main exists to emit.
+  private def num(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.6g", Double.box(v)).trim
+
+  /** Per-query seconds as `{"metric":"times","part":i,"of":n,"queries":
+    * {…}}` lines of at most 2 KB, so that a capture of stdout's last
+    * 4 KB parses them. */
+  private[graft] def timesLines(times: Seq[(String, Double)]): Seq[String] = {
+    val parts = times.map { case (q, s) => "\"" + q + "\":" + num(s) }
+      .foldLeft(Vector.empty[Vector[String]]) {
+        // 64 bytes hold the envelope, part numbers up to four digits
+        case (ps :+ p, e) if (p :+ e).mkString(",").length <= 2048 - 64 =>
+          ps :+ (p :+ e)
+        case (ps, e) => ps :+ Vector(e)
+      }
+    parts.zipWithIndex.map { case (p, i) =>
+      s"""{"metric":"times","part":${i + 1},"of":${parts.size},""" +
+        p.mkString("\"queries\":{", ",", "}}")
+    }
+  }
+
   private def saveHistory(h: Map[(String, String), Double]): Unit =
     try {
       val body = h.toSeq.sortBy { case ((sf, q), _) => (sf, q) }
@@ -215,11 +238,6 @@ object Bench {
     }
     saveHistory(hist)
 
-    // All numeric formatting below goes through Locale.ROOT — the JVM
-    // default locale can print a decimal COMMA, which would corrupt the
-    // JSON artifact this main exists to emit.
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.6g", Double.box(v)).trim
     def num3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def num2(v: Double): String =
@@ -258,6 +276,9 @@ object Bench {
     val sustained = results.count { case (_, _, mn, _, _, conf) =>
       conf.exists(c => mn / math.max(c._1, 1e-9) > 1.3) }
     println(s"""{"metric":"summary","total_s":${num3(total)},"n":${results.size},"noisy_after_retry":$noisy,"sustained_load_queries":$sustained,"load_start":${num2(loadStart)},"load_end":${num2(loadavg())},"nproc":${Runtime.getRuntime.availableProcessors()},"wall_s":${num3(elapsedS)},"budget_s":${num3(budgetS)},"confirmed":${confirm.size},"failed":${failed.size},"failed_queries":$failedJson,"slowest":$slowest,"sf":"$sfDir"}""")
+    // the per-query seconds once more, last and in lines a tail-only
+    // capture can parse (the `total` line above is one long line)
+    timesLines(results.map(r => r._1 -> r._2)).foreach(println)
     spark.stop()
   }
 }

@@ -18,23 +18,29 @@ import org.apache.spark.sql.functions._
   * table. */
 object Dml {
 
-  /** Replace the table at `path` with `next` via rename-aside swap:
+  /** Where and how a table's files are written: its directory, its Hive
+    * partition columns and its Parquet codec. */
+  final case class Storage(
+      path: String, partitionCols: Seq[String], codec: String)
+
+  /** Replace the table at `to.path` with `next` via rename-aside swap:
     * write tmp → move live dir aside → move tmp into place → drop the
     * old copy. A crash at any step leaves either the old or the new
     * table recoverable on disk (the previous delete-then-rename lost
     * the published table if it died between the two calls).
-    * `partitionCols` keeps a partitioned table's Hive directory layout
+    * `to.partitionCols` keeps a partitioned table's Hive directory layout
     * through the rewrite (columns no longer present are skipped, for
-    * DROP COLUMN of a partition key). */
+    * DROP COLUMN of a partition key); the files are written with
+    * `to.codec`. */
   private[graft] def overwrite(
-      spark: SparkSession, path: String, next: DataFrame,
-      partitionCols: Seq[String] = Seq.empty,
+      spark: SparkSession, to: Storage, next: DataFrame,
       validate: () => Unit = () => ()): Unit = {
+    val path = to.path
     val tmp = path + ".cow-tmp"
     val old = path + ".cow-old"
-    val keep = partitionCols.filter(next.columns.map(_.toLowerCase)
+    val keep = to.partitionCols.filter(next.columns.map(_.toLowerCase)
       .contains(_))
-    val w = next.write.mode("overwrite")
+    val w = next.write.mode("overwrite").option("compression", to.codec)
     (if (keep.nonEmpty) w.partitionBy(keep: _*) else w).parquet(tmp)
     // post-write, pre-swap validation hook: a failed contract (e.g. the
     // UPDATE ... FROM multi-match guard) aborts BEFORE the rename, so the
@@ -61,18 +67,17 @@ object Dml {
     * Every DML here is copy-on-write, so the small-file problem arrives
     * with frequent updates exactly like AO segment bloat — compaction is
     * the maintenance op that keeps scan task counts sane at 100 TB.
-    * `table` is the table at `path` read with its declared schema; the
-    * rewrite keeps its Hive partition layout. Returns (filesBefore,
-    * filesAfter), counting the data files of every partition. */
+    * `table` is the table at `to.path` read with its declared schema;
+    * the rewrite keeps its storage. Returns (filesBefore, filesAfter),
+    * counting the data files of every partition. */
   def compact(
-      spark: SparkSession, path: String, table: DataFrame,
-      partitionCols: Seq[String],
+      spark: SparkSession, to: Storage, table: DataFrame,
       targetBytes: Long = 128L << 20): (Int, Int) = {
-    val before = dataFiles(spark, path)
+    val before = dataFiles(spark, to.path)
     val totalBytes = before.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    overwrite(spark, path, table.coalesce(nOut), partitionCols)
-    (before.size, dataFiles(spark, path).size)
+    overwrite(spark, to, table.coalesce(nOut))
+    (before.size, dataFiles(spark, to.path).size)
   }
 
   /** The parquet data files under `path`, partition directories
@@ -110,7 +115,7 @@ object Dml {
 
   /** The one copy-on-write DML rewrite (PG 15's ExecMerge; UPDATE and
     * DELETE are the MERGE of the table with itself, GP's SplitUpdate the
-    * update that re-places its row). `target` is the table at `path`;
+    * update that re-places its row). `target` is the table at `to.path`;
     * `whens` run in order and the first clause whose guard holds takes
     * the row, as one CASE chain. The join follows from the clauses:
     *  - no source: one scan plus a filter or a projection;
@@ -121,13 +126,12 @@ object Dml {
     * the joins compare their target-side rows with the target's row
     * count, both observed on the rewrite, and refuse before the swap
     * (PG: "cannot affect row a second time"). The result replaces the
-    * table through [[overwrite]] with its Hive partition layout.
+    * table through [[overwrite]] with its storage.
     * Returns the affected-row count, counted by `observe()` metrics on
     * the rewrite's own dataflow, not by a second pass. */
   def merge(
-      spark: SparkSession, path: String, target: DataFrame,
-      source: Option[Source], whens: Seq[When],
-      partitionCols: Seq[String]): Long = {
+      spark: SparkSession, to: Storage, target: DataFrame,
+      source: Option[Source], whens: Seq[When]): Long = {
     val matched = whens.collect { case m: Matched => m }
     val inserts = whens.collect { case n: NotMatched => n }
     require(matched.nonEmpty || inserts.nonEmpty, "MERGE without WHEN clauses")
@@ -146,7 +150,7 @@ object Dml {
         // join gives the deleted rows without a second pass
         val kept = counted.join(src.rows, src.on, "left_anti")
           .observe(obs, count(lit(1)).as("n"))
-        overwrite(spark, path, kept, partitionCols)
+        overwrite(spark, to, kept)
         nTarget - obs.get("n").asInstanceOf[Long]
       case _ =>
         val tgt = if (inserts.isEmpty) counted
@@ -203,7 +207,7 @@ object Dml {
           else firstOf(setting.map { case (h, v) => h -> v.getOrElse(old) },
             old).cast(f.dataType).as(f.name)
         }: _*)
-        overwrite(spark, path, next, partitionCols, validate = () =>
+        overwrite(spark, to, next, validate = () =>
           source.foreach { _ =>
             val nRows = obs.get("n_rows").asInstanceOf[Long]
             require(nRows == nTarget,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Physical data layout maintenance (reference: commands/cluster.c —
@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   * codegen'd integer arithmetic (scale each key to `bits` bits with
   * min/max from a one-pass stats scan, then interleave); no UDFs, no
   * driver data. At 100 TB you CLUSTER partition-by-partition, exactly
-  * like VACUUM FULL compaction (Dml.compact). */
+  * like VACUUM FULL compaction (Dml.compact). GpSqlDialect's CLUSTER
+  * writes [[zorder]]'s rows through the copy-on-write swap. */
 object Layout {
 
   /** Morton/Z value of `cols`, each min/max-scaled to `bits` bits and
@@ -60,17 +61,5 @@ object Layout {
       .repartitionByRange(math.max(df.rdd.getNumPartitions, 1), col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-  }
-
-  /** `CLUSTER table BY (cols)` — rewrite the catalog table's parquet in
-    * Z-order (in-place swap like every Dml rewrite). `table` is the
-    * table at `path` read with its declared schema; the rewrite keeps
-    * its Hive partition layout. Returns the data-file count after the
-    * rewrite, every partition included. */
-  def clusterTable(
-      spark: SparkSession, path: String, table: DataFrame,
-      partitionCols: Seq[String], colNames: Seq[String]): Int = {
-    Dml.overwrite(spark, path, zorder(table, colNames), partitionCols)
-    Dml.dataFiles(spark, path).size
   }
 }

@@ -14,17 +14,21 @@ object StorageQueries {
   private def tmp(name: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_$name"
 
+  /** An unpartitioned Parquet fixture directory that DML rewrites with
+    * Spark's default codec. */
+  private def fixture(path: String) = Dml.Storage(path, Nil, "snappy")
+
   /** MERGE of `source` (the target's columns) into the table at `path`
     * on `key`: matched rows take the source row, the others insert. */
   private def upsertOn(
       s: org.apache.spark.sql.SparkSession, path: String,
       source: org.apache.spark.sql.DataFrame, key: String): Unit = {
     val row = source.columns.map(c => c -> col(s"s_$c")).toMap
-    Dml.merge(s, path, s.read.parquet(path),
+    Dml.merge(s, fixture(path), s.read.parquet(path),
       Some(Dml.Source(source.toDF(source.columns.map("s_" + _): _*),
         col(key) === col(s"s_$key"))),
       Seq(Dml.Matched(None, Dml.Update(row)),
-        Dml.NotMatched(None, Dml.Insert(row))), Nil)
+        Dml.NotMatched(None, Dml.Insert(row))))
   }
 
   /** Shared fixture: orders partitioned by year (q_partitioned_scan, q_dpp). */
@@ -89,7 +93,8 @@ object StorageQueries {
             |DISTRIBUTED BY (o_custkey)""".stripMargin)
         assert(ddl.distributionCols == Seq("o_custkey"))
         val sel = Tables.T(s, dir).orders.filter($"o_orderdate" >= "1998-01-01")
-        GpSqlDialect.createTableAs(s, ddl, sel, tmp("ctas_orders98"))
+        GpSqlDialect.readTable(s, GpSqlDialect.createTableAs(
+            s, "orders_98", ddl, sel, tmp("ctas_orders98")))
           .groupBy($"o_orderstatus")
           .agg(count(lit(1)).as("n"), Q.dsum($"o_totalprice").as("total"))
           .orderBy("o_orderstatus")
@@ -398,9 +403,8 @@ object StorageQueries {
       (s, dir) =>
         import s.implicits._
         val path = tmp("dml_delete_orders")
-        Dml.merge(s, path, s.read.parquet(path), None,
-          Seq(Dml.Matched(Some(col("o_orderstatus") === "F"), Dml.Delete)),
-          Nil)
+        Dml.merge(s, fixture(path), s.read.parquet(path), None,
+          Seq(Dml.Matched(Some(col("o_orderstatus") === "F"), Dml.Delete)))
         s.read.parquet(path)
           .groupBy($"o_orderstatus")
           .agg(count(lit(1)).as("n"), Q.dsum($"o_totalprice").as("total"))
@@ -422,10 +426,9 @@ object StorageQueries {
       (s, dir) =>
         import s.implicits._
         val path = tmp("dml_update_orders")
-        Dml.merge(s, path, s.read.parquet(path), None,
+        Dml.merge(s, fixture(path), s.read.parquet(path), None,
           Seq(Dml.Matched(Some(col("o_orderstatus") === "O"),
-            Dml.Update(Map("o_totalprice" -> (col("o_totalprice") * 1.1))))),
-          Nil)
+            Dml.Update(Map("o_totalprice" -> (col("o_totalprice") * 1.1))))))
         s.read.parquet(path)
           .groupBy($"o_orderstatus")
           .agg(count(lit(1)).as("n"), Q.dsum($"o_totalprice").as("total"))
@@ -451,11 +454,10 @@ object StorageQueries {
       val building = Tables.T(s, dir).customer
         .filter($"c_mktsegment" === "BUILDING")
         .select($"c_custkey")
-      Dml.merge(s, path, s.read.parquet(path),
+      Dml.merge(s, fixture(path), s.read.parquet(path),
         Some(Dml.Source(building, col("o_custkey") === col("c_custkey"))),
         Seq(Dml.Matched(None,
-          Dml.Update(Map("o_totalprice" -> (col("o_totalprice") * 0.9))))),
-        Nil)
+          Dml.Update(Map("o_totalprice" -> (col("o_totalprice") * 0.9))))))
       s.read.parquet(path)
         .groupBy($"o_orderstatus")
         .agg(count(lit(1)).as("n"), Q.dsum($"o_totalprice").as("total"))

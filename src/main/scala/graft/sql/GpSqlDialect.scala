@@ -778,14 +778,14 @@ object GpSqlDialect {
     val ddl = parse(stripPartitionBy(trimmed)._1)
     ddl.cleanSql match {
       case Ctas(name, select) =>
-        val written = createTableAs(
-          spark, ddl, spark.sql(select), s"$basePath/$name")
-        written.createOrReplaceTempView(name)
         // CTAS tables join the session catalog so later INSERT INTO /
         // COPY / partition maintenance address them like CREATE TABLE
-        catalog.put(name.toLowerCase, GpTable(name.toLowerCase,
-          s"$basePath/$name", written.schema, Seq.empty,
-          ddl.distributionCols))
+        val t = createTableAs(spark, name.toLowerCase, ddl,
+          spark.sql(select), s"$basePath/$name")
+        catalog.put(t.name, t)
+        val back = readTable(spark, t)
+        val written = if (ddl.replicated) back.hint("broadcast") else back
+        written.createOrReplaceTempView(name)
         written
       case other =>
         CreateWithCols.findFirstMatchIn(other) match {
@@ -2752,10 +2752,8 @@ object GpSqlDialect {
     * statement evaluates SET-BASED against ALL affected rows at once.
     * Body INSERTs still fire base-table BEFORE ROW triggers (PG
     * nesting); body UPDATE/DELETE reject on triggered bases like the
-    * other composed DML paths. Afterwards views that read a table the
-    * body inserted into re-resolve (their registered temp views captured
-    * the parquet file listing before these writes; UPDATE and DELETE
-    * steps re-resolve theirs in [[mergeTable]]). */
+    * other composed DML paths. Each step re-resolves the views that read
+    * its table, as every write does ([[refreshViews]]). */
   private def runInsteadSteps(
       spark: SparkSession, trigName: String, fn: String,
       bound: DataFrame): Unit = {
@@ -2791,8 +2789,6 @@ object GpSqlDialect {
             Seq(Dml.Matched(None, Dml.Delete)))
       }
     }
-    reresolveDependentViews(spark,
-      steps.collect { case InsteadInsert(table, _, _) => table }.toSet)
   }
 
   /** INSERT INTO a view bearing an INSTEAD OF INSERT trigger: align
@@ -2898,23 +2894,10 @@ object GpSqlDialect {
     override def initialValue: Integer = 0
   }
 
-  /** Recursive data-file listing under a table directory (skips
-    * `_SUCCESS`/dot files) — the file-granular delta basis for
+  /** A table's data files — the file-granular delta basis for
     * transition tables: O(metadata), zero rows read. */
-  private def listDataFiles(
-      spark: SparkSession, dir: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Set.empty
-    val it = fs.listFiles(p, true)
-    val b = Set.newBuilder[String]
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) b += f.getPath.toString
-    }
-    b.result()
-  }
+  private def listDataFiles(spark: SparkSession, t: GpTable): Set[String] =
+    Dml.dataFiles(spark, t.path).map(_.getPath.toString).toSet
 
   /** Bind a transition-table trigger's OLD/NEW TABLE temp views for
     * the statement that just ran (trigger.c AfterTriggerSaveEvent,
@@ -2937,7 +2920,7 @@ object GpSqlDialect {
     val t = catalog.getOrElse(table.toLowerCase,
       throw new IllegalStateException(
         s"transition trigger ${tg.name}: table $table left the catalog"))
-    val curFiles = listDataFiles(spark, t.path)
+    val curFiles = listDataFiles(spark, t)
     def readFiles(fset: Set[String]): DataFrame =
       if (fset.isEmpty)
         spark.createDataFrame(
@@ -2955,7 +2938,7 @@ object GpSqlDialect {
           throw new UnsupportedOperationException(
             s"transition trigger ${tg.name} on $table: the statement " +
               "rewrote table files but no pre-image was retained — " +
-              "TRUNCATE and ALTER TABLE ... PARTITION do not capture " +
+              "ALTER TABLE ... PARTITION does not capture " +
               "(see operators/Cdc.scala scope)")
         val prev = spark.read.parquet(prevDir)
         val cur = readTable(spark, t)
@@ -3009,7 +2992,7 @@ object GpSqlDialect {
         .exists(tg => tg.timing == "after" && tg.events.contains(ev) &&
           (tg.oldTab.nonEmpty || tg.newTab.nonEmpty))
       if (needsTrans)
-        catalog.get(t.toLowerCase).map(gt => listDataFiles(spark, gt.path))
+        catalog.get(t.toLowerCase).map(listDataFiles(spark, _))
       else None
     }
     target.foreach { case (t, ev) =>
@@ -4275,7 +4258,7 @@ object GpSqlDialect {
         // perfectly balanced instead of maximally skewed
         val segs = spark.range(SkewSegments)
           .select(col("id").cast("int").as("__seg"))
-        val occupied = spark.read.parquet(t.path)
+        val occupied = readTable(spark, t)
           .groupBy(pmod(hash(t.distributionCols.map(col): _*),
             lit(SkewSegments)).as("__seg"))
           .agg(count(lit(1)).as("__n"))
@@ -4563,53 +4546,39 @@ object GpSqlDialect {
     lastRefreshIncremental = false
     val inc = parseIncremental(mv.sql)
     val baseTable = inc.flatMap(ia => catalog.get(ia.table))
-    val nowFiles: Set[String] = baseTable match {
-      case Some(t) =>
-        try spark.read.parquet(t.path).inputFiles.toSet
-        catch { case _: Throwable => Set.empty }
-      case None => Set.empty
-    }
+      .filter(_.format == "parquet")
+    val nowFiles =
+      baseTable.fold(Set.empty[String])(readTable(spark, _).inputFiles.toSet)
     val newFiles = nowFiles -- mv.baseFiles
     val appendOnly = mv.baseFiles.nonEmpty &&
       mv.baseFiles.subsetOf(nowFiles) && newFiles.nonEmpty
-    (inc, baseTable) match {
+    val (next, incremental) = (inc, baseTable) match {
       case (Some(ia), Some(t)) if appendOnly =>
         // delta aggregate over just the new files, merged into the
         // stored matview with each agg's combine function
         val delta0 = spark.read.option("basePath", t.path)
-          .schema(spark.read.parquet(t.path).schema)
-          .parquet(newFiles.toSeq: _*)
+          .schema(t.schema).parquet(newFiles.toSeq: _*)
         val delta = ia.where.map(delta0.filter).getOrElse(delta0)
           .groupBy(ia.groupCols.map(col): _*)
           .agg(aggColumns(ia.aggs).head, aggColumns(ia.aggs).tail: _*)
-        val merged = spark.read.parquet(mv.path)
-          .unionByName(delta)
+        val stored = spark.read.parquet(mv.path)
+        val combine = ia.aggs.map {
+          case ("min", _, a) => min(col(a)).as(a)
+          case ("max", _, a) => max(col(a)).as(a)
+          case (_, _, a) => sum(col(a)).as(a) // count/sum combine = sum
+        }
+        val merged = stored.unionByName(delta)
           .groupBy(ia.groupCols.map(col): _*)
-          .agg(ia.aggs.map {
-            case ("min", _, a) => min(col(a)).as(a)
-            case ("max", _, a) => max(col(a)).as(a)
-            case (_, _, a) => sum(col(a)).as(a) // count/sum combine = sum
-          }.head, ia.aggs.map {
-            case ("min", _, a) => min(col(a)).as(a)
-            case ("max", _, a) => max(col(a)).as(a)
-            case (_, _, a) => sum(col(a)).as(a)
-          }.tail: _*)
+          .agg(combine.head, combine.tail: _*)
         // cast merged combine outputs back onto the stored schema (sum
         // of longs widens count columns consistently; decimals align)
-        val stored = spark.read.parquet(mv.path).schema
-        val aligned = merged.select(stored.fields.map(f =>
-          col(f.name).cast(f.dataType).as(f.name)): _*)
-        val tmpPath = mv.path + "_delta_tmp"
-        aligned.write.mode("overwrite").parquet(tmpPath)
-        spark.read.parquet(tmpPath).write.mode("overwrite").parquet(mv.path)
-        val tp = new org.apache.hadoop.fs.Path(tmpPath)
-        tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(tp, true)
-        lastRefreshIncremental = true
-      case _ =>
-        execute(spark, mv.sql, basePath)
-          .write.mode("overwrite").parquet(mv.path)
+        (merged.select(stored.schema.fields.toSeq.map(f =>
+          col(f.name).cast(f.dataType).as(f.name)): _*), true)
+      case _ => (execute(spark, mv.sql, basePath), false)
     }
+    // the swap lets the incremental branch read the rows it replaces
+    Dml.overwrite(spark, Dml.Storage(mv.path, Nil, "snappy"), next)
+    lastRefreshIncremental = incremental
     matviews.put(name, mv.copy(baseFiles = nowFiles))
     val df = spark.read.parquet(mv.path)
     df.createOrReplaceTempView(name)
@@ -4697,19 +4666,20 @@ object GpSqlDialect {
   private val viewDefs =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** Re-resolve registered views whose definition references any of
-    * `tables`: a temp view captures the parquet FILE LISTING at
-    * CREATE VIEW, so every DML executor that writes a catalog table
-    * must re-execute dependents or reads through them stay stale
+  /** Re-resolve registered views whose definition references `table`:
+    * a temp view captures the parquet FILE LISTING at CREATE VIEW, so
+    * every statement that writes a catalog table must re-execute
+    * dependents ([[refreshViews]]) or reads through them stay stale
     * (lazy plan re-analysis only — no data moves here). */
   private def reresolveDependentViews(
-      spark: SparkSession, tables: Set[String]): Unit =
+      spark: SparkSession, table: String): Unit = {
+    val reads = s"(?i)(?<![\\w.])$table(?![\\w.])".r
     viewDefs.foreach { case (vn, bodySql) =>
-      if (tables.exists(tn => s"(?i)(?<![\\w.])$tn(?![\\w.])".r
-          .findFirstIn(bodySql).isDefined))
+      if (reads.findFirstIn(bodySql).isDefined)
         executeImpl(spark, bodySql, "/tmp/never")
           .createOrReplaceTempView(vn)
     }
+  }
 
   def executeCreateView(
       spark: SparkSession, name: String, body: String,
@@ -4795,17 +4765,12 @@ object GpSqlDialect {
     cols.toSeq.flatten.foreach(c =>
       require(t.schema.fieldNames.map(_.toLowerCase).contains(c),
         s"distribution column $c not in $table"))
-    val newDist =
+    val next = t.copy(distributionCols =
       if (randomly) Seq.empty[String]
-      else cols.getOrElse(t.distributionCols) // REORGANIZE keeps policy
-    val df = spark.read.parquet(t.path)
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val redistributed =
-      if (newDist.nonEmpty) df.repartition(parts, newDist.map(df.col): _*)
-      else df.repartition(parts)
-    Dml.overwrite(spark, t.path, redistributed, t.partitionCols)
-    catalog.put(table, t.copy(distributionCols = newDist))
-    refreshView(spark, catalog(table))
+      else cols.getOrElse(t.distributionCols)) // REORGANIZE keeps policy
+    rewriteTable(spark, t, next, "SET DISTRIBUTED")((to, rows) =>
+      Dml.overwrite(spark, to, laidOut(next, rows)))
+    spark.table(table)
   }
 
   /** `ALTER TABLE t SET SCHEMA s` (AlterObjectNamespace) — re-keys the
@@ -4887,15 +4852,18 @@ object GpSqlDialect {
 
   def executeAlterColumn(
       spark: SparkSession, table: String, action: String): DataFrame = {
-    import org.apache.spark.sql.functions.{expr, lit}
+    import org.apache.spark.sql.functions.{coalesce, expr, lit}
     val t = catalog(table)
-    val df = spark.read.parquet(t.path)
-    val next: Option[DataFrame] = action match {
+    def requireColumn(name: String) =
+      require(t.schema.fieldNames.exists(_.equalsIgnoreCase(name)),
+        s"column $name of $table does not exist")
+    // the row kernel of an action that rewrites the table; the other
+    // actions change the catalog entry only
+    val change: Option[DataFrame => DataFrame] = action match {
       case AddCheckConstraintRe(cname, chk) =>
         // validate existing rows like ATExecAddConstraint (NULL passes)
-        val bad = df.filter(
-          !org.apache.spark.sql.functions.coalesce(
-            expr(chk), lit(true))).count()
+        val bad = readTable(spark, t)
+          .filter(!coalesce(expr(chk), lit(true))).count()
         if (bad > 0) throw new IllegalStateException(
           s"""check constraint "$cname" of relation "$table" is """ +
             s"violated by $bad existing row(s)")
@@ -4907,26 +4875,21 @@ object GpSqlDialect {
       case AddColRe(name, sqlType, default) =>
         val d = Option(default).map(expr)
           .getOrElse(lit(null)).cast(toSparkType(sqlType.trim))
-        Some(df.withColumn(name.toLowerCase, d))
+        Some(_.withColumn(name.toLowerCase, d))
       case DropColRe(name) =>
-        require(df.columns.map(_.toLowerCase).contains(name.toLowerCase),
-          s"column $name of $table does not exist")
-        Some(df.drop(name))
+        requireColumn(name)
+        Some(_.drop(name))
       case RenameColRe(from, to) =>
-        Some(df.withColumnRenamed(from, to))
+        Some(_.withColumnRenamed(from, to))
       case AlterTypeRe(name, sqlType, usingExpr) =>
-        require(df.columns.map(_.toLowerCase).contains(name.toLowerCase),
-          s"column $name of $table does not exist")
-        val v = Option(usingExpr).map(expr).getOrElse(df.col(name))
-          .cast(toSparkType(sqlType.trim))
-        Some(df.withColumn(name.toLowerCase, v))
+        requireColumn(name)
+        Some(df => df.withColumn(name.toLowerCase,
+          Option(usingExpr).map(expr).getOrElse(df.col(name))
+            .cast(toSparkType(sqlType.trim))))
       case SetDefaultRe(_, _) | DropDefaultRe(_) => None // catalog-only
       case other => throw new UnsupportedOperationException(
         s"ALTER TABLE $table: unsupported action '${other.trim}'")
     }
-    next.foreach(Dml.overwrite(spark, t.path, _, t.partitionCols))
-    val reloaded = spark.read.parquet(t.path)
-    reloaded.createOrReplaceTempView(table)
     val defaults = action match {
       case SetDefaultRe(name, d) => t.defaults + (name.toLowerCase -> d)
       case DropDefaultRe(name) => t.defaults - name.toLowerCase
@@ -4951,10 +4914,19 @@ object GpSqlDialect {
         }
       case _ => t.checks
     }
-    catalog.put(table, t.copy(schema = reloaded.schema, defaults = defaults,
+    // the declared schema after the change, in declared order: the
+    // kernel over the declared-order rows appends an added column last
+    val schema =
+      change.fold(t.schema)(f => readable(f(readTable(spark, t)).schema))
+    val next = t.copy(schema = schema, defaults = defaults,
       checks = checksAfter,
       partitionCols = t.partitionCols.filter(
-        reloaded.columns.map(_.toLowerCase).contains(_))))
+        schema.fieldNames.map(_.toLowerCase).contains(_)))
+    change match {
+      case Some(f) => rewriteTable(spark, t, next, "ALTER TABLE")(
+        (to, rows) => Dml.overwrite(spark, to, f(rows)))
+      case None => catalog.put(table, next)
+    }
     spark.emptyDataFrame
   }
 
@@ -5069,8 +5041,12 @@ object GpSqlDialect {
   def executeCluster(
       spark: SparkSession, table: String, cols: Seq[String]): DataFrame = {
     import spark.implicits._
-    val files = rewriteTable(spark, catalog(table), "CLUSTER")(
-      graft.operators.Layout.clusterTable(spark, _, _, _, cols))
+    val t = catalog(table)
+    // the data-file count after the rewrite, every partition included
+    val files = rewriteTable(spark, t, t, "CLUSTER") { (to, rows) =>
+      Dml.overwrite(spark, to, graft.operators.Layout.zorder(rows, cols))
+      Dml.dataFiles(spark, to.path).size
+    }
     Seq((table, cols.mkString(","), files))
       .toDF("table", "cluster_key", "files")
   }
@@ -5080,7 +5056,7 @@ object GpSqlDialect {
     val t = catalog.getOrElse(table, throw new IllegalArgumentException(
       s"VACUUM target $table is not a graft catalog table"))
     val (before, after) =
-      rewriteTable(spark, t, "VACUUM")(Dml.compact(spark, _, _, _))
+      rewriteTable(spark, t, t, "VACUUM")(Dml.compact(spark, _, _))
     Seq((table, before, after)).toDF("table", "files_before", "files_after")
   }
 
@@ -5126,30 +5102,26 @@ object GpSqlDialect {
         val incoming = spark.read.schema(s.schema).parquet(s.path)
           .select(dataCols.map(org.apache.spark.sql.functions.col).toSeq: _*)
         val stage = new java.io.File(dir.getParent, s".exchange_$escaped")
-        incoming.write.mode("overwrite").parquet(stage.toString)
-        old.write.mode("overwrite").parquet(s.path)
+        incoming.write.mode("overwrite").option("compression", t.codec)
+          .parquet(stage.toString)
+        rewriteTable(spark, s, s, "EXCHANGE PARTITION")((to, _) =>
+          Dml.overwrite(spark, to, old))
         if (dir.exists()) deleteRec(dir)
         stage.renameTo(dir)
-        refreshView(spark, s)
       case other =>
         throw new UnsupportedOperationException(
           s"ALTER PARTITION op $other")
     }
-    spark.catalog.refreshByPath(t.path)
-    refreshView(spark, t)
+    refreshViews(spark, t)
   }
 
   /** `TRUNCATE TABLE t` — replace contents with an empty relation,
     * keeping schema and physics (commands/tablecmds.c ExecuteTruncate). */
   def executeTruncate(spark: SparkSession, table: String): DataFrame = {
     val t = catalog(table)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], t.schema)
-    val w = empty.write.mode("overwrite")
-    (if (t.partitionCols.nonEmpty) w.partitionBy(t.partitionCols: _*) else w)
-      .parquet(t.path)
-    spark.catalog.refreshByPath(t.path)
-    refreshView(spark, t)
+    rewriteTable(spark, t, t, "TRUNCATE")((to, rows) =>
+      Dml.overwrite(spark, to, rows.limit(0)))
+    spark.table(table)
   }
 
   // ---- phase 2: WITH RECURSIVE --------------------------------------
@@ -5398,9 +5370,13 @@ object GpSqlDialect {
     }
   }
 
+  /** A catalog table. `codec` is the Parquet codec of its files, set
+    * once at CREATE from `compresstype` ([[parquetCodec]]); every later
+    * write of the table uses it. */
   final case class GpTable(
       name: String, path: String, schema: StructType,
       partitionCols: Seq[String], distributionCols: Seq[String],
+      codec: String,
       format: String = "parquet", defaults: Map[String, String] = Map.empty,
       checks: Seq[String] = Seq.empty)
 
@@ -5519,13 +5495,19 @@ object GpSqlDialect {
     val schema = catalog.get(src).map(_.schema)
       .getOrElse(spark.table(src).schema)
     val ddl = parse(fullSql)
-    val path = s"$basePath/$name"
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      .write.mode("overwrite").option("compression", parquetCodec(ddl))
-      .parquet(path)
-    catalog(name) = GpTable(name, path, schema, Seq.empty,
-      ddl.distributionCols)
-    refreshView(spark, catalog(name))
+    createEmpty(spark, GpTable(name, s"$basePath/$name", schema, Seq.empty,
+      ddl.distributionCols, parquetCodec(ddl)))
+  }
+
+  /** Registers the new catalog table `t` with no rows: its empty files
+    * carry the schema, the codec and the partition layout. */
+  private def createEmpty(spark: SparkSession, t: GpTable): DataFrame = {
+    val w = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], t.schema)
+      .write.mode("overwrite").option("compression", t.codec)
+    (if (t.partitionCols.nonEmpty) w.partitionBy(t.partitionCols: _*) else w)
+      .parquet(t.path)
+    catalog(t.name) = t
+    refreshView(spark, t)
   }
 
   def executeCreateTable(
@@ -5563,15 +5545,9 @@ object GpSqlDialect {
     }.toMap
     partCols.foreach(p => require(schema.fieldNames.contains(p),
       s"PARTITION BY column $p not in column list"))
-    val path = s"$basePath/$name"
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
-    val w = empty.write.mode("overwrite")
-      .option("compression", parquetCodec(ddl))
-    (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(path)
-    catalog(name) = GpTable(name, path, schema, partCols,
-      ddl.distributionCols, defaults = defaults, checks = checks)
-    refreshView(spark, catalog(name))
+    createEmpty(spark, GpTable(name, s"$basePath/$name", schema, partCols,
+      ddl.distributionCols, parquetCodec(ddl), defaults = defaults,
+      checks = checks))
   }
 
   /** `INSERT INTO t [(cols)] SELECT ...` / `... VALUES ...` for a catalog
@@ -5729,14 +5705,10 @@ object GpSqlDialect {
 
   def executeInsertDefaults(
       spark: SparkSession, name: String): DataFrame = {
-    import org.apache.spark.sql.functions.{expr, lit}
     val t = catalog(name)
-    val row = spark.range(1).select(t.schema.map { f =>
-      t.defaults.get(f.name.toLowerCase)
-        .map(d => expr(d).cast(f.dataType).as(f.name))
-        .getOrElse(lit(null).cast(f.dataType).as(f.name))
-    }: _*)
-    appendFrame(spark, t, applyRowTriggers(name, row, "insert"))
+    // an empty column list: every column takes its DEFAULT
+    appendFrame(spark, t, applyRowTriggers(name,
+      alignFrame(t, spark.range(1).select(), Some(Nil)), "insert"))
   }
 
   def executeInsertInto(
@@ -5754,16 +5726,13 @@ object GpSqlDialect {
           insertSource(spark, t, m.group(1), colList), "insert")
           .localCheckpoint(true)
         appendFrame(spark, t, inserted)
-        reresolveDependentViews(spark, Set(name))
         return inserted.selectExpr(
           SqlLex.split(m.group(2), ','): _*)
       case _ =>
     }
     val t = catalog(name)
-    val out = appendFrame(spark, t,
+    appendFrame(spark, t,
       applyRowTriggers(name, insertSource(spark, t, rest, colList), "insert"))
-    reresolveDependentViews(spark, Set(name))
-    out
   }
 
   /** Build the aligned source frame of an INSERT: VALUES or SELECT body,
@@ -5972,10 +5941,13 @@ object GpSqlDialect {
   }
 
   /** Append a frame into a catalog table with its declared physics:
-    * positional alignment + cast to the table schema, distribution
-    * repartition, Hive-style dynamic partition append. Writable EXTERNAL
-    * tables write CSV to their LOCATION (reference: fileam.c:705
-    * external_insert emits the external format, not heap pages). */
+    * positional alignment + cast to the table schema, the write layout
+    * of [[laidOut]], Hive-style dynamic partition append with the
+    * table's codec, then [[refreshViews]]. With [[rewriteTable]] this is
+    * the only way a statement changes a catalog table's files. Writable
+    * EXTERNAL CSV tables write CSV to their LOCATION (reference:
+    * fileam.c:705 external_insert emits the external format, not heap
+    * pages). */
   private def appendFrame(
       spark: SparkSession, t: GpTable, src0: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, raise_error, when}
@@ -5990,57 +5962,7 @@ object GpSqlDialect {
         .otherwise(raise_error(
           lit(s"""new row violates domain check ($chk) of "${t.name}""""))
           .cast("boolean"))))
-    // Cluster rows for the write with a REBALANCE hint on the Hive
-    // partition columns (else the DISTRIBUTED BY columns): AQE sizes the
-    // output partitions by BYTES (advisoryPartitionSizeInBytes), so a
-    // 100-row insert commits one file and a 100 TB insert commits
-    // ~target-size files — and oversized clusters are split (skew-safe),
-    // which the previous fixed repartition(shuffle.partitions, cols ⊕
-    // salt) fan-out only approximated: it pinned the file count to the
-    // shuffle-partition constant, emitting up to `parts` near-empty
-    // files per statement at the small end and `parts`-way-capped
-    // parallelism at the large end (r9 optimization; guide §6
-    // "coalesce on write / REBALANCE before the write", §2.5 skew).
-    // Reference analogue unchanged: cdbhash.c row routing decides
-    // placement; file sizing is the AO segment-file writer's job.
-    // r10 statement-floor refinement: a LITERAL source (VALUES inserts —
-    // the trigger/loop interpreter shape) is a handful of driver-local
-    // rows; REBALANCE would only add an exchange stage per statement for
-    // AQE to re-coalesce what coalesce(1) states directly (same one
-    // output file — LocalTableScan otherwise parallelizes n rows over
-    // min(n, cores) write tasks). Data-scale sources (INSERT ... SELECT)
-    // keep the REBALANCE byte-sizing; the cutoff is catalog-scale.
-    def literalRows(
-        p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-        : Option[Int] = p match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        Some(l.data.size)
-      case pr: org.apache.spark.sql.catalyst.plans.logical.Project =>
-        literalRows(pr.child)
-      case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
-        literalRows(s.child)
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        literalRows(f.child) // trigger-skip/CHECK filters: bound still holds
-      case r: org.apache.spark.sql.catalyst.plans.logical.Range =>
-        Some(r.numElements.min(BigInt(Int.MaxValue)).toInt) // DEFAULT VALUES
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
-          if a.groupingExpressions.isEmpty =>
-        Some(1) // a global aggregate emits exactly one row at ANY scale
-      case _ => None
-    }
-    val tinyLiteral = t.partitionCols.isEmpty &&
-      literalRows(aligned.queryExecution.analyzed).exists(_ <= 10000)
-    val distributed =
-      if (tinyLiteral) aligned.coalesce(1)
-      else if (t.partitionCols.nonEmpty)
-        // hint params must be UNresolved column refs (ResolveCoalesceHints
-        // rejects pre-resolved AttributeReferences)
-        aligned.hint("rebalance",
-          t.partitionCols.map(org.apache.spark.sql.functions.col): _*)
-      else if (t.distributionCols.nonEmpty)
-        aligned.hint("rebalance",
-          t.distributionCols.map(org.apache.spark.sql.functions.col): _*)
-      else aligned
+    val distributed = laidOut(t, aligned)
     if (t.format == "csv") {
       graft.sources.ExternalTables.writeCsv(
         distributed, t.path, mode = "append")
@@ -6049,10 +5971,51 @@ object GpSqlDialect {
       // parquet (managed default) plus the writable-external PXF set
       // (json/orc) — Spark's native writers, one code path
       val w = distributed.write.mode("append")
-      (if (t.partitionCols.nonEmpty) w.partitionBy(t.partitionCols: _*) else w)
-        .format(t.format).save(t.path)
-      refreshView(spark, t)
+      val coded =
+        if (t.format == "parquet") w.option("compression", t.codec) else w
+      (if (t.partitionCols.nonEmpty) coded.partitionBy(t.partitionCols: _*)
+       else coded).format(t.format).save(t.path)
+      refreshViews(spark, t)
     }
+  }
+
+  /** `rows` laid out for a write into `t` by its policy (cdbhash.c
+    * routes the rows; sizing files is the AO segment writer's job):
+    *  - a literal source of at most 10,000 rows (VALUES, DEFAULT VALUES,
+    *    a global aggregate: the trigger/loop interpreter shape) into an
+    *    unpartitioned table goes as one task: a REBALANCE would only add
+    *    an exchange stage for AQE to re-coalesce (r10);
+    *  - else a REBALANCE hint on the Hive partition columns, else on the
+    *    DISTRIBUTED BY columns. AQE sizes its output partitions by bytes
+    *    (advisoryPartitionSizeInBytes): a 100-row write commits one file,
+    *    a 100 TB write ~target-size files, and oversized clusters split
+    *    (skew-safe). A fixed repartition(shuffle.partitions, cols) pinned
+    *    the file count to that constant at every scale (r9);
+    *  - else the rows as they come. */
+  private def laidOut(t: GpTable, rows: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical
+    def literalRows(p: logical.LogicalPlan): Option[Int] = p match {
+      case l: logical.LocalRelation => Some(l.data.size)
+      case pr: logical.Project => literalRows(pr.child)
+      case s: logical.SubqueryAlias => literalRows(s.child)
+      case f: logical.Filter =>
+        literalRows(f.child) // trigger-skip/CHECK filters: bound still holds
+      case r: logical.Range =>
+        Some(r.numElements.min(BigInt(Int.MaxValue)).toInt) // DEFAULT VALUES
+      case a: logical.Aggregate if a.groupingExpressions.isEmpty =>
+        Some(1) // a global aggregate emits exactly one row at ANY scale
+      case _ => None
+    }
+    // hint params must be UNresolved column refs (ResolveCoalesceHints
+    // rejects pre-resolved AttributeReferences)
+    def rebalance(cols: Seq[String]) =
+      rows.hint("rebalance", cols.map(org.apache.spark.sql.functions.col): _*)
+    if (t.partitionCols.isEmpty &&
+        literalRows(rows.queryExecution.analyzed).exists(_ <= 10000))
+      rows.coalesce(1)
+    else if (t.partitionCols.nonEmpty) rebalance(t.partitionCols)
+    else if (t.distributionCols.nonEmpty) rebalance(t.distributionCols)
+    else rows
   }
 
   /** Read a catalog table with its DECLARED schema — never schema
@@ -6061,7 +6024,7 @@ object GpSqlDialect {
     * them per DELETE/UPDATE). Partition columns come back last after a
     * partitioned write; restore declared order so SELECT * matches the
     * DDL. */
-  private def readTable(spark: SparkSession, t: GpTable): DataFrame =
+  private[graft] def readTable(spark: SparkSession, t: GpTable): DataFrame =
     spark.read.schema(
       StructType(t.schema.filterNot(f => t.partitionCols.contains(f.name)) ++
         t.schema.filter(f => t.partitionCols.contains(f.name))))
@@ -6074,6 +6037,28 @@ object GpSqlDialect {
     back
   }
 
+  /** The last step of every statement that changes `t`'s files: `t`'s
+    * view and the views that read `t` re-resolve against them. */
+  private def refreshViews(spark: SparkSession, t: GpTable): DataFrame = {
+    val back = refreshView(spark, t)
+    reresolveDependentViews(spark, t.name)
+    back
+  }
+
+  /** `schema` as a Parquet read returns it: every field, element and
+    * value nullable. */
+  private def readable(schema: StructType): StructType = {
+    def open(dt: DataType): DataType = dt match {
+      case s: StructType => readable(s)
+      case a: ArrayType => ArrayType(open(a.elementType), containsNull = true)
+      case m: MapType => MapType(open(m.keyType), open(m.valueType),
+        valueContainsNull = true)
+      case other => other
+    }
+    StructType(schema.map(f =>
+      f.copy(dataType = open(f.dataType), nullable = true)))
+  }
+
   /** Every copy-on-write DML statement on catalog table `t` (UPDATE,
     * DELETE, their FROM / USING forms, MERGE, ON CONFLICT DO UPDATE and
     * the INSTEAD OF and DML-loop bodies) is one [[Dml.merge]] rewrite.
@@ -6081,24 +6066,27 @@ object GpSqlDialect {
   private def mergeTable(
       spark: SparkSession, t: GpTable, source: Option[Dml.Source],
       whens: Seq[Dml.When]): Long =
-    rewriteTable(spark, t, "UPDATE, DELETE and MERGE")(
-      Dml.merge(spark, _, _, source, whens, _))
+    rewriteTable(spark, t, t, "UPDATE, DELETE and MERGE")(
+      Dml.merge(spark, _, _, source, whens))
 
-  /** Rewrites catalog table `t` in place. `kernel` gets `t`'s path, its
-    * rows read with the declared schema and its partition columns, and
-    * writes the new rows back as Parquet with that partition layout.
-    * Afterwards `t`'s view and the views that read it re-resolve. */
+  /** Replaces catalog table `t`'s files, as PG's make_new_heap /
+    * finish_heap_swap do for CLUSTER, VACUUM FULL and the ALTER TABLE
+    * rewrites (commands/cluster.c). `kernel` gets the storage of `next`,
+    * the entry the statement leaves behind, and `t`'s rows read with the
+    * declared schema, and swaps the new rows in with [[Dml.overwrite]].
+    * Then `next` is stored and [[refreshViews]] runs on it. */
   private def rewriteTable[A](
-      spark: SparkSession, t: GpTable, statement: String)(
-      kernel: (String, DataFrame, Seq[String]) => A): A = {
+      spark: SparkSession, t: GpTable, next: GpTable, statement: String)(
+      kernel: (Dml.Storage, DataFrame) => A): A = {
     // the rewrite writes Parquet back: any other format would silently
     // change under a writable external table's readers
     require(t.format == "parquet",
       s"${t.name}: $statement can only rewrite Parquet tables," +
         s" not ${t.format}")
-    val out = kernel(t.path, readTable(spark, t), t.partitionCols)
-    refreshView(spark, t)
-    reresolveDependentViews(spark, Set(t.name))
+    val out = kernel(Dml.Storage(next.path, next.partitionCols, next.codec),
+      readTable(spark, t))
+    catalog.put(next.name, next)
+    refreshViews(spark, next)
     out
   }
 
@@ -6166,9 +6154,10 @@ object GpSqlDialect {
       // CSV/TEXT via the gpfdist-style text writer, PARQUET/JSON/ORC
       // via Spark's native writers (r6: json/orc export no longer
       // rejected; fileam.c:705 external_insert emits the declared
-      // external format)
+      // external format). A PARQUET sink has no WITH clause: it keeps
+      // Spark's default codec
       catalog(name) = GpTable(name, path, schema, Seq.empty, Seq.empty,
-        format = fmt match {
+        "snappy", format = fmt match {
           case "CSV" | "TEXT" => "csv"
           case other => other.toLowerCase
         })
@@ -6185,22 +6174,16 @@ object GpSqlDialect {
     }
   }
 
-  /** CTAS with GP physics: repartition per the distribution policy, write
-    * Parquet with the mapped codec. Returns the re-read table. */
+  /** CTAS with GP physics: the rows laid out by the distribution policy
+    * as [[appendFrame]] lays them out, written as Parquet with the DDL's
+    * codec. Returns the new table's catalog entry, not yet registered. */
   def createTableAs(
-      spark: SparkSession, ddl: GpDdl, select: DataFrame,
-      path: String): DataFrame = {
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val distributed =
-      if (ddl.distributionCols.nonEmpty)
-        select.repartition(parts,
-          ddl.distributionCols.map(select.col): _*)
-      else if (ddl.randomlyDistributed) select.repartition(parts)
-      else select
-    distributed.write.mode("overwrite")
-      .option("compression", parquetCodec(ddl))
-      .parquet(path)
-    val back = spark.read.parquet(path)
-    if (ddl.replicated) back.hint("broadcast") else back
+      spark: SparkSession, name: String, ddl: GpDdl, select: DataFrame,
+      path: String): GpTable = {
+    val t = GpTable(name, path, readable(select.schema), Seq.empty,
+      ddl.distributionCols, parquetCodec(ddl))
+    laidOut(t, select).write.mode("overwrite")
+      .option("compression", t.codec).parquet(path)
+    t
   }
 }

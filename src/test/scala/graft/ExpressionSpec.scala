@@ -809,6 +809,7 @@ class ExpressionSpec extends AnyFunSuite {
     GpSqlDialect.execute(spark, "DROP TABLE IF EXISTS pd_t", base)
     GpSqlDialect.execute(spark,
       """CREATE TABLE pd_t (k bigint, v text, region int)
+        |WITH (compresstype=zlib)
         |DISTRIBUTED BY (k) PARTITION BY LIST (region)
         |  (PARTITION p0 VALUES (0), PARTITION p1 VALUES (1))""".stripMargin,
       base)
@@ -820,6 +821,10 @@ class ExpressionSpec extends AnyFunSuite {
     def partDirs() = new java.io.File(path).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("region="))
       .map(_.getName).toSet
+    // every write keeps the codec of the table's compresstype
+    def gzipOnly(sql: String) = assert(
+      graft.operators.Dml.dataFiles(spark, path).map(_.getPath.getName)
+        .forall(_.endsWith(".gz.parquet")), sql)
     assert(partDirs() == Set("region=0", "region=1"))
     // upsert rewrite keeps the directory layout
     GpSqlDialect.execute(spark,
@@ -851,13 +856,66 @@ class ExpressionSpec extends AnyFunSuite {
     ).zipWithIndex.foreach { case ((sql, delta), i) =>
       GpSqlDialect.execute(spark, sql, base)
       assert(partDirs() == Set("region=0", "region=1"), sql)
+      gzipOnly(sql)
       GpSqlDialect.execute(spark,
         s"INSERT INTO pd_t VALUES (${200 + i}, 'i', 1)", base)
+      gzipOnly(sql)
       rows += delta + 1
       assert(spark.table("pd_t").count() == rows, sql)
     }
     assert(spark.table("pd_t").filter(col("k") === 1)
       .select("v").head.getString(0) == "u")
+    // SET DISTRIBUTED and ADD COLUMN rewrite through the same path; an
+    // added column comes last in declared order, after the partition key
+    GpSqlDialect.execute(spark, "ALTER TABLE pd_t SET DISTRIBUTED BY (v)", base)
+    assert(partDirs() == Set("region=0", "region=1"))
+    gzipOnly("SET DISTRIBUTED")
+    assert(spark.table("pd_t").count() == rows)
+    GpSqlDialect.execute(spark, "ALTER TABLE pd_t ADD COLUMN z int", base)
+    assert(partDirs() == Set("region=0", "region=1"))
+    gzipOnly("ADD COLUMN")
+    assert(spark.table("pd_t").columns.toSeq == Seq("k", "v", "region", "z"))
+    assert(GpSqlDialect.catalogTable("pd_t").get.schema.fieldNames.toSeq ==
+      Seq("k", "v", "region", "z"))
+    GpSqlDialect.execute(spark,
+      "INSERT INTO pd_t VALUES (300, 'z', 0, 7)", base)
+    assert(spark.table("pd_t").filter(col("z") === 7)
+      .select("region").head.getInt(0) == 0)
+    // TRUNCATE keeps the table partitioned: the next row lands in its
+    // region= directory and is read back
+    GpSqlDialect.execute(spark, "TRUNCATE pd_t", base)
+    assert(spark.table("pd_t").count() == 0)
+    GpSqlDialect.execute(spark,
+      "INSERT INTO pd_t VALUES (400, 't', 1, 1)", base)
+    assert(partDirs() == Set("region=1"))
+    gzipOnly("TRUNCATE")
+    assert(spark.table("pd_t").count() == 1)
+  }
+
+  test("a view over a table sees each statement that writes the table") {
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_viewpub"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    def run(sql: String) = GpSqlDialect.execute(spark, sql, base)
+    val csv = new java.io.File(s"$base/in"); csv.mkdirs()
+    val w = new java.io.PrintWriter(new java.io.File(csv, "d.csv"))
+    try w.print("5,e,1\n6,f,2\n") finally w.close()
+    run("DROP TABLE IF EXISTS vp_t")
+    run("CREATE TABLE vp_t (k bigint, v text) DISTRIBUTED BY (k)")
+    run("INSERT INTO vp_t VALUES (1, 'a'), (2, 'b')")
+    // the view is created anew before each statement, so that each one
+    // alone has to re-resolve it
+    Seq("TRUNCATE vp_t" -> 0L,
+      "INSERT INTO vp_t DEFAULT VALUES" -> 1L,
+      "ALTER TABLE vp_t SET DISTRIBUTED BY (v)" -> 1L,
+      "INSERT INTO vp_t VALUES (3, 'c') ON CONFLICT (k) DO NOTHING" -> 2L,
+      "ALTER TABLE vp_t ADD COLUMN w int" -> 2L,
+      s"COPY vp_t FROM '$csv' CSV" -> 4L
+    ).foreach { case (sql, rows) =>
+      run("CREATE OR REPLACE VIEW vp_v AS SELECT * FROM vp_t")
+      run(sql)
+      assert(run("SELECT count(*) AS n FROM vp_v").head.getLong(0) == rows,
+        sql)
+    }
   }
 
   test("DELETE FROM ... USING drops rows matching another relation") {
@@ -1622,7 +1680,8 @@ class ExpressionSpec extends AnyFunSuite {
       t / g
     }
     // randomize layout first so the baseline has full-domain files
-    graft.operators.Dml.overwrite(spark, s"$base/zc",
+    graft.operators.Dml.overwrite(spark,
+      graft.operators.Dml.Storage(s"$base/zc", Nil, "snappy"),
       spark.read.parquet(s"$base/zc").repartition(8))
     val (s1, s2) = (spread("o_custkey"), spread("o_totalprice"))
     val r = GpSqlDialect.execute(spark,
@@ -2261,8 +2320,9 @@ class ExpressionSpec extends AnyFunSuite {
     assert(run("SELECT sum(n_nationkey) AS s FROM ext_out_orc")
       .head.getLong(0) ==
       spark.table("nation").agg(sum("n_nationkey")).head.getLong(0))
-    // copy-on-write DML, VACUUM and CLUSTER write Parquet, so a JSON
-    // sink refuses them rather than come back rewritten in another format
+    // copy-on-write DML and every other table rewrite write Parquet, so
+    // a JSON sink refuses them rather than come back rewritten in another
+    // format
     def files() = new java.io.File(s"$base/out_json").list().toSet
     val jsonFiles = files()
     Seq("DELETE FROM ext_out_json WHERE n_nationkey = 1",
@@ -2270,7 +2330,10 @@ class ExpressionSpec extends AnyFunSuite {
         |ON ext_out_json.n_nationkey = nation.n_nationkey
         |WHEN MATCHED THEN UPDATE SET n_name = 'x'""".stripMargin,
       "VACUUM ext_out_json",
-      "CLUSTER ext_out_json BY (n_nationkey)"
+      "CLUSTER ext_out_json BY (n_nationkey)",
+      "TRUNCATE ext_out_json",
+      "ALTER TABLE ext_out_json SET DISTRIBUTED BY (n_nationkey)",
+      "ALTER TABLE ext_out_json ADD COLUMN z int"
     ).foreach(sql => intercept[IllegalArgumentException](run(sql)))
     assert(files() == jsonFiles)
     assert(run("SELECT count(*) AS n FROM ext_out_json WHERE n_name <> 'x'")

@@ -758,8 +758,9 @@ class OperatorSpec extends AnyFunSuite {
     Cdc.enable(dir)
     // statement 1: UPDATE — one changed row, old/new pair
     def table = spark.read.parquet(dir)
-    Dml.merge(spark, dir, table, None, Seq(Dml.Matched(Some(col("id") === 2),
-      Dml.Update(Map("v" -> (col("v") * 2))))), Nil)
+    val to = Dml.Storage(dir, Nil, "snappy")
+    Dml.merge(spark, to, table, None, Seq(Dml.Matched(Some(col("id") === 2),
+      Dml.Update(Map("v" -> (col("v") * 2))))))
     val d1 = Cdc.changes(spark, dir, Seq("id")).collect()
     assert(d1.length == 1)
     assert(d1.head.getAs[String]("op") == "update")
@@ -770,16 +771,16 @@ class OperatorSpec extends AnyFunSuite {
     val src = Seq((1L, "a", 11.0), (3L, "c", 30.0), (4L, "d", 40.0))
       .toDF("id", "name", "v")
     val row = src.columns.map(c => c -> col(s"s_$c")).toMap
-    Dml.merge(spark, dir, table, Some(Dml.Source(
+    Dml.merge(spark, to, table, Some(Dml.Source(
       src.toDF(src.columns.map("s_" + _): _*), col("id") === col("s_id"))),
       Seq(Dml.Matched(None, Dml.Update(row)),
-        Dml.NotMatched(None, Dml.Insert(row))), Nil)
+        Dml.NotMatched(None, Dml.Insert(row))))
     val d2 = Cdc.changes(spark, dir, Seq("id")).orderBy("id")
       .select($"id", $"op").as[(Long, String)].collect().toSeq
     assert(d2 == Seq((1L, "update"), (4L, "insert")))
     // statement 3: DELETE — captured as op=delete with null new_row
-    Dml.merge(spark, dir, table, None,
-      Seq(Dml.Matched(Some(col("id") === 2), Dml.Delete)), Nil)
+    Dml.merge(spark, to, table, None,
+      Seq(Dml.Matched(Some(col("id") === 2), Dml.Delete)))
     val d3 = Cdc.changes(spark, dir, Seq("id")).collect()
     assert(d3.length == 1 && d3.head.getAs[String]("op") == "delete")
     assert(d3.head.getAs[Row]("new_row") == null)
@@ -1056,9 +1057,10 @@ class OperatorSpec extends AnyFunSuite {
     Seq((1L, 10L), (2L, 20L)).toDF("id", "v")
       .write.mode("overwrite").parquet(path)
     def updateFrom(src: org.apache.spark.sql.DataFrame) =
-      Dml.merge(spark, path, spark.read.parquet(path),
+      Dml.merge(spark, Dml.Storage(path, Nil, "snappy"),
+        spark.read.parquet(path),
         Some(Dml.Source(src, col("id") === col("sid"))),
-        Seq(Dml.Matched(None, Dml.Update(Map("v" -> col("sv"))))), Nil)
+        Seq(Dml.Matched(None, Dml.Update(Map("v" -> col("sv"))))))
     // 1:1 source updates normally
     updateFrom(Seq((1L, 100L)).toDF("sid", "sv"))
     val after = spark.read.parquet(path).orderBy("id")
@@ -1082,12 +1084,13 @@ class OperatorSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(path)
     // the full outer join's empty target side carries the target-count
     // metric of the multi-match check; AQE may drop both
-    val n = Dml.merge(spark, path, spark.read.parquet(path),
+    val n = Dml.merge(spark, Dml.Storage(path, Nil, "snappy"),
+      spark.read.parquet(path),
       Some(Dml.Source(Seq((1L, 100L)).toDF("sid", "sv"),
         col("id") === col("sid"))),
       Seq(Dml.Matched(None, Dml.Update(Map("v" -> col("sv")))),
         Dml.NotMatched(None,
-          Dml.Insert(Map("id" -> col("sid"), "v" -> col("sv"))))), Nil)
+          Dml.Insert(Map("id" -> col("sid"), "v" -> col("sv"))))))
     assert(n == 1)
     assert(spark.read.parquet(path).as[(Long, Long)].collect().toSeq ==
       Seq((1L, 100L)))

@@ -33,4 +33,19 @@ class QueriesSmokeSpec extends AnyFunSuite {
     val noOracle = SparkEntry.allQueries.filter(_.oracle.isEmpty).map(_.name)
     assert(noOracle.isEmpty, s"unexpected oracle-less queries: $noOracle")
   }
+
+  test("Bench prints every query's seconds in lines of at most 2 KB") {
+    val times = SparkEntry.allQueries.map(_.name).sorted.zipWithIndex
+      .map { case (q, i) => q -> (1000.0 + i / 7.0) }
+    val lines = Bench.timesLines(times)
+    assert(lines.size > 1 && lines.forall(_.getBytes("UTF-8").length <= 2048))
+    val parts = lines.map(l => "\"(\\w+)\":".r
+      .findAllMatchIn(l.substring(l.indexOf("\"queries\":") + 10))
+      .map(_.group(1)).toSeq)
+    assert(parts.flatten == times.map(_._1))
+    lines.zipWithIndex.foreach { case (l, i) =>
+      assert(l.startsWith(
+        s"""{"metric":"times","part":${i + 1},"of":${lines.size},"""), l)
+    }
+  }
 }
