@@ -1,7 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table registry over the harness parquet directory.
   *
@@ -46,19 +51,34 @@ object Tables {
     * inside query bodies, so a sweep paid thousands of such jobs (guide
     * §6: metadata work per read; measured: q_agg_filter ran 15 jobs, 11
     * of them footer reads). Caching METADATA only — the data itself is
-    * re-read from parquet by every action. */
+    * re-read from parquet by every action. The first read of a table is
+    * [[footerSchema]], on the driver, so even it runs no job. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String),
-      org.apache.spark.sql.types.StructType]()
+      StructType]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = schemaCache.computeIfAbsent((dir, name),
-      _ => spark.read.parquet(path(dir, name)).schema)
+      _ => footerSchema(spark, path(dir, name)))
     val raw = spark.read.schema(schema).parquet(path(dir, name))
     if (name == "events") normalizeEventTs(raw, schema("ts").dataType)
     else raw
+  }
+
+  /** The Spark schema of the single Parquet file at `file`, converted
+    * from its footer on the driver with the session's Parquet settings
+    * (`spark.sql.legacy.parquet.nanosAsLong` among them): the schema
+    * `spark.read.parquet(file)` infers, without the inference job. */
+  private[graft] def footerSchema(
+      spark: SparkSession, file: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(file), conf))
+    try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(reader.getFooter.getFileMetaData.getSchema)
+    finally reader.close()
   }
 
   /** Register every harness table as a temp view (idempotent, cheap —

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
 /** Graph kernels (MADlib `graph` module parity): ranking, centrality,
@@ -19,56 +20,28 @@ object Components {
     * redistributed — a node with no out-edges leaks its damped mass,
     * the common simplification.
     *
-    * Scale: the state between rounds is the contribution aggregate
-    * itself, (id, cs) for the nodes that receive mass. A node's rank is
-    * the closed form (1−d)/N + d·coalesce(cs, 0), evaluated per edge in
-    * the next round's left join and per node once at the end; round 0's
-    * ranks are the constant 1/N, so it joins nothing. A round is one
-    * broadcast join into the edge list (edges never re-shuffled, the
-    * out-degree fused in once) + one groupBy(dst) with map-side partial
-    * sums, collected once: the rows come back as a LocalRelation that
-    * the next round broadcasts ([[ferried]]), three jobs per round. The
-    * state is node-scale and held on the driver, which the broadcast
-    * into the edge join requires anyway. Returns (id, rank). */
+    * Scale: the node-scale state is held on the driver — the
+    * out-degrees, collected once, and each round's contribution sums
+    * cs. A rank is the closed form (1−d)/N + d·coalesce(cs, 0) (round
+    * 0: 1/N); the driver turns it into each source's share rank/deg,
+    * and a round is one [[sumShares]] over the single edge copy, two
+    * jobs. Returns (id, rank). */
   def pageRank(
       edgesDf: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 5, damping: Double = 0.85): DataFrame = {
-    val edgesRaw = edgesDf
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .distinct().localCheckpoint(eager = true)
-    val nodes = edgesRaw.select(col("src").as("id"))
-      .union(edgesRaw.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(eager = true)
-    val n = nodes.count().toDouble
-    // out-degree is loop-invariant: fuse it into the edge list ONCE so
-    // no round re-aggregates or re-joins it (round-over-round this was
-    // the single largest cost)
-    val edges = edgesRaw
-      .join(edgesRaw.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-      .localCheckpoint(eager = true)
-    def rank(cs: Column): Column =
-      lit((1.0 - damping) / n) + lit(damping) * coalesce(cs, lit(0.0))
-    var contribs: Option[DataFrame] = None // None: every rank is 1/N
+    val (edges, nodes, n) = graph(edgesDf, srcCol, dstCol)
+    val deg = NodeState(edges.groupBy("src")
+      .agg(count(lit(1)).cast("double")).collect())
+    var cs: Option[NodeState] = None // None: every rank is 1/N
     for (_ <- 0 until iterations) {
-      val c = contribs match {
-        case None =>
-          edges.select(col("dst").as("id"),
-            (lit(1.0) / lit(n) / col("deg")).as("c"))
-        case Some(cs) =>
-          edges.join(broadcast(cs), edges("src") === cs("id"), "left")
-            .select(col("dst").as("id"),
-              (rank(col("cs")) / col("deg")).as("c"))
-      }
-      val agg = c.groupBy("id").agg(sum(col("c")).as("cs"))
-      contribs = Some(ferried(agg, agg.collect()))
+      val share = deg.map((src, d) => cs.fold(1.0 / n / d)(s =>
+        ((1.0 - damping) / n + damping * s.get(src).getOrElse(0.0)) / d))
+      cs = Some(sumShares(edges, "src", "dst", share))
     }
-    contribs match {
-      case None => nodes.select(col("id"), (lit(1.0) / lit(n)).as("rank"))
-      case Some(cs) =>
-        nodes.join(broadcast(cs), Seq("id"), "left")
-          .select(col("id"), rank(col("cs")).as("rank"))
-    }
+    nodes.select(col("id"), cs.fold(lit(1.0) / lit(n))(s =>
+      lit((1.0 - damping) / n) +
+        lit(damping) * coalesce(s.lookup(nodes), lit(0.0)))
+      .as("rank"))
   }
 
   /** HITS hubs-and-authorities (Kleinberg 1999; MADlib graph `hits`
@@ -77,70 +50,96 @@ object Components {
     * round like MADlib. Returns (id, hub, auth) for every node —
     * nodes with no in-edges carry authority 0, no out-edges hub 0.
     *
-    * Scale: the [[pageRank]] dataflow. A half-round's state is its raw
-    * sums, (id, c) for the nodes that receive mass (a missing node
-    * scores 0), plus the vector's L2 norm; the next half-round
-    * broadcasts it into the edge join and normalizes per edge
-    * (edges never re-shuffled), and the only exchange is the
-    * dst-/src-keyed sum with map-side partials. Every hub starts at 1.0,
-    * so round 0's authority sums are the in-degrees and join nothing.
-    * Each half-round collects its rows once: they come back as a
-    * LocalRelation ([[ferried]]) and give the norm on the driver, summed
-    * in collect()'s fixed partition order — three jobs per half-round.
-    * The state is node-scale and held on the driver, which the
-    * broadcast into the edge join requires anyway. */
+    * Scale: the [[pageRank]] dataflow. A half-round's state is the
+    * collected raw sums over their L2 norm, which the driver sums in id
+    * order (a missing node scores 0); the next half-round is one
+    * [[sumShares]], two jobs. Every hub starts at 1.0, so round 0's
+    * authority sums are the in-degrees. */
   def hits(
       edgesDf: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 3): DataFrame = {
+    val (edges, nodes, _) = graph(edgesDf, srcCol, dstCol)
+    def unit(raw: NodeState): NodeState = {
+      val norm = math.sqrt(raw.values.foldLeft(0.0)((a, c) => a + c * c))
+      raw.map((_, c) => c / norm)
+    }
+    var hub: Option[NodeState] = None // None: every hub is 1.0
+    var auth: Option[NodeState] = None // None: every authority is 0.0
+    for (_ <- 0 until iterations) {
+      val a = unit(hub match {
+        case None => NodeState(edges.groupBy("dst")
+          .agg(count(lit(1)).cast("double")).collect())
+        case Some(h) => sumShares(edges, "src", "dst", h)
+      })
+      auth = Some(a)
+      hub = Some(unit(sumShares(edges, "dst", "src", a)))
+    }
+    def score(v: Option[NodeState], start: Double): Column =
+      v.fold(lit(start))(s => coalesce(s.lookup(nodes), lit(0.0)))
+    nodes.select(col("id"), score(hub, 1.0).as("hub"),
+      score(auth, 0.0).as("auth"))
+  }
+
+  /** The (src, dst) edge checkpoint of a pair relation, its node
+    * checkpoint (id) and the node count, observed on the node
+    * checkpoint itself (no count job). */
+  private def graph(edgesDf: DataFrame, srcCol: String,
+      dstCol: String): (DataFrame, DataFrame, Double) = {
     val edges = edgesDf
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .distinct().localCheckpoint(eager = true)
+    val n = Observation()
     val nodes = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).distinct()
+      .observe(n, count(lit(1)).as("n"))
       .localCheckpoint(eager = true)
-    final case class Scores(raw: DataFrame, norm: Double) {
-      def s: Column = col("c") / lit(norm)
-    }
-    def scores(raw: DataFrame): Scores = {
-      val rows = raw.collect()
-      val norm = math.sqrt(rows.foldLeft(0.0) { (a, r) =>
-        a + r.getDouble(1) * r.getDouble(1) })
-      Scores(ferried(raw, rows), norm)
-    }
-    // one half-round: sum the `from` scores across the edges into `to`
-    def step(v: Scores, from: String, to: String): Scores =
-      scores(edges.join(broadcast(v.raw), edges(from) === v.raw("id"))
-        .groupBy(col(to).as("id")).agg(sum(v.s).as("c")))
-    var hub: Option[Scores] = None // None: every hub is 1.0
-    var auth: Option[Scores] = None // None: every authority is 0.0
-    for (_ <- 0 until iterations) {
-      val a = hub match {
-        case None =>
-          scores(edges.groupBy(col("dst").as("id"))
-            .agg(count(lit(1)).cast("double").as("c")))
-        case Some(h) => step(h, "src", "dst")
-      }
-      auth = Some(a)
-      hub = Some(step(a, "dst", "src"))
-    }
-    def attach(df: DataFrame, v: Option[Scores], start: Double,
-        name: String): DataFrame = v match {
-      case None => df.withColumn(name, lit(start))
-      case Some(sc) =>
-        df.join(broadcast(sc.raw), Seq("id"), "left")
-          .withColumn(name, coalesce(sc.s, lit(0.0))).drop("c")
-    }
-    attach(attach(nodes, hub, 1.0, "hub"), auth, 0.0, "auth")
+    (edges, nodes, n.get("n").asInstanceOf[Long].toDouble)
   }
 
-  /** `rows` — the collected result of `df` — as a LocalRelation: the
-    * next round broadcasts the driver's copy instead of re-running or
-    * checkpointing `df` (the logregFitK/multinomFitK ferry; exact
-    * binary round-trip). */
-  private def ferried(df: DataFrame, rows: Array[Row]): DataFrame =
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      df.schema)
+  /** One round of [[pageRank]] or [[hits]]: Σ share(`from`) over the
+    * edges by `to`, map-side partial sums, collected once. `share`
+    * ships as one broadcast variable (a BroadcastExchange's transport
+    * without its collect job), destroyed once the collect returns. The
+    * edge checkpoint's partitioning is unknown under AQE, so the map
+    * stage plus the collect, two jobs, is a Catalyst round's floor. A
+    * `from` with no share adds nothing; a `to` that gains none has no
+    * row. */
+  private def sumShares(edges: DataFrame, from: String, to: String,
+      share: NodeState): NodeState = {
+    val b = edges.sparkSession.sparkContext.broadcast(share)
+    try NodeState(edges.groupBy(col(to).as("id"))
+      .agg(sum(NodeState.lookup(b)(col(from)))).collect())
+    finally b.destroy()
+  }
+
+  /** Node-scale state held on the driver: one value per node id, in
+    * primitive arrays sorted by id (16 bytes a node, looked up by
+    * binary search). */
+  private final class NodeState(ids: Array[Long],
+      val values: Array[Double]) extends Serializable {
+    def get(id: Long): Option[Double] = {
+      val i = java.util.Arrays.binarySearch(ids, id)
+      if (i < 0) None else Some(values(i))
+    }
+    def map(f: (Long, Double) => Double): NodeState =
+      new NodeState(ids, ids.indices.map(i => f(ids(i), values(i))).toArray)
+    /** `nodes`' ids looked up in a broadcast their lineage keeps. */
+    def lookup(nodes: DataFrame): Column = NodeState.lookup(
+      nodes.sparkSession.sparkContext.broadcast(this))(col("id"))
+  }
+
+  private object NodeState {
+    /** Collected (id, value) rows; a null id or value is no state. */
+    def apply(rows: Array[Row]): NodeState = {
+      val kept = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+        .sortBy(_.getLong(0))
+      new NodeState(kept.map(_.getLong(0)), kept.map(_.getDouble(1)))
+    }
+    /** The value of an id column, null where the state has none. */
+    def lookup(b: Broadcast[NodeState]): Column => Column =
+      udf((id: Long) => b.value.get(id)).withName("node_state")(_)
+  }
 
   /** Connected components over a pair relation — the canonicalization
     * step of a dedup pipeline: near-dup kernels (minhash/simhash/jaccard)

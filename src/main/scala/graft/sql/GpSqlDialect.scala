@@ -4672,13 +4672,42 @@ object GpSqlDialect {
     * dependents ([[refreshViews]]) or reads through them stay stale
     * (lazy plan re-analysis only — no data moves here). */
   private def reresolveDependentViews(
-      spark: SparkSession, table: String): Unit = {
-    val reads = s"(?i)(?<![\\w.])$table(?![\\w.])".r
-    viewDefs.foreach { case (vn, bodySql) =>
-      if (reads.findFirstIn(bodySql).isDefined)
-        executeImpl(spark, bodySql, "/tmp/never")
-          .createOrReplaceTempView(vn)
+      spark: SparkSession, table: String): Unit =
+    viewsReading(table).foreach { case (vn, bodySql) =>
+      executeImpl(spark, bodySql, "/tmp/never").createOrReplaceTempView(vn)
     }
+
+  /** (name, definition) of every registered view that reads `table`. */
+  private def viewsReading(table: String): Seq[(String, String)] = {
+    val reads = s"(?i)(?<![\\w.])$table(?![\\w.])".r
+    viewDefs.toSeq.filter { case (_, body) => reads.findFirstIn(body).isDefined }
+  }
+
+  /** Refuses to give `t` the schema of `next` while a view that reads
+    * `t` would not resolve against it — before any file moves, as PG's
+    * dependency check refuses DROP COLUMN under a view. Each dependent
+    * view resolves against an empty relation of the new schema; `t`'s
+    * own view is restored afterwards. */
+  private def requireViewsResolve(
+      spark: SparkSession, t: GpTable, next: GpTable): Unit = {
+    val views = viewsReading(t.name)
+    if (views.nonEmpty) try {
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        next.schema).createOrReplaceTempView(t.name)
+      views.foreach { case (vn, bodySql) =>
+        try executeImpl(spark, bodySql, "/tmp/never")
+        catch { case scala.util.control.NonFatal(e) =>
+          val was = t.schema.fieldNames.map(_.toLowerCase).toSeq
+          val now = next.schema.fieldNames.map(_.toLowerCase).toSeq
+          val gone = was.diff(now).mkString(", ")
+          val verb = if (now.diff(was).isEmpty) "drop" else "rename"
+          throw new IllegalStateException((
+            if (gone.isEmpty) "cannot alter type of a column used by a view"
+            else s"cannot $verb column $gone of table ${t.name} because" +
+              " other objects depend on it") + s" (view $vn)", e)
+        }
+      }
+    } finally refreshView(spark, t)
   }
 
   def executeCreateView(
@@ -6083,6 +6112,7 @@ object GpSqlDialect {
     require(t.format == "parquet",
       s"${t.name}: $statement can only rewrite Parquet tables," +
         s" not ${t.format}")
+    if (next.schema != t.schema) requireViewsResolve(spark, t, next)
     val out = kernel(Dml.Storage(next.path, next.partitionCols, next.codec),
       readTable(spark, t))
     catalog.put(next.name, next)

@@ -1881,6 +1881,38 @@ class ExpressionSpec extends AnyFunSuite {
     }
   }
 
+  test("DROP COLUMN under a dependent view is refused before any file " +
+    "moves") {
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_viewdep"
+    def run(sql: String) = GpSqlDialect.execute(spark, sql, base)
+    run("DROP VIEW IF EXISTS vd_v")
+    run("DROP TABLE IF EXISTS vd_t")
+    run("CREATE TABLE vd_t (k int, c int) DISTRIBUTED BY (k)")
+    run("INSERT INTO vd_t VALUES (1, 10), (2, 20)")
+    run("CREATE VIEW vd_v AS SELECT k, c FROM vd_t")
+    val entry = GpSqlDialect.catalogTable("vd_t").get
+    def files = new java.io.File(entry.path).list().sorted.toSeq
+    val before = files
+    val e = intercept[IllegalStateException] {
+      run("ALTER TABLE vd_t DROP COLUMN c")
+    }
+    assert(e.getMessage.startsWith("cannot drop column c of table vd_t " +
+      "because other objects depend on it"), e.getMessage)
+    assert(files == before)
+    assert(GpSqlDialect.catalogTable("vd_t").get == entry)
+    def view = run("SELECT k, c FROM vd_v ORDER BY k").collect()
+      .map(r => (r.getInt(0), r.getInt(1))).toSeq
+    assert(view == Seq((1, 10), (2, 20)))
+    // the table stays writable, and the view sees the write
+    run("INSERT INTO vd_t VALUES (3, 30)")
+    assert(view == Seq((1, 10), (2, 20), (3, 30)))
+    // a change the view survives still goes through
+    run("ALTER TABLE vd_t ADD COLUMN z int")
+    assert(view == Seq((1, 10), (2, 20), (3, 30)))
+    run("DROP VIEW vd_v")
+    run("DROP TABLE vd_t")
+  }
+
   test("SQL DELETE/UPDATE with RETURNING over catalog tables") {
     import spark.implicits._
     Tables.registerAll(spark, sf)

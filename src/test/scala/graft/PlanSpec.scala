@@ -537,6 +537,11 @@ class PlanSpec extends AnyFunSuite {
     }
     assert(ps.exists(_.contains("partial_sum")),
       s"contribution aggregate needs map-side combine:\n${ps.mkString("\n")}")
+    // the round's state ships as a broadcast variable, not a plan
+    ps.filter(_.contains("partial_sum")).foreach { p =>
+      assert(!p.contains("BroadcastExchange"),
+        s"a round must not broadcast its state through a job:\n$p")
+    }
   }
 
   test("q_ml_assoc: candidate pairs come from the txn equi-join, " +
